@@ -100,7 +100,9 @@ def cmd_stream(args) -> int:
         max_delay_ms=args.batch_max_delay,
     )
     sink = make_sink(spark, args.sink, batching=batching, max_msg_size=args.max_ipc)
-    tracker = LatencyTracker()
+    # the tracker turns on the staged path (a materialization barrier
+    # per stage); without --latency the micro-batch stays fused
+    tracker = LatencyTracker() if args.latency else None
     t0 = time.time()
     query, metrics = run_stream_convert(
         raw,
@@ -488,15 +490,13 @@ def cmd_sessionize(args) -> int:
 
 
 def cmd_bench_convert(args) -> int:
-    """B2 (bench.cpp:83-227): pre-generate -> timed convert -> rates."""
+    """B2 (bench.cpp:83-227): pre-generate -> timed convert -> rates.
+
+    Times ``operators.convert(..., serialize=True)`` end to end;
+    ``--partitions`` sets only the input partitioning."""
     from pyspark.sql import functions as F
 
-    from bolson_spark.operators import (
-        add_seq,
-        parse_json,
-        parse_json_arrow,
-        serialize_ipc,
-    )
+    from bolson_spark.operators import convert
     from bolson_spark.session import get_spark
 
     spark = get_spark("bolson-bench-convert")
@@ -508,34 +508,25 @@ def cmd_bench_convert(args) -> int:
         [(i, d) for i, d in enumerate(docs)], ["arrival", "value"]
     ).repartition(args.partitions).cache()
     df.count()  # materialize input outside the timed region (FillBuffers)
-    parse_fn = parse_json if args.parser == "catalyst" else parse_json_arrow
     best = None
     for _ in range(args.repeats):
         t0 = time.perf_counter()
-        parsed = parse_fn(df, _schema(args.schema), "value", keep=["arrival"])
-        if args.seq_mode == "scalable":
-            # add_seq_scalable's offset pass is a second action over the
-            # parsed input; cache so parse runs once inside the timed
-            # region (still end-to-end honest: parse + cache + number).
-            from bolson_spark.operators import add_seq_scalable
-
-            parsed = parsed.cache()
-            seqd = add_seq_scalable(parsed, "arrival").drop("arrival")
-        else:
-            seqd = add_seq(parsed, "arrival").drop("arrival")
-        ser = serialize_ipc(
-            seqd.repartitionByRange(args.partitions, F.col("bolson_seq"))
-            .sortWithinPartitions("bolson_seq"),
+        ser = convert(
+            df,
+            _schema(args.schema),
+            "value",
+            "arrival",
             max_rows=args.max_rows,
             max_ipc_size=args.max_ipc,
+            serialize=True,
+            seq_mode=args.seq_mode,
+            parser=args.parser,
         )
         stats = ser.select(
             F.count(F.lit(1)).alias("n"), F.sum("ipc_bytes").alias("b")
         ).first()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
-        if args.seq_mode == "scalable":
-            parsed.unpersist()
     print(
         json.dumps(
             {
@@ -841,7 +832,10 @@ def main(argv=None) -> int:
     s.add_argument("--max-ipc", type=int, default=MAX_IPC_SIZE)
     s.add_argument("--checkpoint")
     s.add_argument("--max-files-per-trigger", type=int)
-    s.add_argument("--latency", help="latency CSV path (M2)")
+    s.add_argument(
+        "--latency",
+        help="latency CSV path (M2); stages each micro-batch to stamp it",
+    )
     s.add_argument("--metrics", help="metrics CSV path (M1)")
     s.set_defaults(fn=cmd_stream)
 
@@ -958,7 +952,10 @@ def main(argv=None) -> int:
     bc.add_argument("--num-jsons", type=int, default=1024)  # cli.cpp:59-71 default
     bc.add_argument("--seed", type=int, default=0)
     bc.add_argument("--repeats", type=int, default=1)
-    bc.add_argument("--partitions", type=int, default=8)
+    bc.add_argument(
+        "--partitions", type=int, default=8,
+        help="partitions of the generated input frame",
+    )
     bc.add_argument("--max-rows", type=int, default=MAX_ROWS_DEFAULT)
     bc.add_argument("--max-ipc", type=int, default=MAX_IPC_SIZE)
     bc.add_argument(

@@ -42,14 +42,6 @@ def words_col(col: Column) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda w: w != F.lit(""))
 
 
-def _count_occurrences(col: Column, needle: str) -> Column:
-    """Occurrences of a literal substring, via length arithmetic —
-    identical in Spark and DuckDB (no regex dialect involved)."""
-    return (
-        F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))
-    ) / len(needle)
-
-
 def quality_metrics(df: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id") -> DataFrame:
     """Per-document quality metrics + keep flag.

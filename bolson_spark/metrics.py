@@ -7,9 +7,8 @@ Popped, Published — latency.h:30-47, latency.cpp:24-56) and a stats CSV
 (metrics.cpp:26-63).
 
 Spark mapping:
-- throughput counters come from StreamingQuery progress events
-  (numInputRows, batchDuration) via a StreamingQueryListener — the
-  engine-native replacement for hand-rolled per-thread counters;
+- throughput counters are reduced on the driver in the foreachBatch
+  body (``StreamMetrics``), after each successful publish;
 - per-batch latency points are wall-clock stamps taken in the
   foreachBatch body around each stage. The reference's six points
   (latency.h:30-47) map to: Receive = micro-batch handed to
@@ -127,32 +126,3 @@ def save_metrics_csv(path: str, metrics, elapsed_sec: float) -> None:
             ]
         )
 
-
-class ProgressListener:
-    """Per-batch progress collector (M1) — a POLLING collector, not a
-    ``StreamingQueryListener`` (it subclasses nothing and cannot be
-    passed to ``spark.streams.addListener``): call :meth:`record` in
-    the driver's drive loop. Polling can observe the same
-    ``lastProgress`` more than once while a slow batch runs, so
-    :meth:`record` dedups on batchId — appending duplicates would
-    inflate every throughput/row total derived from ``progress``."""
-
-    def __init__(self) -> None:
-        self.progress: list[dict] = []
-
-    def record(self, query) -> None:
-        p = query.lastProgress
-        if not p:
-            return
-        if self.progress and self.progress[-1]["batchId"] == p.get(
-            "batchId"
-        ):
-            return
-        self.progress.append(
-            {
-                "batchId": p.get("batchId"),
-                "numInputRows": p.get("numInputRows"),
-                "inputRowsPerSecond": p.get("inputRowsPerSecond"),
-                "durationMs": p.get("durationMs"),
-            }
-        )

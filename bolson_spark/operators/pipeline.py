@@ -33,6 +33,11 @@ def convert(
 ) -> DataFrame:
     """Raw JSON rows -> parsed + sequenced + rebatched [+ serialized].
 
+    The output rows (and each IPC payload) are ``bolson_seq`` followed
+    by the schema fields — the reference's layout (parse/arrow.cpp:155)
+    and the stream's. ``order_by`` only orders the seq; it is dropped
+    after numbering. Rows are laid out by ``rebatch``'s seq blocks.
+
     seq_mode: "exact" (single global window — parity with the
     reference's one-TCP-stream total order) or "scalable" (range
     partition + partition-local numbering + driver offset map; same
@@ -57,7 +62,7 @@ def convert(
     seq_fn = add_seq if seq_mode == "exact" else add_seq_scalable
     parse_fn = parse_json if parser == "catalyst" else parse_json_arrow
     parsed = parse_fn(df, schema, json_col, strict=strict, keep=[order_by])
-    seqd = seq_fn(parsed, order_by)
+    seqd = seq_fn(parsed, order_by).drop(order_by)
     batched = rebatch(seqd, max_rows=max_rows)
     if serialize:
         return serialize_ipc(batched, max_rows=max_rows, max_ipc_size=max_ipc_size)

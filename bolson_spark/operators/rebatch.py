@@ -6,13 +6,23 @@ chunks of at most ``max_rows`` rows; each slice's sequence range is the
 contiguous sub-range it covers; slices partition the input range in
 order. Default max_rows = 1024 (cli.cpp:37-39).
 
-Spark-first mapping: with contiguous 0-based ``bolson_seq``, the slice
-assignment is pure arithmetic — ``batch_id = floor((seq - base) /
-max_rows)`` — which Catalyst evaluates inside whole-stage codegen with
-no shuffle at all. The *physical* zero-copy slicing happens at
-serialization time (serialize.py) on Arrow batches; this module supplies
-the logical grouping and the per-slice seq-range stats that the
-reference's Resizer recomputes (resizer.cpp:27-42).
+Spark-first mapping: with contiguous ``bolson_seq`` starting at
+``base``, every layout decision is pure arithmetic on the seq column.
+
+- ``add_batch_id``: the logical output batch, ``floor((seq - base) /
+  max_rows)`` — evaluated inside whole-stage codegen, no shuffle.
+- ``rebatch``: the physical layout, the one seq-block layout that the
+  batch ``convert`` and the stream micro-batch share. Rows move in
+  blocks of ``4 * max_rows`` consecutive seqs, ``block = floor((seq -
+  base) / (4 * max_rows))``, hash-partitioned on the block and sorted
+  by seq within each partition. The block boundaries are known from the
+  arithmetic, so unlike range partitioning there is no range-sampling
+  job. Hash collisions can put several non-adjacent blocks in one
+  partition; ``serialize_ipc`` slices within contiguous seq runs, so
+  every message still covers a contiguous seq range. The physical
+  zero-copy slicing happens there, on Arrow batches.
+- ``batch_stats``: the per-slice seq-range stats that the reference's
+  Resizer recomputes (resizer.cpp:27-42).
 """
 
 from __future__ import annotations
@@ -41,15 +51,30 @@ def rebatch(
     max_rows: int = MAX_ROWS_DEFAULT,
     seq_col: str = SEQ_COL,
     base: int = 0,
+    rows: int | None = None,
 ) -> DataFrame:
-    """Physically co-locate and order rows of each output batch.
+    """Co-locate contiguous seq blocks and order rows by seq.
 
-    ``repartitionByRange`` on the seq column keeps batches contiguous in
-    partitions (ranges of seq map to ranges of batch_id), and the
-    intra-partition sort makes downstream Arrow slicing deterministic.
+    One hash exchange on the block id (module docstring), then a
+    per-partition sort on ``seq_col``; the output has exactly the input
+    columns. ``rows`` is the row count when the caller already knows it
+    (the stream's per-batch stats job): the partition count is then one
+    per block, ``max(1, rows // (4 * max_rows))``. Without it the
+    count is ``defaultParallelism``.
     """
-    out = add_batch_id(df, max_rows, seq_col, base)
-    return out.repartitionByRange(F.col(seq_col)).sortWithinPartitions(seq_col)
+    block_rows = 4 * max_rows
+    n_parts = (
+        max(1, rows // block_rows)
+        if rows is not None
+        else df.sparkSession.sparkContext.defaultParallelism
+    )
+    block = F.floor((F.col(seq_col) - F.lit(base)) / block_rows)
+    return (
+        df.withColumn("_block", block)
+        .repartition(n_parts, F.col("_block"))
+        .sortWithinPartitions(seq_col)
+        .drop("_block")
+    )
 
 
 def batch_stats(

@@ -14,7 +14,7 @@ Two implementations:
   stream.cpp:70), but NOT the 100 TB path.
 - ``add_seq_scalable`` — the scale path: explicit range buckets +
   partition-offset numbering. Bucket boundaries are computed ONCE on
-  the driver (approx quantiles over the key column only — the upstream
+  the driver (one min/max over the key column only — the upstream
   plan is column-pruned, so e.g. a JSON parse feeding the pipeline does
   NOT run for this pass) and frozen as literals; every subsequent pass
   derives the bucket id from the same literal expression, so all passes
@@ -22,7 +22,7 @@ Two implementations:
   [driver-side, O(buckets)] + intra-bucket row_number. The expensive
   full-width pass runs exactly once.
 
-  Why not ``repartitionByRange`` + ``spark_partition_id``: range
+  Why not range partitioning + ``spark_partition_id``: range
   boundaries come from runtime reservoir sampling whose seed involves
   the RDD id, so two ACTIONS over the same plan can partition rows
   differently — a counts pass and a numbering pass may disagree and
@@ -71,7 +71,6 @@ def add_seq_scalable(
     name: str = SEQ_COL,
     start: int = 0,
     num_buckets: int | None = None,
-    bounds_mode: str = "minmax",
 ) -> DataFrame:
     """Contiguous sequence numbers without a global sort.
 
@@ -82,14 +81,10 @@ def add_seq_scalable(
        JSON parse does not execute here). Boundary placement only
        affects balance, never correctness: the per-key seq assignment
        is identical for ANY boundaries because ties share a bucket and
-       bases come from exact counts. Two modes:
-
-       - ``"minmax"`` (default): equal-width buckets from one min/max
-         aggregate — the cheapest correct pass; right for the
-         near-uniform arrival keys (offsets, timestamps) seq is
-         normally driven by.
-       - ``"quantile"``: approx-quantile boundaries — a heavier pass
-         that balances buckets under heavy key skew.
+       bases come from exact counts. The buckets are equal-width, from
+       one min/max aggregate — the cheapest correct pass, and right for
+       the near-uniform arrival keys (offsets, timestamps) seq is
+       normally driven by.
 
     2. exact per-bucket counts (key-only scan) -> exclusive prefix
        sums on the driver, O(buckets) data.
@@ -128,32 +123,16 @@ def add_seq_scalable(
         kexpr = F.datediff(F.col(key), F.lit("1970-01-01"))
     else:
         return add_seq(df, order_by, name, start)
-    if bounds_mode not in ("minmax", "quantile"):
-        raise ValueError(f"unknown bounds_mode {bounds_mode!r}")
     sc = df.sparkSession.sparkContext
     n_buckets = num_buckets or sc.defaultParallelism
     # Pass 1: frozen literal boundaries (balance only).
-    if bounds_mode == "minmax":
-        mm = df.agg(
-            F.min(kexpr).alias("lo"), F.max(kexpr).alias("hi")
-        ).first()
-        lo, hi = mm["lo"], mm["hi"]
-        if lo is None or hi is None or hi <= lo:
-            bounds: list[float] = []
-        else:
-            width = (float(hi) - float(lo)) / n_buckets
-            bounds = sorted(
-                {float(lo) + i * width for i in range(1, n_buckets)}
-            )
+    mm = df.agg(F.min(kexpr).alias("lo"), F.max(kexpr).alias("hi")).first()
+    lo, hi = mm["lo"], mm["hi"]
+    if lo is None or hi is None or hi <= lo:
+        bounds: list[float] = []
     else:
-        probs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = sorted(
-            set(
-                df.select(kexpr.alias("_knum")).stat.approxQuantile(
-                    "_knum", probs, 0.001
-                )
-            )
-        )
+        width = (float(hi) - float(lo)) / n_buckets
+        bounds = sorted({float(lo) + i * width for i in range(1, n_buckets)})
     pid_expr = F.lit(0)
     for b in bounds:
         pid_expr = pid_expr + (kexpr > F.lit(b)).cast("int")

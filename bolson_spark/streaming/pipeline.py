@@ -11,8 +11,8 @@ Spark mapping:
 - convert: the same batch operators applied inside ``foreachBatch`` —
   per micro-batch parse (strict), arrival-order seq with a
   driver-maintained base offset (replay-stable: a replayed batch
-  resolves to its original base and renumbers identically), rebatch,
-  IPC-serialize;
+  resolves to its original base and renumbers identically), the
+  shared ``rebatch`` seq-block layout, IPC-serialize;
 - sink: IpcFileSink (schema handshake on start, append per batch);
 - drain: ``trigger(availableNow=True)`` + ``awaitTermination`` ==
   "process everything the source has, then stop" — the
@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT
 from bolson_spark.operators.parse import parse_json, parse_json_arrow
+from bolson_spark.operators.rebatch import rebatch
 from bolson_spark.operators.seq import add_seq, add_seq_scalable
 from bolson_spark.operators.serialize import serialize_ipc
 from bolson_spark.schemas import spark_to_arrow_schema
@@ -225,7 +226,6 @@ def run_stream_convert(
     once at start (K2).
     """
     # bolson_seq is prepended at field index 0 (parse/arrow.cpp:155)
-    out_fields = ["bolson_seq"] + [f.name for f in schema.fields]
     arrow_schema = spark_to_arrow_schema(
         T.StructType(
             [T.StructField("bolson_seq", T.LongType(), False)] + schema.fields
@@ -393,19 +393,6 @@ def run_stream_convert(
             with_order = parsed.withColumn("_arrival", F.monotonically_increasing_id())
             seq_impl = add_seq if n < SEQ_SCALABLE_ROWS else add_seq_scalable
             seqd = seq_impl(with_order, "_arrival", start=base).drop("_arrival")
-            # Distribute contiguous seq blocks arithmetically: block =
-            # floor((seq-base)/block_rows) with block_rows a multiple of
-            # max_rows. Unlike repartitionByRange this needs NO
-            # per-batch range-sampling job — the boundaries are known
-            # because seqs are [base, base+n). Hash collisions CAN put
-            # several blocks in one partition; serialize_ipc slices
-            # within contiguous seq runs (operators/serialize.py), so
-            # every published message still covers a contiguous range.
-            block_rows = max_rows * 4
-            n_parts = max(1, n // block_rows)
-            block = F.floor(
-                (F.col("bolson_seq") - F.lit(base)) / block_rows
-            )
             # When latency tracking is on, materialize each stage so the
             # six reference time points (latency.h:30-47) are observable;
             # otherwise keep parse/resize/serialize fused in one job
@@ -413,12 +400,7 @@ def run_stream_convert(
             if staged:
                 parsed.count()
                 parsed_ts = _time.time()
-            ordered = (
-                seqd.select(*out_fields, block.alias("_block"))
-                .repartition(n_parts, F.col("_block"))
-                .sortWithinPartitions("bolson_seq")
-                .drop("_block")
-            )
+            ordered = rebatch(seqd, max_rows=max_rows, base=base, rows=n)
             if staged:
                 ordered = ordered.cache()
                 ordered.count()

@@ -551,3 +551,79 @@ def test_cli_monitor_compact_failure_keeps_report(spark, tmp_path, capsys):
     assert rep["distinct_tokens_est"]  # the drain's report survived
     assert "error" in rep["compaction"]
     assert "layout version" in rep["compaction"]["error"]
+
+
+def _stream_args(tmp_path, docs_per_file: int, n_files: int) -> list[str]:
+    src = tmp_path / "src"
+    src.mkdir()
+    for f in range(n_files):
+        (src / f"{f}.jsonl").write_text(
+            "".join(
+                json.dumps({"voltage": [f, i]}) + "\n"
+                for i in range(docs_per_file)
+            )
+        )
+    return [
+        "stream",
+        "--in-dir", str(src),
+        "--sink", str(tmp_path / "topic"),
+        "--max-files-per-trigger", "1",
+        "--max-rows", "64",
+    ]
+
+
+def _published_seqs(spark, topic) -> list[int]:
+    from bolson_spark.operators import deserialize_ipc
+    from bolson_spark.streaming.sink import IpcFileSink
+
+    out = deserialize_ipc(
+        IpcFileSink(str(topic)).read(spark), "bolson_seq bigint, voltage array<bigint>"
+    )
+    return sorted(r.bolson_seq for r in out.collect())
+
+
+def test_cli_stream_fused_without_latency(spark, tmp_path, capsys, monkeypatch):
+    """`stream` without --latency runs the fused micro-batch (no latency
+    tracker, so no per-stage barriers), publishes every doc with
+    contiguous seqs, and writes no latency CSV."""
+    import bolson_spark.streaming as streaming
+
+    seen = []
+    real = streaming.run_stream_convert
+
+    def spy(*a, **kw):
+        seen.append(kw.get("latency"))
+        return real(*a, **kw)
+
+    monkeypatch.setattr(streaming, "run_stream_convert", spy)
+    assert main(_stream_args(tmp_path, 150, 2)) == 0
+    assert seen == [None]
+    assert _out_line(capsys)["num_jsons"] == 300
+    assert _published_seqs(spark, tmp_path / "topic") == list(range(300))
+    assert not list(tmp_path.rglob("*.csv"))
+
+
+def test_cli_stream_latency_csv(spark, tmp_path, capsys):
+    """`stream --latency` runs the staged path and writes one CSV row
+    per micro-batch, each covering that batch's seq range."""
+    import csv
+
+    lat = tmp_path / "latency.csv"
+    args = _stream_args(tmp_path, 150, 3) + ["--latency", str(lat)]
+    assert main(args) == 0
+    assert _out_line(capsys)["num_jsons"] == 450
+    assert _published_seqs(spark, tmp_path / "topic") == list(range(450))
+    with open(lat) as f:
+        rows = list(csv.DictReader(f))
+    assert sorted((int(r["First"]), int(r["Last"])) for r in rows) == [
+        (0, 149), (150, 299), (300, 449)
+    ]
+
+
+def test_cli_bench_convert_smoke(spark, capsys):
+    """`bench convert` times convert(..., serialize=True) and reports
+    at least ceil(num_jsons / max_rows) messages."""
+    assert main(["bench", "convert", "--num-jsons", "2000"]) == 0
+    out = _out_line(capsys)
+    assert out["num_jsons"] == 2000
+    assert out["num_ipc"] >= 2 and out["ipc_mb"] > 0 and out["sec"] > 0

@@ -263,6 +263,58 @@ def test_rebatch_invariants(spark):
     assert sum(r.rows for r in stats) == n
 
 
+@pytest.mark.parametrize("seq_mode", ["exact", "scalable"])
+@pytest.mark.parametrize("parser", ["catalyst", "arrow"])
+def test_convert_serialize_layout_and_content(spark, parser, seq_mode):
+    """convert(..., serialize=True): the payload is bolson_seq plus the
+    schema fields; every message covers a contiguous seq run of at most
+    max_rows; the runs tile 0..n-1; the rows equal a from_json parse."""
+    import pyarrow as pa
+
+    from bolson_spark.operators import convert
+
+    n, max_rows = 3000, 256
+    rng = random.Random(5)
+    docs = [
+        json.dumps({"voltage": [rng.randint(0, 9999) for _ in range(i % 4)]})
+        for i in range(n)
+    ]
+    raw = spark.createDataFrame(
+        list(enumerate(docs)), "arrival bigint, value string"
+    ).repartition(3)
+    out = convert(
+        raw, BATTERY_SPARK, "value", "arrival", max_rows=max_rows,
+        serialize=True, seq_mode=seq_mode, parser=parser,
+    ).collect()
+    tables = [pa.ipc.open_stream(r.payload).read_all() for r in out]
+    assert {tuple(t.schema.names) for t in tables} == {("bolson_seq", "voltage")}
+    for r, t in zip(out, tables):
+        assert r.num_rows == t.num_rows <= max_rows
+        assert r.seq_last - r.seq_first + 1 == r.num_rows
+        assert t.column("bolson_seq").to_pylist() == list(
+            range(r.seq_first, r.seq_last + 1)
+        )
+    spans = sorted((r.seq_first, r.seq_last) for r in out)
+    assert spans[0][0] == 0 and spans[-1][1] == n - 1
+    for (_, hi), (lo, _) in zip(spans, spans[1:]):
+        assert lo == hi + 1
+    got = {
+        s: v
+        for t in tables
+        for s, v in zip(
+            t.column("bolson_seq").to_pylist(), t.column("voltage").to_pylist()
+        )
+    }
+    # arrival is 0..n-1, so each doc's seq equals its arrival id
+    want = {
+        r.arrival: r.p.voltage
+        for r in raw.select(
+            "arrival", F.from_json("value", BATTERY_SPARK).alias("p")
+        ).collect()
+    }
+    assert got == want
+
+
 # --- Z1 serialize ---------------------------------------------------------
 
 
@@ -390,27 +442,6 @@ def test_parse_json_quarantine_routes_instead_of_failing(spark):
     assert out[3].k is None and out[3].raw == '{"k": 1, "intruder": 2}'
     assert out[4].quarantine_reason == "malformed"
     assert out[5].quarantine_reason == "malformed"
-
-
-def test_seq_scalable_bounds_modes_identical(spark):
-    """Bucket boundary placement (equal-width minmax vs approx
-    quantiles) must not change the seq assignment — boundaries affect
-    balance only; bases come from exact counts either way."""
-    from bolson_spark.operators.seq import add_seq_scalable
-
-    df = spark.createDataFrame(
-        [(k,) for k in [5, 5, 5, 17, 17, 2, 40, 40, 40, 40, 1]], ["k"]
-    ).repartition(3)
-    a = sorted(
-        (r.bolson_seq, r.k)
-        for r in add_seq_scalable(df, "k", bounds_mode="minmax").collect()
-    )
-    b = sorted(
-        (r.bolson_seq, r.k)
-        for r in add_seq_scalable(df, "k", bounds_mode="quantile").collect()
-    )
-    assert a == b
-    assert [s for s, _ in a] == list(range(11))
 
 
 def test_add_seq_scalable_two_key_tiebreak(spark):

@@ -4,9 +4,11 @@ TakeOrdered (not a global sort), shuffle-free rebatch arithmetic."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
-from bolson_spark.operators.rebatch import add_batch_id
+from bolson_spark.operators.rebatch import add_batch_id, rebatch
 from bolson_spark.plans import assert_pushdown, formatted_plan, plan_has
 from bolson_spark.queries import QUERIES
 
@@ -42,6 +44,18 @@ def test_topk_is_take_ordered_not_global_sort(spark):
 def test_rebatch_is_shuffle_free(spark):
     df = add_batch_id(spark.range(10_000).withColumnRenamed("id", "bolson_seq"))
     assert "Exchange" not in formatted_plan(df)
+
+
+def test_rebatch_hashes_seq_blocks(spark):
+    """rebatch lays rows out by seq-block arithmetic: one hash exchange
+    on the block id, one partition per block when the row count is
+    known, and no range-sampling exchange."""
+    seqd = spark.range(10_000).withColumnRenamed("id", "bolson_seq")
+    plan = formatted_plan(rebatch(seqd, max_rows=1000, rows=10_000))
+    assert plan.count("Arguments: hashpartitioning") == 1, plan
+    assert re.search(r"hashpartitioning\(_block#\d+L, 2\)", plan), plan
+    assert "rangepartitioning" not in plan, plan
+    assert rebatch(seqd).columns == ["bolson_seq"]
 
 
 def test_semi_anti_joins_compile_to_joins(spark):
