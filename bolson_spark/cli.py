@@ -110,7 +110,6 @@ def cmd_stream(args) -> int:
         sink,
         max_rows=args.max_rows,
         max_ipc_size=args.max_ipc,
-        parser=args.parser,
         checkpoint_dir=args.checkpoint,
         available_now=available_now,
         latency=tracker,
@@ -423,8 +422,6 @@ def cmd_sessionize(args) -> int:
     us epoch-micros, value): sessions are emitted exactly once, when
     the event-time watermark passes session end + gap — the runnable
     product shape of streaming/stateful.py's tested path."""
-    from pyspark.sql import functions as F
-
     from bolson_spark.session import get_spark
     from bolson_spark.streaming import sessionize_stream
 
@@ -441,31 +438,18 @@ def cmd_sessionize(args) -> int:
         "user_id", "timestamp_micros(us) AS ts", "value"
     )
     t0 = time.time()
-    # Idempotent sink (same discipline as run_stream_ingest): writes are
-    # keyed by (run, batch) partitions with dynamic partition overwrite,
-    # so a micro-batch replayed from the checkpoint after a crash
-    # OVERWRITES its own partition instead of double-appending sessions;
-    # the run key keeps a fresh-checkpoint restart (batch_id resets to 0)
-    # from clobbering a previous run's output. Run id semantics (minted
-    # once per checkpoint lineage) live in run_id_for_checkpoint.
-    from bolson_spark.streaming.util import run_id_for_checkpoint
+    # Idempotent sink (same discipline as run_stream_ingest): a
+    # micro-batch replayed after a crash overwrites its own (run, batch)
+    # partition instead of double-appending sessions.
+    from bolson_spark.streaming.util import run_id_for_checkpoint, write_run_batch
 
     run_id = run_id_for_checkpoint(args.checkpoint, "bolson_session_run")
-
-    def _write_batch(bdf, batch_id: int) -> None:
-        (
-            bdf.withColumn("run", F.lit(run_id))
-            .withColumn("batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("run", "batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(args.out_dir)
-        )
-
     query = (
         sessionize_stream(stream, watermark=args.watermark)
         .writeStream.outputMode("append")
-        .foreachBatch(_write_batch)
+        .foreachBatch(
+            lambda bdf, bid: write_run_batch(bdf, args.out_dir, run_id, bid)
+        )
         .option("checkpointLocation", args.checkpoint)
         .start()
     )
@@ -492,11 +476,13 @@ def cmd_sessionize(args) -> int:
 def cmd_bench_convert(args) -> int:
     """B2 (bench.cpp:83-227): pre-generate -> timed convert -> rates.
 
-    Times ``operators.convert(..., serialize=True)`` end to end;
-    ``--partitions`` sets only the input partitioning."""
+    Times ``operators.convert(..., serialize=True)`` end to end at
+    ``rows=--num-jsons`` and reports the routes ``convert_routes`` chose
+    for that count; ``--partitions`` sets only the input partitioning."""
     from pyspark.sql import functions as F
 
     from bolson_spark.operators import convert
+    from bolson_spark.operators.pipeline import convert_routes
     from bolson_spark.session import get_spark
 
     spark = get_spark("bolson-bench-convert")
@@ -519,18 +505,20 @@ def cmd_bench_convert(args) -> int:
             max_rows=args.max_rows,
             max_ipc_size=args.max_ipc,
             serialize=True,
-            seq_mode=args.seq_mode,
-            parser=args.parser,
+            rows=args.num_jsons,
         )
         stats = ser.select(
             F.count(F.lit(1)).alias("n"), F.sum("ipc_bytes").alias("b")
         ).first()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
+    parse_fn, seq_fn = convert_routes(args.num_jsons)
     print(
         json.dumps(
             {
                 "num_jsons": args.num_jsons,
+                "parse": parse_fn.__name__,
+                "seq": seq_fn.__name__,
                 "json_mb": round(json_bytes / 1e6, 3),
                 "num_ipc": stats["n"],
                 "ipc_mb": round((stats["b"] or 0) / 1e6, 3),
@@ -633,7 +621,6 @@ def cmd_bench_stream(args) -> int:
             seed=args.seed,
             max_rows=args.max_rows,
             bad_frac=getattr(args, "bad_frac", 0.0) or 0.0,
-            parser=getattr(args, "parser", "catalyst"),
         )
     except ValueError as e:  # bad CLI argument -> exit code, not trace
         raise SystemExit(str(e))
@@ -650,7 +637,6 @@ def stream_latency_bench(
     seed: int = 0,
     max_rows: int = MAX_ROWS_DEFAULT,
     bad_frac: float = 0.0,
-    parser: str = "catalyst",
 ) -> dict:
     """Sustained-load latency percentiles over the LITERAL socket
     path: an in-process TCP server plays the reference's JSON
@@ -725,7 +711,6 @@ def stream_latency_bench(
         checkpoint_dir=f"{tmp}/ckpt",
         available_now=False,
         latency=tracker,
-        parser=parser,
         on_error="quarantine" if bad_frac else "fail",
         quarantine_dir=f"{tmp}/quarantine" if bad_frac else None,
     )
@@ -803,12 +788,6 @@ def main(argv=None) -> int:
     s.add_argument("--host", default="localhost")
     s.add_argument("--port", type=int, default=10197)  # cli.cpp:29-34 default
     s.add_argument("--schema", choices=SCHEMAS, default="battery")
-    s.add_argument(
-        "--parser",
-        choices=("catalyst", "arrow"),
-        default="catalyst",
-        help="physical parse impl per micro-batch (see bench convert)",
-    )
     s.add_argument(
         "--sink",
         required=True,
@@ -958,21 +937,6 @@ def main(argv=None) -> int:
     )
     bc.add_argument("--max-rows", type=int, default=MAX_ROWS_DEFAULT)
     bc.add_argument("--max-ipc", type=int, default=MAX_IPC_SIZE)
-    bc.add_argument(
-        "--parser",
-        choices=("catalyst", "arrow"),
-        default="arrow",
-        help="strict parse impl: catalyst = JVM from_json + key-scan "
-        "guard (two passes); arrow = Arrow C++ JSON TableReader with "
-        "built-in strictness (single pass, tested equal)",
-    )
-    bc.add_argument(
-        "--seq-mode",
-        choices=("exact", "scalable"),
-        default="scalable",
-        help="scalable = range-partitioned numbering (same result, "
-        "tested equal, no single-reducer sort)",
-    )
     bc.set_defaults(fn=cmd_bench_convert)
     bq = bsub.add_parser("queries", help="registry benchmark (bench.py)")
     bq.set_defaults(fn=lambda a: __import__("bench").main() or 0)
@@ -1004,14 +968,6 @@ def main(argv=None) -> int:
         help="corrupt this fraction of each burst's documents and run "
         "the stream in quarantine mode, so the dead-letter route gets "
         "latency percentiles too (0 = clean path, on_error='fail')",
-    )
-    bl.add_argument(
-        "--parser",
-        choices=("catalyst", "arrow"),
-        default="catalyst",
-        help="physical parse impl per micro-batch — both dual-execution "
-        "paths get sustained-load percentiles (arrow excludes "
-        "--bad-frac: no per-row corrupt-record routing there)",
     )
     bl.set_defaults(fn=cmd_bench_stream)
 

@@ -14,9 +14,16 @@ unexpected fields, so strictness is restored with a JSON-key check
 compiled to built-in expressions (``json_object_keys`` +
 ``array_except`` + ``raise_error``) — still zero Python, fully
 vectorized, and Catalyst prunes it when ``strict=False``.
+
+Both strict parsers (``parse_json``, ``parse_json_arrow``) reject the
+same documents and emit the declared schema, nullability included: the
+convert path switches parser by batch size (``convert_routes``).
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -27,6 +34,44 @@ def _unexpected_keys(col: Column, schema: T.StructType) -> Column:
     """Top-level JSON keys of `col` that are not in `schema`."""
     expected = F.array(*[F.lit(f.name) for f in schema.fields])
     return F.array_except(F.json_object_keys(col), expected)
+
+
+def _null_violation(parsed: Column, schema: T.StructType) -> Column:
+    """True where the struct `parsed` is null (a NULL, blank or
+    JSON-null document) or holds a null in a field or list element that
+    `schema` declares non-nullable. ``from_json`` parses against the
+    all-nullable twin of the schema, so it returns these as nulls where
+    Arrow's reader raises."""
+    conds = [parsed.isNull()]
+    for f in schema.fields:
+        c = parsed[f.name]
+        if not f.nullable:
+            conds.append(c.isNull())
+        if isinstance(f.dataType, T.ArrayType) and not f.dataType.containsNull:
+            conds.append(F.exists(c, lambda x: x.isNull()))
+    return reduce(operator.or_, conds)
+
+
+def _as_declared(col: Column, field: T.StructField) -> Column:
+    """`col` typed with `field`'s declared nullability. Sound only where
+    ``_null_violation`` has already rejected the nulls: the fallback
+    value is never produced, it only tells the analyzer the value
+    cannot be null. Other non-nullable types stay nullable-typed."""
+    dt = field.dataType
+    if isinstance(dt, T.ArrayType) and not dt.containsNull:
+        col = F.array_compact(col)
+    atomic = (T.StringType, T.NumericType, T.BooleanType)
+    if not field.nullable and isinstance(dt, (T.ArrayType, *atomic)):
+        zero = F.array() if isinstance(dt, T.ArrayType) else F.lit(0)
+        col = F.coalesce(col, zero.cast(dt))
+    return col.alias(field.name)
+
+
+def as_declared(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """The fields of `schema` out of `df`, retyped to the declared
+    nullability, as the strict parse emits them — for the clean rows of
+    ``parse_json_quarantine``."""
+    return df.select(*[_as_declared(F.col(f.name), f) for f in schema.fields])
 
 
 def validate_no_unexpected_fields(
@@ -133,7 +178,9 @@ def parse_json(
 
     strict=True reproduces the reference's UnexpectedFieldBehavior::Error:
     any row with an out-of-schema top-level key raises at execution time
-    via the built-in ``raise_error`` expression (no Python, no collect).
+    via the built-in ``raise_error`` expression (no Python, no collect),
+    and so does every other breach of the strict contract (module
+    docstring); the output then carries the declared nullability.
     ``keep`` lists pass-through columns to retain next to the parsed
     fields (e.g. the arrival key used for sequence numbers).
     """
@@ -152,22 +199,20 @@ def parse_json(
         )
         p = F.col("_p")
         guard = F.when(
-            # from_json's FAILFAST quirk: an empty/whitespace (or
-            # JSON-literal-null) document is not "malformed" to it —
-            # it silently yields a NULL struct instead of raising. The
-            # reference's reader errors on such documents (Arrow
-            # "Empty JSON file"), and the Arrow twin enforces the same
-            # via its batch row-count check, so the catalyst path must
-            # raise too or the two "tested equal" parsers diverge.
-            # Detected via the parse RESULT being null on a non-null
-            # input — not a trim() scan, which would re-walk every
-            # document string just to find the rare blank one.
-            p.isNull() & F.col("_src").isNotNull(),
+            # from_json's FAILFAST quirks: a NULL, empty/whitespace or
+            # JSON-literal-null document yields a NULL struct, and a
+            # null in a non-nullable field or list element passes, where
+            # the reference's reader (and the Arrow twin) raise. Found
+            # from the parse RESULT — not a trim() scan, which would
+            # re-walk every document string for the rare blank one.
+            _null_violation(p, schema),
             F.raise_error(
-                F.lit(
-                    "bolson_spark: empty/blank JSON document — the "
-                    "strict parse contract rejects documents that are "
-                    "not a JSON object"
+                F.concat(
+                    F.lit(
+                        "bolson_spark: null/empty/blank JSON document or "
+                        "null in a non-nullable field: "
+                    ),
+                    F.coalesce(F.col("_src"), F.lit("NULL")),
                 )
             ),
         ).when(
@@ -181,13 +226,13 @@ def parse_json(
                 )
             ),
         ).otherwise(p)
-        return staged.select(
-            *[c for c in (keep or [])], guard.alias("_parsed")
-        ).select(*[c for c in (keep or [])], "_parsed.*")
-    out = df.select(*keep_cols, parsed.alias("_parsed")).select(
-        *[c for c in (keep or [])], "_parsed.*"
+        return staged.select(*keep_cols, guard.alias("_parsed")).select(
+            *keep_cols,
+            *[_as_declared(F.col("_parsed")[f.name], f) for f in schema.fields],
+        )
+    return df.select(*keep_cols, parsed.alias("_parsed")).select(
+        *keep_cols, "_parsed.*"
     )
-    return out
 
 
 def parse_json_quarantine(
@@ -207,14 +252,16 @@ def parse_json_quarantine(
     Adds two columns next to the parsed fields:
 
     - ``quarantine_reason``: null for clean rows, ``'malformed'`` for
-      documents the parser rejects (invalid JSON or schema-type
-      mismatch), ``'unexpected_field'`` for valid documents carrying
+      documents the parser rejects (invalid JSON, schema-type mismatch,
+      or a null where the schema declares a non-nullable field or list
+      element), ``'unexpected_field'`` for valid documents carrying
       out-of-schema top-level keys (UnexpectedFieldBehavior::Error
       re-expressed as routing instead of raising);
     - ``raw`` — the original document for quarantined rows (null
       otherwise), so the dead-letter sink keeps the evidence.
 
-    Parsed fields are NULL on quarantined rows. Single pass, all
+    Parsed fields are NULL on quarantined rows, so they stay
+    nullable-typed; ``as_declared`` retypes the clean rows. Single pass, all
     built-in expressions (PERMISSIVE ``from_json`` with a corrupt
     record column + ``json_object_keys``), zero Python.
     """
@@ -240,6 +287,7 @@ def parse_json_quarantine(
             F.col("_parsed._corrupt_record").isNotNull(), F.lit("malformed")
         )
         .when(F.col("_extra").isNull(), F.lit("malformed"))
+        .when(_null_violation(F.col("_parsed"), schema), F.lit("malformed"))
         .when(F.size("_extra") > 0, F.lit("unexpected_field"))
         .otherwise(F.lit(None).cast("string"))
     )

@@ -4,9 +4,15 @@ This is the reference's converter thread loop (convert/converter.cpp:
 96-171: Parse -> Resize -> Serialize) as a declarative DataFrame
 composition; Spark tasks replace converter threads, Catalyst fuses the
 parse/seq/rebatch projections into one whole-stage-codegen span.
+
+The physical routes of the path — which parser, which seq — follow from
+the row count alone (``convert_routes``); ``convert()``, the stream's
+micro-batch and ``bench convert`` all take them from there.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -17,6 +23,45 @@ from bolson_spark.operators.rebatch import rebatch
 from bolson_spark.operators.seq import add_seq, add_seq_scalable
 from bolson_spark.operators.serialize import serialize_ipc
 
+# From this many rows the seq numbers through add_seq_scalable (three
+# bucket-parallel passes) instead of add_seq's single-reducer global
+# window: the two are parity-tested equal, and a 10M-row batch must not
+# serialize its numbering through one executor core.
+SEQ_SCALABLE_ROWS = 2_000_000
+
+# From this many rows the parse takes the Arrow C++ reader
+# (parse_json_arrow) instead of Catalyst's from_json: Arrow pays a
+# fixed Python-worker cost per task and wins on per-row cost. Measured
+# on the stream's micro-batch body (parse, seq, rebatch, serialize and
+# collect of one cached battery batch), local[4] on a 4-core VM, 8
+# interleaved pairs per size in alternating order, two runs at 10k, 20k
+# and 40k; median ms and pairs Arrow won:
+#
+#   rows   Catalyst     Arrow        Arrow won
+#   2k     966          1037         3/8
+#   10k    1091, 1001   1147, 928    4/8, 4/8
+#   15k    1015         1073         2/8
+#   20k    1111, 1034   986, 894     7/8, 7/8
+#   40k    1695, 1533   1448, 1382   8/8, 7/8
+ARROW_PARSE_MIN_ROWS = 20_000
+
+
+def convert_routes(
+    rows: int | None,
+) -> tuple[Callable[..., DataFrame], Callable[..., DataFrame]]:
+    """The one route policy of the convert path: the (parse, seq)
+    functions for ``rows`` documents, ``None`` when unknown (bulk, where
+    per-row cost dominates). The scalable seq scans its input three
+    times; Catalyst's parse prunes to the order key in the key-only
+    passes, while ``mapInArrow`` is opaque and would re-parse, so it
+    pairs with Catalyst. Both parsers keep one strict contract, so the
+    route never changes which documents pass or the payload."""
+    if rows is not None and rows >= SEQ_SCALABLE_ROWS:
+        return parse_json, add_seq_scalable
+    if rows is None or rows >= ARROW_PARSE_MIN_ROWS:
+        return parse_json_arrow, add_seq
+    return parse_json, add_seq
+
 
 def convert(
     df: DataFrame,
@@ -26,10 +71,8 @@ def convert(
     *,
     max_rows: int = MAX_ROWS_DEFAULT,
     max_ipc_size: int = MAX_IPC_SIZE,
-    strict: bool = True,
     serialize: bool = False,
-    seq_mode: str = "exact",
-    parser: str = "catalyst",
+    rows: int | None = None,
 ) -> DataFrame:
     """Raw JSON rows -> parsed + sequenced + rebatched [+ serialized].
 
@@ -38,30 +81,13 @@ def convert(
     and the stream's. ``order_by`` only orders the seq; it is dropped
     after numbering. Rows are laid out by ``rebatch``'s seq blocks.
 
-    seq_mode: "exact" (single global window — parity with the
-    reference's one-TCP-stream total order) or "scalable" (range
-    partition + partition-local numbering + driver offset map; same
-    result, tested equal, no single-reducer sort — the 100 TB path).
-
-    parser: "catalyst" (JVM from_json; strict=True adds a second
-    key-scan guard pass) or "arrow" (Arrow C++ JSON TableReader via
-    mapInArrow — strict validation is built into the single parse pass,
-    ~25% faster end-to-end when strict; both impls tested equal).
-
-    Composition note: mapInArrow is opaque to Catalyst, so downstream
-    passes that only need the order key (e.g. add_seq_scalable's
-    boundary/count passes) cannot column-prune an "arrow" parse and
-    re-execute it; the "catalyst" parse IS prunable and thus composes
-    better in multi-pass plans. Rule of thumb: arrow for a single
-    materialization, catalyst when the plan is consumed repeatedly.
+    The parse is strict (the reference's hard error on any bad
+    document). ``rows`` is the document count when the caller knows it;
+    ``convert_routes(rows)`` picks the parser and the seq from it. Every
+    route gives the same rows and payloads.
     """
-    if seq_mode not in ("exact", "scalable"):
-        raise ValueError(f"unknown seq_mode {seq_mode!r}")
-    if parser not in ("catalyst", "arrow"):
-        raise ValueError(f"unknown parser {parser!r}")
-    seq_fn = add_seq if seq_mode == "exact" else add_seq_scalable
-    parse_fn = parse_json if parser == "catalyst" else parse_json_arrow
-    parsed = parse_fn(df, schema, json_col, strict=strict, keep=[order_by])
+    parse_fn, seq_fn = convert_routes(rows)
+    parsed = parse_fn(df, schema, json_col, keep=[order_by])
     seqd = seq_fn(parsed, order_by).drop(order_by)
     batched = rebatch(seqd, max_rows=max_rows)
     if serialize:

@@ -148,21 +148,21 @@ def add_seq_scalable(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
+    # a base for every bucket id pid_expr can yield, empty ones too, so
+    # the lookup never misses: the coalesce only types bolson_seq
+    # non-nullable, as add_seq's is (the stream's handshake schema)
     bases: dict[int, int] = {}
     running = start
-    for pid in sorted(counts):
+    for pid in range(len(bounds) + 1):
         bases[pid] = running
-        running += counts[pid]
-    base_expr = F.element_at(
-        F.create_map(
-            *[
-                F.lit(x)
-                for pid in sorted(bases)
-                for x in (pid, bases[pid])
-            ]
+        running += counts.get(pid, 0)
+    base_expr = F.coalesce(
+        F.element_at(
+            F.create_map(*[F.lit(x) for kv in bases.items() for x in kv]),
+            F.col("_pid"),
         ),
-        F.col("_pid"),
-    ) if bases else F.lit(start)
+        F.lit(start),
+    )
     # Pass 3: the one full-width pass — shuffle on the literal bucket
     # id, then bucket-local numbering (identical pids in every pass).
     parts = df.withColumn("_pid", pid_expr).repartition(

@@ -394,12 +394,7 @@ def _near_dup_gate(
         caches.append(delta_kept)
     kept_ids = delta_kept.select("doc_id")
     pending_index_writes = [
-        (
-            df.join(kept_ids, "doc_id", "left_semi")
-            .withColumn("run", F.lit(run_id))
-            .withColumn("batch", F.lit(batch_id)),
-            out,
-        )
+        (df.join(kept_ids, "doc_id", "left_semi"), out)
         for df, out in ((d_bands, bands_dir), (d_toks, toks_dir))
     ]
     out_batch = (
@@ -454,7 +449,10 @@ def run_stream_ingest(
     # per-call uuid would self-match replayed docs against their own
     # index rows and silently drop them). A fresh checkpoint dir mints
     # a new id, so prior runs' partitions are consulted, not clobbered.
-    from bolson_spark.streaming.util import run_id_for_checkpoint
+    from bolson_spark.streaming.util import (
+        run_id_for_checkpoint,
+        write_run_batch,
+    )
 
     run_id = run_id_for_checkpoint(checkpoint_dir, "bolson_ingest_run_id")
 
@@ -569,24 +567,15 @@ def run_stream_ingest(
                 batch_id,
                 in_batch=in_batch_near_dedup,
             )
-        batch = (
-            batch.withColumn("run", F.lit(run_id))
-            .withColumn("batch", F.lit(batch_id))
-            .cache()
+        batch = batch.cache()
+        write_run_batch(
+            batch.select(id_col, text_col, "fingerprint"),
+            accepted_dir,
+            run_id,
+            batch_id,
         )
-        (
-            batch.select(id_col, text_col, "fingerprint", "run", "batch")
-            .write.mode("overwrite")
-            .partitionBy("run", "batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(accepted_dir)
-        )
-        (
-            batch.select("fingerprint", "run", "batch")
-            .write.mode("overwrite")
-            .partitionBy("run", "batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(ledger_dir)
+        write_run_batch(
+            batch.select("fingerprint"), ledger_dir, run_id, batch_id
         )
         # Index partitions land LAST (see _near_dup_gate's docstring):
         # a crash before this point leaves accepted-but-unindexed docs,
@@ -594,12 +583,7 @@ def run_stream_ingest(
         # the reverse ordering would let phantom index rows silently
         # drop never-accepted docs after a fresh-checkpoint restart.
         for df, out in index_writes:
-            (
-                df.write.mode("overwrite")
-                .partitionBy("run", "batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(out)
-            )
+            write_run_batch(df, out, run_id, batch_id)
         batch.unpersist()
         for c in gate_caches:
             c.unpersist()
@@ -660,6 +644,7 @@ def compact_ingest_state(
         commit_horizon,
         read_run_id,
         remove_batch_partition,
+        write_run_batch,
     )
 
     run_id = read_run_id(checkpoint_dir, "bolson_ingest_run_id")
@@ -684,15 +669,8 @@ def compact_ingest_state(
             .where(F.col("run") == run_id)
             .where(F.col("batch").isin(fold))
             .drop("run", "batch")
-            .withColumn("run", F.lit(run_id))
-            .withColumn("batch", F.lit(-(gen + 1)))
         )
-        (
-            merged.write.mode("overwrite")
-            .partitionBy("run", "batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_dir)
-        )
+        write_run_batch(merged, state_dir, run_id, -(gen + 1))
         for b in fold:
             remove_batch_partition(state_dir, run_id, b)
         report[sub] = {

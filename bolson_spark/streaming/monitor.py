@@ -46,6 +46,7 @@ from bolson_spark.streaming.util import (
     remove_batch_partition,
     run_id_for_checkpoint,
     run_partition_ids,
+    write_run_batch,
 )
 
 
@@ -141,15 +142,7 @@ def _write_state_batch(
     partition. repartition(1): every state frame here is bounded by
     construction (registers/cells/bins), one file per batch."""
     _stamp_state_version(state_dir)
-    (
-        state.withColumn("run", F.lit(run_id))
-        .withColumn("batch", F.lit(batch_id))
-        .repartition(1)
-        .write.mode("overwrite")
-        .partitionBy("run", "batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(state_dir)
-    )
+    write_run_batch(state.repartition(1), state_dir, run_id, batch_id)
 
 
 def write_hll_batch(

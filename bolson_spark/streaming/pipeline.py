@@ -33,18 +33,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT
-from bolson_spark.operators.parse import parse_json, parse_json_arrow
+from bolson_spark.operators.parse import as_declared, parse_json_quarantine
+from bolson_spark.operators.pipeline import convert_routes
 from bolson_spark.operators.rebatch import rebatch
-from bolson_spark.operators.seq import add_seq, add_seq_scalable
 from bolson_spark.operators.serialize import serialize_ipc
 from bolson_spark.schemas import spark_to_arrow_schema
 from bolson_spark.streaming.sink import PublishSink
-
-# Micro-batches past this row count number through add_seq_scalable
-# (3 bucket-parallel passes) instead of add_seq's single-reducer
-# global window — the two are parity-tested equal, and a 10M-row
-# batch must not serialize its numbering through one executor core.
-SEQ_SCALABLE_ROWS = 2_000_000
+from bolson_spark.streaming.util import run_id_for_checkpoint, write_run_batch
 
 
 def _read_seq_base(
@@ -192,8 +187,6 @@ def run_stream_convert(
     *,
     max_rows: int = MAX_ROWS_DEFAULT,
     max_ipc_size: int = MAX_IPC_SIZE,
-    strict: bool = True,
-    parser: str = "catalyst",
     checkpoint_dir: str | None = None,
     available_now: bool = True,
     latency=None,
@@ -202,9 +195,10 @@ def run_stream_convert(
 ):
     """Start the convert stream; returns (query, metrics).
 
-    ``parser`` selects the physical parse implementation per micro-batch
-    ("catalyst" = from_json + guard, "arrow" = single-pass Arrow C++
-    TableReader — see operators.pipeline.convert for the tradeoff).
+    Each micro-batch takes its parse and seq from
+    ``operators.pipeline.convert_routes`` at its measured row count, the
+    policy ``convert()`` uses: small batches parse with Catalyst, large
+    ones with the Arrow reader, both under one strict contract.
 
     ``on_error`` selects the failure posture: ``"fail"`` reproduces the
     reference's hard error on the first bad document
@@ -231,18 +225,8 @@ def run_stream_convert(
             [T.StructField("bolson_seq", T.LongType(), False)] + schema.fields
         )
     )
-    if parser not in ("catalyst", "arrow"):
-        raise ValueError(f"unknown parser {parser!r}")
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"unknown on_error {on_error!r}")
-    if on_error == "quarantine" and parser != "catalyst":
-        # routing is built on the catalyst PERMISSIVE corrupt-record
-        # path; silently swapping parse semantics under --parser arrow
-        # would defeat the dual-execution twins, so reject the combo
-        raise ValueError(
-            "on_error='quarantine' requires parser='catalyst' "
-            "(the Arrow reader has no per-row corrupt-record routing)"
-        )
     if on_error == "quarantine" and not quarantine_dir:
         # preserving the raw bad documents IS the point of the mode —
         # silently discarding them would be worse than failing
@@ -268,7 +252,6 @@ def run_stream_convert(
             "move them under a run=legacy/batch=0/ subdirectory before "
             "resuming (mixed layouts are unreadable as one table)"
         )
-    parse_fn = parse_json if parser == "catalyst" else parse_json_arrow
     sink.handshake(arrow_schema)
     metrics = StreamMetrics()
     # Sequence base: the reference's seq counter is process-lifetime
@@ -287,10 +270,7 @@ def run_stream_convert(
     # cannot clobber a prior run's batch-0 dead-letter evidence — nor
     # silently reuse a surviving seq-base record from a different
     # lineage (see _resolve_seq_base's lineage guard).
-    from bolson_spark.streaming.util import run_id_for_checkpoint
-
     run_id = run_id_for_checkpoint(checkpoint_dir, "bolson_run_id")
-    quarantine_run = run_id
     # (run_id, last_batch_id, base, n) — see _resolve_seq_base for the
     # replay-stable numbering rule this record enables; the record is
     # lineage-validated against the checkpoint's offsets log at start
@@ -310,7 +290,7 @@ def run_stream_convert(
         received_ts = _time.time()
         batch_df = batch_df.cache()
         routed = None
-        parsed_cached = None
+        parsed = None
         try:
             # one job for both micro-batch stats (count + input bytes)
             sizes = batch_df.select(
@@ -326,10 +306,6 @@ def run_stream_convert(
             # monotonic local id, then number globally from the base.
             nq = 0
             if on_error == "quarantine":
-                from bolson_spark.operators.parse import (
-                    parse_json_quarantine,
-                )
-
                 routed = parse_json_quarantine(
                     batch_df, schema, json_col
                 ).cache()
@@ -342,26 +318,21 @@ def run_stream_convert(
                 ).first()
                 nq, bq = bad_stats["nq"], bad_stats["bq"] or 0
                 if nq and quarantine_dir:
-                    # (run, batch)-keyed dynamic partition overwrite,
-                    # not a blind append: a foreachBatch replay rewrites
-                    # its own partition instead of duplicating rows, and
-                    # a fresh-checkpoint restart cannot clobber a prior
-                    # run's evidence
-                    (
+                    # a replay rewrites its own (run, batch) partition
+                    # instead of duplicating rows, and a fresh-checkpoint
+                    # restart cannot clobber a prior run's evidence
+                    write_run_batch(
                         bad.select(
                             "raw",
                             F.col("quarantine_reason").alias("reason"),
-                        )
-                        .withColumn("run", F.lit(quarantine_run))
-                        .withColumn("batch", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .partitionBy("run", "batch")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .parquet(quarantine_dir)
+                        ),
+                        quarantine_dir,
+                        run_id,
+                        batch_id,
                     )
-                parsed = routed.where(
-                    F.col("quarantine_reason").isNull()
-                ).select(*[f.name for f in schema.fields])
+                parsed = as_declared(
+                    routed.where(F.col("quarantine_reason").isNull()), schema
+                )
                 # keep per-doc metrics consistent: num_jsons AND
                 # json_bytes both count only the converted (clean) docs
                 n -= nq
@@ -372,27 +343,20 @@ def run_stream_convert(
                     # counting here cannot be replayed-and-recounted
                     metrics.num_quarantined += nq
                     return  # finally unpersists routed + batch_df
-            else:
-                parsed = parse_fn(batch_df, schema, json_col, strict=strict)
+            # the quarantine keeps its own parse (on_error is a semantic
+            # choice, not a route); the seq follows the clean-row count
+            parse_fn, seq_fn = convert_routes(n)
+            if routed is None:
+                parsed = parse_fn(batch_df, schema, json_col)
             # replay-stable base: a replayed batch id reuses its
             # original base (identical renumbering -> byte-identical
             # republished messages); persisted BEFORE the publish
             base = _resolve_seq_base(state["rec"], batch_id, run_id)
             staged = latency is not None
-            # The arrow parser cannot column-prune through mapInArrow,
-            # so add_seq_scalable's extra passes (min/max + per-bucket
-            # counts) would re-execute the FULL parse ~2 more times per
-            # large micro-batch — cache the parsed frame whenever the
-            # scalable path will consume it repeatedly. (The catalyst
-            # parser prunes to the key column, so its extra passes are
-            # cheap key-only scans — seq.py's docstring rationale —
-            # and staged latency runs cache for the timestamps anyway.)
-            if staged or (parser == "arrow" and n >= SEQ_SCALABLE_ROWS):
+            if staged:
                 parsed = parsed.cache()
-                parsed_cached = parsed
             with_order = parsed.withColumn("_arrival", F.monotonically_increasing_id())
-            seq_impl = add_seq if n < SEQ_SCALABLE_ROWS else add_seq_scalable
-            seqd = seq_impl(with_order, "_arrival", start=base).drop("_arrival")
+            seqd = seq_fn(with_order, "_arrival", start=base).drop("_arrival")
             # When latency tracking is on, materialize each stage so the
             # six reference time points (latency.h:30-47) are observable;
             # otherwise keep parse/resize/serialize fused in one job
@@ -452,8 +416,8 @@ def run_stream_convert(
             # must not leak a cached copy of the micro-batch per attempt
             if routed is not None:
                 routed.unpersist()
-            if parsed_cached is not None:
-                parsed_cached.unpersist()
+            if latency is not None and parsed is not None:
+                parsed.unpersist()
             batch_df.unpersist()
 
     writer = raw.writeStream.foreachBatch(process)

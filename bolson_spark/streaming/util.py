@@ -6,6 +6,9 @@ import os
 import re
 import uuid
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
 
@@ -51,6 +54,23 @@ def run_id_for_checkpoint(checkpoint_dir: str | None, filename: str) -> str:
     with open(path, "w") as f:
         f.write(run_id)
     return run_id
+
+
+def write_run_batch(df: DataFrame, path: str, run_id: str, batch_id: int) -> None:
+    """The (run, batch)-keyed idempotent write behind every writer that
+    uses ``run_id_for_checkpoint``: `df` lands as parquet under its
+    ``run=<run_id>/batch=<batch_id>`` partition by dynamic partition
+    overwrite, so a replayed micro-batch rewrites its own partition
+    instead of appending a duplicate, and a fresh checkpoint's batch 0
+    (a new run id) cannot clobber a prior run's output."""
+    (
+        df.withColumn("run", F.lit(run_id))
+        .withColumn("batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .partitionBy("run", "batch")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
 
 
 def read_run_id(checkpoint_dir: str, filename: str) -> str:

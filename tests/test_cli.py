@@ -109,45 +109,6 @@ def test_cli_bench_stream_latency_percentiles(spark, capsys):
     assert lat["end_to_end"]["p50_ms"] >= lat["parse"]["p50_ms"]
 
 
-def test_cli_bench_stream_arrow_parser(spark, capsys):
-    """`bench stream --parser arrow` drives the SECOND physical parse
-    implementation (Arrow C++ TableReader via mapInArrow) under the
-    same sustained-load protocol — both dual-execution paths get
-    latency percentiles, and the drained counts must be exact."""
-    assert (
-        main(
-            [
-                "bench",
-                "stream",
-                "--num-jsons", "300",
-                "--num-batches", "2",
-                "--parser", "arrow",
-            ]
-        )
-        == 0
-    )
-    out = _out_line(capsys)
-    assert out["num_jsons"] == 600
-    lat = out["latency"]
-    assert lat["parse"]["p50_ms"] <= lat["parse"]["p99_ms"]
-    assert lat["end_to_end"]["p50_ms"] >= lat["parse"]["p50_ms"]
-    # arrow + quarantine is an explicit refusal, not a silent
-    # parser swap (run_stream_convert's combo guard). Through the CLI
-    # front door the library's ValueError is translated to a
-    # SystemExit exit-code path (r9 ADVICE #3); the library-level
-    # ValueError itself is pinned in test_sinks/test_streaming.
-    import pytest
-
-    with pytest.raises(SystemExit, match="quarantine"):
-        main(
-            [
-                "bench", "stream", "--num-jsons", "10",
-                "--num-batches", "1", "--parser", "arrow",
-                "--bad-frac", "0.5",
-            ]
-        )
-
-
 def test_cli_bench_stream_bad_frac_quarantine_route(spark, capsys):
     """`bench stream --bad-frac` corrupts an evenly-spaced fraction of
     every burst and runs the stream in quarantine mode: the dead-letter
@@ -621,9 +582,11 @@ def test_cli_stream_latency_csv(spark, tmp_path, capsys):
 
 
 def test_cli_bench_convert_smoke(spark, capsys):
-    """`bench convert` times convert(..., serialize=True) and reports
-    at least ceil(num_jsons / max_rows) messages."""
+    """`bench convert` times convert(..., serialize=True) at
+    rows=--num-jsons, reports at least ceil(num_jsons / max_rows)
+    messages and names the routes the policy chose."""
     assert main(["bench", "convert", "--num-jsons", "2000"]) == 0
     out = _out_line(capsys)
     assert out["num_jsons"] == 2000
     assert out["num_ipc"] >= 2 and out["ipc_mb"] > 0 and out["sec"] > 0
+    assert (out["parse"], out["seq"]) == ("parse_json", "add_seq")

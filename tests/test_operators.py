@@ -8,6 +8,7 @@ import random
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bolson_spark import MAX_ROWS_DEFAULT
 from bolson_spark.operators import (
@@ -20,6 +21,11 @@ from bolson_spark.operators import (
     serialize_ipc,
     validate_no_unexpected_fields,
 )
+from bolson_spark.operators.pipeline import (
+    ARROW_PARSE_MIN_ROWS,
+    SEQ_SCALABLE_ROWS,
+    convert_routes,
+)
 from bolson_spark.schemas import (
     BATTERY_SPARK,
     EVENT_PROPS_SPARK,
@@ -29,6 +35,32 @@ from bolson_spark.schemas import (
 
 
 # --- P1 parse -------------------------------------------------------------
+
+
+def _battery_doc(rng):
+    return {"voltage": [rng.randint(0, 2047) for _ in range(rng.randint(1, 16))]}
+
+
+def _trip_doc(rng):
+    d = {}
+    for f in TRIP_SPARK.fields:
+        n = TRIP_FIXED_LIST_SIZES.get(f.name)
+        if n is not None:
+            d[f.name] = [rng.randint(1, 99) for _ in range(n)]
+        elif f.dataType.typeName() == "boolean":
+            d[f.name] = rng.random() < 0.5
+        elif f.name == "timestamp":
+            d[f.name] = "2005-09-09 11:59:06"
+        else:
+            d[f.name] = rng.randint(1, 99)
+    return d
+
+
+def _row_key(row, schema):
+    return tuple(
+        tuple(row[f.name]) if isinstance(row[f.name], list) else row[f.name]
+        for f in schema.fields
+    )
 
 
 def test_parse_battery_schema(spark):
@@ -49,22 +81,7 @@ def test_parse_battery_schema(spark):
 def test_parse_trip_schema_and_fixed_list_sizes(spark):
     """FNC04/05/07: trip types; fixed_size_list lengths enforced in test."""
     rng = random.Random(1)
-
-    def trip():
-        d = {}
-        for f in TRIP_SPARK.fields:
-            n = TRIP_FIXED_LIST_SIZES.get(f.name)
-            if n is not None:
-                d[f.name] = [rng.randint(1, 99) for _ in range(n)]
-            elif f.dataType.typeName() == "boolean":
-                d[f.name] = rng.random() < 0.5
-            elif f.name == "timestamp":
-                d[f.name] = "2005-09-09 11:59:06"
-            else:
-                d[f.name] = rng.randint(1, 99)
-        return d
-
-    docs = [trip() for _ in range(20)]
+    docs = [_trip_doc(rng) for _ in range(20)]
     df = spark.createDataFrame([(json.dumps(d),) for d in docs], ["value"])
     out = parse_json(df, TRIP_SPARK, "value")
     # timestamp stays a string (FNC05)
@@ -99,21 +116,22 @@ def test_parse_failfast_on_malformed(spark):
 def test_parse_dual_execution_equal(spark):
     """P1 dual execution: the Catalyst from_json impl and the Arrow C++
     JSON TableReader impl (parse/arrow.cpp:72-93) produce identical
-    results — the reference's CPU-vs-FPGA differential pattern
+    rows and the same declared schema, on the narrow battery and the
+    wide trip schema — the reference's CPU-vs-FPGA differential pattern
     (test/bolson/convert/test_opae_battery.cpp:73-88)."""
     rng = random.Random(7)
-    docs = [
-        {"voltage": [rng.randint(0, 2047) for _ in range(rng.randint(1, 16))]}
-        for _ in range(500)
-    ]
-    df = spark.createDataFrame(
-        [(i, json.dumps(d)) for i, d in enumerate(docs)], ["doc_id", "value"]
-    ).repartition(4)
-    a = parse_json(df, BATTERY_SPARK, "value", strict=True, keep=["doc_id"])
-    b = parse_json_arrow(df, BATTERY_SPARK, "value", strict=True, keep=["doc_id"])
-    ra = sorted((r.doc_id, tuple(r.voltage)) for r in a.collect())
-    rb = sorted((r.doc_id, tuple(r.voltage)) for r in b.collect())
-    assert ra == rb
+    for schema, make in ((BATTERY_SPARK, _battery_doc), (TRIP_SPARK, _trip_doc)):
+        docs = [make(rng) for _ in range(500)]
+        df = spark.createDataFrame(
+            [(i, json.dumps(d)) for i, d in enumerate(docs)], ["doc_id", "value"]
+        ).repartition(4)
+        a = parse_json(df, schema, "value", strict=True, keep=["doc_id"])
+        b = parse_json_arrow(df, schema, "value", strict=True, keep=["doc_id"])
+        assert a.schema == b.schema
+        assert [f for f in a.schema.fields if f.name != "doc_id"] == schema.fields
+        ra = sorted((r.doc_id, _row_key(r, schema)) for r in a.collect())
+        rb = sorted((r.doc_id, _row_key(r, schema)) for r in b.collect())
+        assert ra == rb
 
 
 def test_parse_arrow_strict_and_malformed(spark):
@@ -135,26 +153,40 @@ def test_parse_arrow_strict_and_malformed(spark):
         parse_json_arrow(broken, EVENT_PROPS_SPARK, "value").collect()
 
 
+# Documents outside the strict contract that a parser could mistake for
+# data: blank ones (Arrow's reader skips blank lines), a NULL document,
+# and nulls where BATTERY_SPARK declares the field and its list
+# elements non-nullable (from_json parses against the nullable schema).
+CONTRACT_BREAKING_DOCS = (
+    "",
+    "   ",
+    None,
+    "{}",
+    '{"voltage": null}',
+    '{"voltage": [1, null]}',
+)
+
+
 def test_parse_arrow_rejects_blank_documents(spark):
     """Arrow's JSON reader silently SKIPS blank lines, shrinking the
     batch: with keep columns that used to surface as an opaque
     from_arrays length mismatch, with keep=[] it silently DROPPED the
-    row — where the catalyst FAILFAST twin raises. Both parsers must
-    reject empty/whitespace documents loudly."""
-    from bolson_spark.operators import parse_json
-
-    for doc in ("", "   "):
+    row. from_json, for its part, turns a NULL document, `{}` and
+    nulls in non-nullable fields or list elements into nulls. Both
+    parsers must reject every such document loudly."""
+    for doc in CONTRACT_BREAKING_DOCS:
         # coalesce(1): the mixed batch exercises the row-count check
         # (an all-blank batch trips Arrow's own "Empty JSON file")
-        blank = spark.createDataFrame(
-            [('{"k": 1}',), (doc,)], ["value"]
+        bad = spark.createDataFrame(
+            [('{"voltage": [1]}',), (doc,)], "value string"
         ).coalesce(1)
         with pytest.raises(
-            Exception, match="empty/blank|JSON parse|Empty JSON"
+            Exception,
+            match="empty/blank|null JSON document|JSON parse|Empty JSON",
         ):
-            parse_json_arrow(blank, EVENT_PROPS_SPARK, "value").collect()
-        with pytest.raises(Exception):
-            parse_json(blank, EVENT_PROPS_SPARK, "value").collect()
+            parse_json_arrow(bad, BATTERY_SPARK, "value").collect()
+        with pytest.raises(Exception, match="null/empty/blank JSON document"):
+            parse_json(bad, BATTERY_SPARK, "value").collect()
 
 
 # --- P4 seq ---------------------------------------------------------------
@@ -263,15 +295,55 @@ def test_rebatch_invariants(spark):
     assert sum(r.rows for r in stats) == n
 
 
-@pytest.mark.parametrize("seq_mode", ["exact", "scalable"])
-@pytest.mark.parametrize("parser", ["catalyst", "arrow"])
-def test_convert_serialize_layout_and_content(spark, parser, seq_mode):
-    """convert(..., serialize=True): the payload is bolson_seq plus the
-    schema fields; every message covers a contiguous seq run of at most
-    max_rows; the runs tile 0..n-1; the rows equal a from_json parse."""
+def test_convert_routes_policy():
+    """The one route policy: the parse and seq of the convert path
+    follow from the row count alone."""
+    table = [
+        (None, parse_json_arrow, add_seq),
+        (0, parse_json, add_seq),
+        (ARROW_PARSE_MIN_ROWS - 1, parse_json, add_seq),
+        (ARROW_PARSE_MIN_ROWS, parse_json_arrow, add_seq),
+        (SEQ_SCALABLE_ROWS - 1, parse_json_arrow, add_seq),
+        (SEQ_SCALABLE_ROWS, parse_json, add_seq_scalable),
+        (10 * SEQ_SCALABLE_ROWS, parse_json, add_seq_scalable),
+    ]
+    for rows, parse_fn, seq_fn in table:
+        assert convert_routes(rows) == (parse_fn, seq_fn), rows
+
+
+def _convert_payloads(spark, docs, schema, rows, max_rows):
+    """convert(..., serialize=True) of `docs` in arrival order at
+    `rows`: the message rows and their decoded tables."""
     import pyarrow as pa
 
     from bolson_spark.operators import convert
+
+    raw = spark.createDataFrame(
+        list(enumerate(docs)), "arrival bigint, value string"
+    ).repartition(3)
+    out = convert(
+        raw, schema, "value", "arrival", max_rows=max_rows,
+        serialize=True, rows=rows,
+    ).collect()
+    return raw, out, [pa.ipc.open_stream(r.payload).read_all() for r in out]
+
+
+# ids name the (parse, seq) route that convert_routes picks for `rows`
+@pytest.mark.parametrize(
+    "rows",
+    [
+        pytest.param(None, id="arrow-exact"),
+        pytest.param(3000, id="catalyst-exact"),
+        pytest.param(SEQ_SCALABLE_ROWS, id="catalyst-scalable"),
+    ],
+)
+def test_convert_serialize_layout_and_content(spark, rows):
+    """convert(..., serialize=True): the payload is bolson_seq plus the
+    schema fields, typed as the stream's handshake declares; every
+    message covers a contiguous seq run of at most max_rows; the runs
+    tile 0..n-1; the rows equal a from_json parse. `rows` only picks the
+    route."""
+    from bolson_spark.schemas import spark_to_arrow_schema
 
     n, max_rows = 3000, 256
     rng = random.Random(5)
@@ -279,15 +351,14 @@ def test_convert_serialize_layout_and_content(spark, parser, seq_mode):
         json.dumps({"voltage": [rng.randint(0, 9999) for _ in range(i % 4)]})
         for i in range(n)
     ]
-    raw = spark.createDataFrame(
-        list(enumerate(docs)), "arrival bigint, value string"
-    ).repartition(3)
-    out = convert(
-        raw, BATTERY_SPARK, "value", "arrival", max_rows=max_rows,
-        serialize=True, seq_mode=seq_mode, parser=parser,
-    ).collect()
-    tables = [pa.ipc.open_stream(r.payload).read_all() for r in out]
-    assert {tuple(t.schema.names) for t in tables} == {("bolson_seq", "voltage")}
+    raw, out, tables = _convert_payloads(spark, docs, BATTERY_SPARK, rows, max_rows)
+    handshake = spark_to_arrow_schema(
+        T.StructType(
+            [T.StructField("bolson_seq", T.LongType(), False)]
+            + BATTERY_SPARK.fields
+        )
+    )
+    assert all(t.schema == handshake for t in tables)
     for r, t in zip(out, tables):
         assert r.num_rows == t.num_rows <= max_rows
         assert r.seq_last - r.seq_first + 1 == r.num_rows
@@ -313,6 +384,30 @@ def test_convert_serialize_layout_and_content(spark, parser, seq_mode):
         ).collect()
     }
     assert got == want
+
+
+def test_convert_routes_give_equal_payloads(spark):
+    """The wide trip schema through the Arrow route (rows=None) and the
+    Catalyst route (rows=3000): every payload carries the handshake
+    schema, and the decoded tables are equal."""
+    import pyarrow as pa
+
+    from bolson_spark.schemas import spark_to_arrow_schema
+
+    rng = random.Random(9)
+    docs = [json.dumps(_trip_doc(rng)) for _ in range(3000)]
+    handshake = spark_to_arrow_schema(
+        T.StructType(
+            [T.StructField("bolson_seq", T.LongType(), False)] + TRIP_SPARK.fields
+        )
+    )
+    decoded = []
+    for rows in (None, 3000):
+        _, _, tables = _convert_payloads(spark, docs, TRIP_SPARK, rows, 512)
+        assert all(t.schema == handshake for t in tables), rows
+        decoded.append(pa.concat_tables(tables).sort_by("bolson_seq"))
+    assert decoded[0].num_rows == 3000
+    assert decoded[0].equals(decoded[1])
 
 
 # --- Z1 serialize ---------------------------------------------------------
@@ -442,6 +537,16 @@ def test_parse_json_quarantine_routes_instead_of_failing(spark):
     assert out[3].k is None and out[3].raw == '{"k": 1, "intruder": 2}'
     assert out[4].quarantine_reason == "malformed"
     assert out[5].quarantine_reason == "malformed"
+    # what the strict parsers reject is malformed here, nulls included
+    docs = list(enumerate(CONTRACT_BREAKING_DOCS)) + [(99, '{"voltage": [1]}')]
+    df = spark.createDataFrame(docs, "event_id bigint, value string")
+    got = {
+        r.event_id: r.quarantine_reason
+        for r in parse_json_quarantine(
+            df, BATTERY_SPARK, "value", keep=["event_id"]
+        ).collect()
+    }
+    assert got == {i: "malformed" for i, _ in docs[:-1]} | {99: None}
 
 
 def test_add_seq_scalable_two_key_tiebreak(spark):

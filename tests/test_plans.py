@@ -58,6 +58,21 @@ def test_rebatch_hashes_seq_blocks(spark):
     assert rebatch(seqd).columns == ["bolson_seq"]
 
 
+def test_convert_routes_plans(spark):
+    """convert()'s plan follows convert_routes: at rows=None (bulk) the
+    Arrow parse adds a second MapInArrow node next to serialize's; at
+    2000 rows, a stream-sized micro-batch, only serialize's remains
+    (plans/r13/convert_routes_{bulk,microbatch}.txt)."""
+    from bolson_spark.operators import convert
+    from bolson_spark.schemas import BATTERY_SPARK
+
+    raw = spark.range(10).selectExpr("id AS _ln", "'{\"voltage\": [1]}' AS value")
+    for rows, nodes in ((None, 2), (2000, 1)):
+        df = convert(raw, BATTERY_SPARK, "value", "_ln", serialize=True, rows=rows)
+        plan = formatted_plan(df)
+        assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == nodes, plan
+
+
 def test_semi_anti_joins_compile_to_joins(spark):
     plan = formatted_plan(QUERIES["customers_without_orders"].fn(spark, SF))
     assert "LeftAnti" in plan

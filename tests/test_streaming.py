@@ -77,10 +77,29 @@ def test_stream_convert_end_to_end(spark, tmp_path, jsonl_dir):
     )
 
 
-def test_stream_convert_arrow_parser(spark, tmp_path, jsonl_dir):
-    """The arrow (single-pass strict) parser drives the same stream
-    end-to-end: drain parity, envelope, contiguous seqs."""
-    src, all_docs = jsonl_dir
+def test_stream_convert_arrow_parser(spark, tmp_path, monkeypatch):
+    """A micro-batch of ARROW_PARSE_MIN_ROWS docs takes the Arrow parse
+    route (convert_routes) through the stream end to end: drain parity,
+    payloads with the handshake schema, contiguous seqs, equal docs."""
+    import bolson_spark.operators.pipeline as routes
+
+    n = routes.ARROW_PARSE_MIN_ROWS
+    calls = []
+    real = routes.parse_json_arrow
+
+    def spy(*a, **kw):
+        calls.append(a[0])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(routes, "parse_json_arrow", spy)
+    rng = random.Random(4)
+    docs = [
+        {"voltage": [rng.randint(0, 2047) for _ in range(rng.randint(1, 16))]}
+        for _ in range(n)
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "one.jsonl").write_text("\n".join(json.dumps(d) for d in docs) + "\n")
     raw = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 1)
@@ -91,18 +110,20 @@ def test_stream_convert_arrow_parser(spark, tmp_path, jsonl_dir):
         raw,
         BATTERY_SPARK,
         sink,
-        parser="arrow",
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_rows=256,
     )
     query.awaitTermination(120)
-    assert metrics.num_jsons == len(all_docs)
-    back = deserialize_ipc(
-        sink.read(spark), "bolson_seq bigint, voltage array<bigint>"
-    ).collect()
-    assert sorted(r.bolson_seq for r in back) == list(range(len(all_docs)))
-    assert sorted(tuple(r.voltage) for r in back) == sorted(
-        tuple(d["voltage"]) for d in all_docs
+    assert metrics.batches == [n] and len(calls) == 1
+    out_schema = T.StructType(
+        [T.StructField("bolson_seq", T.LongType(), False)] + BATTERY_SPARK.fields
+    )
+    msgs = sink.read(spark).select("payload").toArrow().column(0)
+    tables = [pa.ipc.open_stream(m.as_buffer()).read_all() for m in msgs]
+    assert {t.schema for t in tables} == {spark_to_arrow_schema(out_schema)}
+    back = pa.concat_tables(tables)
+    assert sorted(back.column("bolson_seq").to_pylist()) == list(range(n))
+    assert sorted(map(tuple, back.column("voltage").to_pylist())) == sorted(
+        tuple(d["voltage"]) for d in docs
     )
 
 
@@ -1040,19 +1061,16 @@ def test_streaming_ingest_index_crash_window_is_lossless(spark, tmp_path):
     assert dup_fp == 0
 
 
-@pytest.mark.parametrize(
-    "which,parser",
-    [("battery", "arrow"), ("trip", "catalyst")],
-)
-def test_stream_convert_battery_trip_parity(spark, tmp_path, which, parser):
+@pytest.mark.parametrize("which", ["battery", "trip"])
+def test_stream_convert_battery_trip_parity(spark, tmp_path, which):
     """Battery/trip differential corpora through the STREAMING convert
     path (the reference's own differential tests are streaming-shaped —
     test_opae_battery.cpp:51-88): the deterministic corpus streams in
     as line-framed JSON over three micro-batches, IPC lands in the file
     sink, and we assert drain parity (received == published), global
     seq contiguity, and value parity with the batch parse of the same
-    corpus. Battery runs the Arrow TableReader parser, trip the strict
-    Catalyst parser — both physical parse impls covered e2e."""
+    corpus. The micro-batches are small, so both take the Catalyst
+    route; test_stream_convert_arrow_parser drives the Arrow route."""
     from bolson_spark.operators.parse import parse_json
     from bolson_spark.queries import battery_corpus, trip_corpus
     from bolson_spark.schemas import TRIP_SPARK
@@ -1082,7 +1100,6 @@ def test_stream_convert_battery_trip_parity(spark, tmp_path, which, parser):
         raw,
         schema,
         sink,
-        parser=parser,
         checkpoint_dir=str(tmp_path / "ckpt"),
         max_rows=256,
     )
@@ -1092,7 +1109,13 @@ def test_stream_convert_battery_trip_parity(spark, tmp_path, which, parser):
     out_schema = T.StructType(
         [T.StructField("bolson_seq", T.LongType(), False)] + schema.fields
     )
-    back = deserialize_ipc(sink.read(spark), out_schema).collect()
+    msgs = sink.read(spark)
+    # the Catalyst route publishes the schema its handshake registered
+    assert {
+        pa.ipc.open_stream(m.as_buffer()).schema
+        for m in msgs.select("payload").toArrow().column(0)
+    } == {spark_to_arrow_schema(out_schema)}
+    back = deserialize_ipc(msgs, out_schema).collect()
     assert sorted(r.bolson_seq for r in back) == list(range(len(payloads)))
 
     batch = parse_json(
