@@ -12,13 +12,13 @@ Spark mapping:
 - per-batch latency points are wall-clock stamps taken in the
   foreachBatch body around each stage. The reference's six points
   (latency.h:30-47) map to: Receive = micro-batch handed to
-  foreachBatch; Parse = parse job materialized; Resize = seq + block
-  re-partition materialized; Serialize = IPC serialization
-  materialized; Pop = serialized batches handed to the publisher (the
-  reference's IPC-queue pop); Publish = sink write returned. When
-  latency tracking is OFF the pipeline runs parse/resize/serialize
-  fused in one whole-stage-codegen job — stamping them separately
-  requires per-stage materialization barriers, so (like the
+  foreachBatch; Parse = parse job materialized; Resize = seq +
+  coalesce materialized (per-partition numbering, no re-partition);
+  Serialize = IPC serialization materialized; Pop = serialized batches
+  handed to the publisher (the reference's IPC-queue pop); Publish =
+  sink write returned. When latency tracking is OFF the pipeline runs
+  parse, seq, coalesce and serialize as one job — stamping them
+  separately requires per-stage materialization barriers, so (like the
   reference's --latency flag) the staged path only runs when asked;
 - ``save_latency_csv``/``save_metrics_csv`` write the reference's
   column layout so downstream tooling can diff them.

@@ -8,7 +8,11 @@ from bolson_spark.operators.parse import (
     validate_no_unexpected_fields,
 )
 from bolson_spark.operators.rebatch import add_batch_id, batch_stats, rebatch
-from bolson_spark.operators.seq import add_seq, add_seq_scalable
+from bolson_spark.operators.seq import (
+    add_seq,
+    add_seq_by_partition,
+    add_seq_scalable,
+)
 from bolson_spark.operators.serialize import deserialize_ipc, serialize_ipc
 from bolson_spark.operators.pipeline import convert
 from bolson_spark.operators.skew import salted_agg, salted_join
@@ -19,6 +23,7 @@ __all__ = [
     "validate_no_unexpected_fields",
     "add_seq",
     "add_seq_scalable",
+    "add_seq_by_partition",
     "add_batch_id",
     "rebatch",
     "batch_stats",

@@ -23,6 +23,7 @@ convert path switches parser by batch size (``convert_routes``).
 from __future__ import annotations
 
 import operator
+import weakref
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -184,55 +185,86 @@ def parse_json(
     ``keep`` lists pass-through columns to retain next to the parsed
     fields (e.g. the arrival key used for sequence numbers).
     """
-    src = F.col(column)
-    parsed = F.from_json(src, schema, {"mode": "FAILFAST"})
-    keep_cols = [F.col(c) for c in (keep or [])]
     if strict:
-        # STAGE the parse result under an alias, then guard on the
-        # aliased COLUMN: referencing the from_json expression in both
-        # the when-condition and the otherwise branch would parse
-        # every document twice (measured ~1.8x on the battery parse —
-        # CollapseProject keeps the stage boundary precisely because
-        # the alias is consumed more than once).
-        staged = df.select(
-            *keep_cols, src.alias("_src"), parsed.alias("_p")
+        staged, guarded, declared = _strict_selects(
+            df.sparkSession.sparkContext, schema, column, tuple(keep or [])
         )
-        p = F.col("_p")
-        guard = F.when(
-            # from_json's FAILFAST quirks: a NULL, empty/whitespace or
-            # JSON-literal-null document yields a NULL struct, and a
-            # null in a non-nullable field or list element passes, where
-            # the reference's reader (and the Arrow twin) raise. Found
-            # from the parse RESULT — not a trim() scan, which would
-            # re-walk every document string for the rare blank one.
-            _null_violation(p, schema),
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "bolson_spark: null/empty/blank JSON document or "
-                        "null in a non-nullable field: "
-                    ),
-                    F.coalesce(F.col("_src"), F.lit("NULL")),
-                )
-            ),
-        ).when(
-            F.size(_unexpected_keys(F.col("_src"), schema)) > 0,
-            F.raise_error(
-                F.concat(
-                    F.lit("bolson_spark: unexpected JSON field(s) "),
-                    F.to_json(_unexpected_keys(F.col("_src"), schema)),
-                    F.lit(" in document: "),
-                    F.col("_src"),
-                )
-            ),
-        ).otherwise(p)
-        return staged.select(*keep_cols, guard.alias("_parsed")).select(
-            *keep_cols,
-            *[_as_declared(F.col("_parsed")[f.name], f) for f in schema.fields],
-        )
+        return df.select(*staged).select(*guarded).select(*declared)
+    keep_cols = [F.col(c) for c in (keep or [])]
+    parsed = F.from_json(F.col(column), schema, {"mode": "FAILFAST"})
     return df.select(*keep_cols, parsed.alias("_parsed")).select(
         *keep_cols, "_parsed.*"
     )
+
+
+# The strict parse's three select lists, per SparkContext and
+# (schema, column, keep). Every Column call is a py4j round trip (about
+# 450 to build the battery lists, 2700 for trip, against 20 and 40 for
+# the selects alone) and a stream builds the same lists every
+# micro-batch, so they are built once. The Columns are unresolved
+# expressions, valid in any plan of their context's JVM; the weak key
+# drops an entry with its context.
+_STRICT_SELECTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _strict_selects(
+    sc, schema: T.StructType, column: str, keep: tuple[str, ...]
+) -> tuple[list[Column], list[Column], list[Column]]:
+    memo = _STRICT_SELECTS.setdefault(sc, {})
+    key = (schema.json(), column, keep)
+    if key not in memo:
+        memo[key] = _build_strict_selects(schema, column, keep)
+    return memo[key]
+
+
+def _build_strict_selects(
+    schema: T.StructType, column: str, keep: tuple[str, ...]
+) -> tuple[list[Column], list[Column], list[Column]]:
+    src = F.col(column)
+    parsed = F.from_json(src, schema, {"mode": "FAILFAST"})
+    keep_cols = [F.col(c) for c in keep]
+    # STAGE the parse result under an alias, then guard on the aliased
+    # COLUMN: referencing the from_json expression in both the
+    # when-condition and the otherwise branch would parse every
+    # document twice (measured ~1.8x on the battery parse —
+    # CollapseProject keeps the stage boundary precisely because the
+    # alias is consumed more than once).
+    staged = [*keep_cols, src.alias("_src"), parsed.alias("_p")]
+    p = F.col("_p")
+    guard = F.when(
+        # from_json's FAILFAST quirks: a NULL, empty/whitespace or
+        # JSON-literal-null document yields a NULL struct, and a null in
+        # a non-nullable field or list element passes, where the
+        # reference's reader (and the Arrow twin) raise. Found from the
+        # parse RESULT — not a trim() scan, which would re-walk every
+        # document string for the rare blank one.
+        _null_violation(p, schema),
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    "bolson_spark: null/empty/blank JSON document or "
+                    "null in a non-nullable field: "
+                ),
+                F.coalesce(F.col("_src"), F.lit("NULL")),
+            )
+        ),
+    ).when(
+        F.size(_unexpected_keys(F.col("_src"), schema)) > 0,
+        F.raise_error(
+            F.concat(
+                F.lit("bolson_spark: unexpected JSON field(s) "),
+                F.to_json(_unexpected_keys(F.col("_src"), schema)),
+                F.lit(" in document: "),
+                F.col("_src"),
+            )
+        ),
+    ).otherwise(p)
+    guarded = [*keep_cols, guard.alias("_parsed")]
+    declared = [
+        *keep_cols,
+        *[_as_declared(F.col("_parsed")[f.name], f) for f in schema.fields],
+    ]
+    return staged, guarded, declared
 
 
 def parse_json_quarantine(

@@ -6,8 +6,11 @@ composition; Spark tasks replace converter threads, Catalyst fuses the
 parse/seq/rebatch projections into one whole-stage-codegen span.
 
 The physical routes of the path — which parser, which seq — follow from
-the row count alone (``convert_routes``); ``convert()``, the stream's
-micro-batch and ``bench convert`` all take them from there.
+the row count alone (``convert_routes``); ``convert()`` and ``bench
+convert`` take both from there. The stream's micro-batch takes only the
+parse: it numbers each source partition from its offset
+(``add_seq_by_partition``) and coalesces instead of ``rebatch``
+(``streaming/pipeline.py``).
 """
 
 from __future__ import annotations
@@ -43,6 +46,9 @@ SEQ_SCALABLE_ROWS = 2_000_000
 #   15k    1015         1073         2/8
 #   20k    1111, 1034   986, 894     7/8, 7/8
 #   40k    1695, 1533   1448, 1382   8/8, 7/8
+#
+# That body still had a global window and a hash rebatch; the stream's
+# body now has neither, and the crossover has not been measured again.
 ARROW_PARSE_MIN_ROWS = 20_000
 
 

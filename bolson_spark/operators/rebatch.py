@@ -11,16 +11,19 @@ Spark-first mapping: with contiguous ``bolson_seq`` starting at
 
 - ``add_batch_id``: the logical output batch, ``floor((seq - base) /
   max_rows)`` — evaluated inside whole-stage codegen, no shuffle.
-- ``rebatch``: the physical layout, the one seq-block layout that the
-  batch ``convert`` and the stream micro-batch share. Rows move in
-  blocks of ``4 * max_rows`` consecutive seqs, ``block = floor((seq -
-  base) / (4 * max_rows))``, hash-partitioned on the block and sorted
+- ``rebatch``: the physical layout of the batch ``convert``, whose
+  global seq leaves rows in no useful partition order. Rows move in
+  blocks of ``4 * max_rows`` consecutive seqs, ``block = floor(seq /
+  (4 * max_rows))``, hash-partitioned on the block and sorted
   by seq within each partition. The block boundaries are known from the
   arithmetic, so unlike range partitioning there is no range-sampling
   job. Hash collisions can put several non-adjacent blocks in one
   partition; ``serialize_ipc`` slices within contiguous seq runs, so
   every message still covers a contiguous seq range. The physical
-  zero-copy slicing happens there, on Arrow batches.
+  zero-copy slicing happens there, on Arrow batches. The stream
+  micro-batch does not use it: ``add_seq_by_partition`` leaves each
+  source partition one contiguous seq run already, so a ``coalesce``
+  suffices there.
 - ``batch_stats``: the per-slice seq-range stats that the reference's
   Resizer recomputes (resizer.cpp:27-42).
 """
@@ -50,25 +53,15 @@ def rebatch(
     df: DataFrame,
     max_rows: int = MAX_ROWS_DEFAULT,
     seq_col: str = SEQ_COL,
-    base: int = 0,
-    rows: int | None = None,
 ) -> DataFrame:
     """Co-locate contiguous seq blocks and order rows by seq.
 
-    One hash exchange on the block id (module docstring), then a
-    per-partition sort on ``seq_col``; the output has exactly the input
-    columns. ``rows`` is the row count when the caller already knows it
-    (the stream's per-batch stats job): the partition count is then one
-    per block, ``max(1, rows // (4 * max_rows))``. Without it the
-    count is ``defaultParallelism``.
+    One hash exchange on the block id into ``defaultParallelism``
+    partitions (module docstring), then a per-partition sort on
+    ``seq_col``; the output has exactly the input columns.
     """
-    block_rows = 4 * max_rows
-    n_parts = (
-        max(1, rows // block_rows)
-        if rows is not None
-        else df.sparkSession.sparkContext.defaultParallelism
-    )
-    block = F.floor((F.col(seq_col) - F.lit(base)) / block_rows)
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
+    block = F.floor(F.col(seq_col) / (4 * max_rows))
     return (
         df.withColumn("_block", block)
         .repartition(n_parts, F.col("_block"))

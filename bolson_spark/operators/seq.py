@@ -6,7 +6,7 @@ number reflecting arrival order, carried as a physical non-nullable
 (parse/arrow.cpp:147-163, parse/parser.cpp:34-60). Sequence numbers are
 contiguous and 0-based.
 
-Two implementations:
+Three implementations:
 
 - ``add_seq``        — exact semantics via ``row_number() OVER (ORDER BY
   key)``. A global window is a single-reducer sort: correct and what the
@@ -29,16 +29,22 @@ Two implementations:
   silently mis-number. (Observable at scale; at toy scale AQE coalesces
   the shuffle to one partition, masking it.) Literal boundaries remove
   that failure mode and any AQE dependence.
+- ``add_seq_by_partition`` — the stream micro-batch's numbering: the
+  reference's per-buffer seq ranges (parser.h:34-42). Each source
+  partition takes a contiguous range from its row count, which the
+  caller measured on the same (cached) partitioning; no shuffle, sort
+  or window.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bolson_spark import SEQ_COL
-
-from pyspark.sql import types as T
 
 _NUMERIC_TYPES = (
     T.ByteType,
@@ -63,6 +69,43 @@ def add_seq(
     out = df.withColumn(name, F.row_number().over(w).cast("bigint") - 1 + start)
     # Reference prepends bolson_seq at column index 0 (parse/arrow.cpp:155)
     return out.select(name, *df.columns)
+
+
+def add_seq_by_partition(
+    df: DataFrame,
+    counts: Sequence[int],
+    name: str = SEQ_COL,
+    start: int = 0,
+) -> DataFrame:
+    """Contiguous sequence numbers in partition-major arrival order,
+    from per-partition row counts: row ``i`` of partition ``p`` gets
+    ``start + sum(counts[:p]) + i``.
+
+    ``counts[p]`` must be the row count of ``df``'s partition ``p``, as
+    a job over the same partitioning measured it (the caller caches the
+    input, so both jobs read the same partitions). The offsets are
+    frozen as literals and the local index is the low 33 bits of
+    ``monotonically_increasing_id``, so the projection is narrow: no
+    shuffle, sort or window. That id counts only the rows that reach
+    it, so a filter below (the quarantine's clean rows) leaves no gaps
+    when ``counts`` counts the rows it keeps. Since the id is
+    partition-major too, the numbering equals ``add_seq`` ordered by it.
+    """
+    offsets = [start]
+    for c in counts[:-1]:
+        offsets.append(offsets[-1] + int(c))
+    pid = F.spark_partition_id()
+    local = F.monotonically_increasing_id() - F.shiftleft(pid.cast("bigint"), 33)
+    # the coalesce only types bolson_seq non-nullable, as add_seq's is:
+    # every partition that holds a row has an offset
+    offset = F.coalesce(
+        F.element_at(
+            F.array(*[F.lit(o) for o in offsets]).cast("array<bigint>"), pid + 1
+        ),
+        F.lit(start).cast("bigint"),
+    )
+    # Reference prepends bolson_seq at column index 0 (parse/arrow.cpp:155)
+    return df.select((offset + local).alias(name), *df.columns)
 
 
 def add_seq_scalable(

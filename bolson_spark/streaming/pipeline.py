@@ -8,26 +8,35 @@ Spark mapping:
 - source: any line-framed streaming DataFrame with a single string
   column (``readStream.format("socket")`` for the TCP analog,
   ``format("text")`` for replayable tests, Kafka in production);
-- convert: the same batch operators applied inside ``foreachBatch`` —
-  per micro-batch parse (strict), arrival-order seq with a
-  driver-maintained base offset (replay-stable: a replayed batch
-  resolves to its original base and renumbers identically), the
-  shared ``rebatch`` seq-block layout, IPC-serialize;
+- convert: the batch operators applied inside ``foreachBatch``, as
+  three Spark jobs and no exchange: one stats job (each source
+  partition's row count and JSON bytes), one job that parses (strict),
+  numbers each source partition from its offset after a
+  driver-maintained base (``add_seq_by_partition``; replay-stable: a
+  replayed batch resolves to its original base and renumbers
+  identically), coalesces and IPC-serializes, and the sink write. The
+  stream does not use ``rebatch``: its rows already sit in contiguous
+  seq runs per partition;
 - sink: IpcFileSink (schema handshake on start, append per batch);
 - drain: ``trigger(availableNow=True)`` + ``awaitTermination`` ==
   "process everything the source has, then stop" — the
   ``jsons_received == publish_count`` spin-loop without the spin.
 
-Ordering at scale: a single socket gives a total arrival order (the
-reference's world, stream.cpp:70 "TCP clients: 1"). With a partitioned
-source (Kafka), seq is per-partition contiguous + a batch base — the
-documented semantics of §1.4 (consumers re-sort by seq).
+Ordering at scale: a single socket gives a total arrival order in the
+reference (stream.cpp:70 "TCP clients: 1"). Here seq is per-partition
+contiguous + a batch base — the documented semantics of §1.4
+(consumers re-sort by seq) — so only a single-partition source keeps
+the total order; Spark's socket source deals each micro-batch's lines
+round-robin over ``defaultParallelism`` partitions.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,7 +44,7 @@ from pyspark.sql import types as T
 from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT
 from bolson_spark.operators.parse import as_declared, parse_json_quarantine
 from bolson_spark.operators.pipeline import convert_routes
-from bolson_spark.operators.rebatch import rebatch
+from bolson_spark.operators.seq import add_seq_by_partition
 from bolson_spark.operators.serialize import serialize_ipc
 from bolson_spark.schemas import spark_to_arrow_schema
 from bolson_spark.streaming.sink import PublishSink
@@ -166,6 +175,22 @@ def _write_seq_base(
     os.replace(tmp, base_file)
 
 
+def microbatch_layout(
+    parsed: DataFrame, counts: Sequence[int], base: int, max_rows: int
+) -> DataFrame:
+    """The stream's seq and layout of one parsed micro-batch: each
+    source partition numbered from its offset after ``base``
+    (``add_seq_by_partition`` over the per-partition row ``counts``),
+    then coalesced to one partition per ``4 * max_rows`` rows. Both are
+    narrow, so the micro-batch makes no exchange; source partitions
+    keep their rows, and ``serialize_ipc`` cuts its messages at the seq
+    gaps between the partitions a coalesce merged."""
+    n = int(sum(counts))
+    return add_seq_by_partition(parsed, counts, start=base).coalesce(
+        max(1, n // (4 * max_rows))
+    )
+
+
 @dataclass
 class StreamMetrics:
     """M1 analog (convert/metrics.h:26-56): counts reduced across
@@ -195,10 +220,13 @@ def run_stream_convert(
 ):
     """Start the convert stream; returns (query, metrics).
 
-    Each micro-batch takes its parse and seq from
+    Each micro-batch takes its parse from
     ``operators.pipeline.convert_routes`` at its measured row count, the
     policy ``convert()`` uses: small batches parse with Catalyst, large
-    ones with the Arrow reader, both under one strict contract.
+    ones with the Arrow reader, both under one strict contract. The seq
+    is ``add_seq_by_partition`` over the per-partition row counts of the
+    batch's stats job, the layout a ``coalesce`` to one partition per
+    ``4 * max_rows`` rows.
 
     ``on_error`` selects the failure posture: ``"fail"`` reproduces the
     reference's hard error on the first bad document
@@ -289,40 +317,51 @@ def run_stream_convert(
 
         received_ts = _time.time()
         batch_df = batch_df.cache()
-        routed = None
-        parsed = None
+        routed = parsed = ordered = ser = None
         try:
-            # one job for both micro-batch stats (count + input bytes)
-            sizes = batch_df.select(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.octet_length(json_col)).alias("b"),
-            ).first()
-            n, jb = sizes["n"], sizes["b"]
+            # one shuffle-free job: each row's source partition and
+            # JSON bytes (12 B a row to the driver); it also fills the
+            # cache, whose partitions every later job of the batch reads
+            stats = batch_df.select(
+                F.spark_partition_id().alias("p"),
+                F.octet_length(json_col).alias("b"),
+            ).toArrow()
+            n = stats.num_rows
             if n == 0:
                 return
-            # arrival order inside the micro-batch: the source's own
-            # row order per partition; a single-partition source (socket)
-            # gives the reference's total order. We materialize it with a
-            # monotonic local id, then number globally from the base.
+            jb = pc.sum(stats.column("b")).as_py() or 0
+            # order inside the micro-batch: each source partition's own
+            # row order, partitions in id order. Each partition numbers
+            # its rows from its own offset (add_seq_by_partition), so
+            # no job sorts them. A single-partition source gives the
+            # reference's total arrival order; Spark's socket source is
+            # not one (it deals a batch's lines round-robin over
+            # defaultParallelism partitions).
+            counts = np.bincount(stats.column("p").to_numpy())
             nq = 0
             if on_error == "quarantine":
                 routed = parse_json_quarantine(
                     batch_df, schema, json_col
                 ).cache()
-                bad = routed.where(
-                    F.col("quarantine_reason").isNotNull()
-                )
-                bad_stats = bad.select(
-                    F.count(F.lit(1)).alias("nq"),
-                    F.sum(F.octet_length("raw")).alias("bq"),
-                ).first()
-                nq, bq = bad_stats["nq"], bad_stats["bq"] or 0
+                # one job over routed: each row's partition, whether it
+                # is clean, and a bad row's bytes
+                rstats = routed.select(
+                    F.spark_partition_id().alias("p"),
+                    F.col("quarantine_reason").isNull().alias("clean"),
+                    F.octet_length("raw").alias("bq"),
+                ).toArrow()
+                clean = rstats.column("clean").to_numpy(zero_copy_only=False)
+                counts = np.bincount(rstats.column("p").to_numpy()[clean])
+                nq = n - int(clean.sum())
+                bq = pc.sum(rstats.column("bq")).as_py() or 0
                 if nq and quarantine_dir:
                     # a replay rewrites its own (run, batch) partition
                     # instead of duplicating rows, and a fresh-checkpoint
                     # restart cannot clobber a prior run's evidence
                     write_run_batch(
-                        bad.select(
+                        routed.where(
+                            F.col("quarantine_reason").isNotNull()
+                        ).select(
                             "raw",
                             F.col("quarantine_reason").alias("reason"),
                         ),
@@ -336,35 +375,32 @@ def run_stream_convert(
                 # keep per-doc metrics consistent: num_jsons AND
                 # json_bytes both count only the converted (clean) docs
                 n -= nq
-                jb = (jb or 0) - bq
+                jb -= bq
                 if n == 0:
                     # nothing left to publish: the batch is complete
                     # once the (idempotent) quarantine write landed, so
                     # counting here cannot be replayed-and-recounted
                     metrics.num_quarantined += nq
-                    return  # finally unpersists routed + batch_df
-            # the quarantine keeps its own parse (on_error is a semantic
-            # choice, not a route); the seq follows the clean-row count
-            parse_fn, seq_fn = convert_routes(n)
-            if routed is None:
+                    return  # finally unpersists the caches
+            else:
+                # the quarantine keeps its own parse (on_error is a
+                # semantic choice, not a route)
+                parse_fn, _ = convert_routes(n)
                 parsed = parse_fn(batch_df, schema, json_col)
             # replay-stable base: a replayed batch id reuses its
             # original base (identical renumbering -> byte-identical
             # republished messages); persisted BEFORE the publish
             base = _resolve_seq_base(state["rec"], batch_id, run_id)
+            # When latency tracking is on, materialize each stage so the
+            # six reference time points (latency.h:30-47) are observable;
+            # otherwise parse, seq, coalesce and serialize run as one
+            # job (that fusion IS the optimization — see metrics.py).
             staged = latency is not None
             if staged:
                 parsed = parsed.cache()
-            with_order = parsed.withColumn("_arrival", F.monotonically_increasing_id())
-            seqd = seq_fn(with_order, "_arrival", start=base).drop("_arrival")
-            # When latency tracking is on, materialize each stage so the
-            # six reference time points (latency.h:30-47) are observable;
-            # otherwise keep parse/resize/serialize fused in one job
-            # (that fusion IS the optimization — see metrics.py).
-            if staged:
                 parsed.count()
                 parsed_ts = _time.time()
-            ordered = rebatch(seqd, max_rows=max_rows, base=base, rows=n)
+            ordered = microbatch_layout(parsed, counts, base, max_rows)
             if staged:
                 ordered = ordered.cache()
                 ordered.count()
@@ -372,9 +408,9 @@ def run_stream_convert(
             ser = serialize_ipc(
                 ordered, max_rows=max_rows, max_ipc_size=max_ipc_size
             ).cache()
-            agg = ser.select(
-                F.count(F.lit(1)).alias("m"), F.sum("ipc_bytes").alias("ib")
-            ).first()
+            # materialize before the publish, so a strict-parse failure
+            # publishes nothing; the per-message sizes are the count
+            ipc_bytes = ser.select("ipc_bytes").toArrow().column(0)
             serialized_ts = _time.time()
             # persist the (batch_id, base, n) record BEFORE publishing:
             # a replay recomputes the identical record, so whichever
@@ -386,9 +422,7 @@ def run_stream_convert(
             popped_ts = _time.time()  # handoff to the publisher (queue pop)
             sink.write(ser)
             published_ts = _time.time()
-            ser.unpersist()
             if staged:
-                ordered.unpersist()
                 latency.stamp(
                     base,
                     base + n - 1,
@@ -406,18 +440,20 @@ def run_stream_convert(
             # counters would silently drift apart on every retry.
             metrics.num_quarantined += nq
             metrics.num_jsons += n
-            metrics.json_bytes += jb or 0
-            metrics.num_ipc += agg["m"]
-            metrics.ipc_bytes += agg["ib"] or 0
+            metrics.json_bytes += jb
+            metrics.num_ipc += len(ipc_bytes)
+            metrics.ipc_bytes += pc.sum(ipc_bytes).as_py() or 0
             metrics.batches.append(n)
         finally:
             # unpersist in finally: an exception mid-batch (e.g. a
             # transient sink failure followed by a streaming retry)
             # must not leak a cached copy of the micro-batch per attempt
-            if routed is not None:
-                routed.unpersist()
-            if latency is not None and parsed is not None:
-                parsed.unpersist()
+            cached = [ser, routed]
+            if latency is not None:
+                cached += [parsed, ordered]
+            for df in cached:
+                if df is not None:
+                    df.unpersist()
             batch_df.unpersist()
 
     writer = raw.writeStream.foreachBatch(process)

@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 from bolson_spark import MAX_ROWS_DEFAULT
 from bolson_spark.operators import (
     add_seq,
+    add_seq_by_partition,
     add_seq_scalable,
     batch_stats,
     deserialize_ipc,
@@ -189,6 +190,65 @@ def test_parse_arrow_rejects_blank_documents(spark):
             parse_json(bad, BATTERY_SPARK, "value").collect()
 
 
+def test_parse_strict_selects_memoized_per_context(spark):
+    """parse_json builds its strict select lists once per (SparkContext,
+    schema, column, keep). Two schemas and two keep lists in one session
+    give four entries, each with its own plan, schema and rows; a repeat
+    call reuses its entry; the strict errors read as before; and an
+    entry goes with its context."""
+    import gc
+
+    from bolson_spark.operators import parse as parse_mod
+
+    rng = random.Random(5)
+    memo = parse_mod._STRICT_SELECTS
+    plans = set()
+    for schema, make in ((BATTERY_SPARK, _battery_doc), (TRIP_SPARK, _trip_doc)):
+        df = spark.createDataFrame(
+            [(i, json.dumps(make(rng))) for i in range(20)], "_ln long, value string"
+        )
+        lenient = parse_json(df, schema, "value", strict=False).collect()
+        for keep in (None, ["_ln"]):
+            out = parse_json(df, schema, "value", keep=keep)
+            entry = memo[spark.sparkContext][(schema.json(), "value", tuple(keep or []))]
+            again = parse_json(df, schema, "value", keep=keep)
+            assert memo[spark.sparkContext][
+                (schema.json(), "value", tuple(keep or []))
+            ] is entry
+            keep_fields = [df.schema[k] for k in keep or []]
+            assert out.schema == T.StructType(keep_fields + schema.fields)
+            rows = again.collect()
+            assert sorted(_row_key(r, schema) for r in rows) == sorted(
+                _row_key(r, schema) for r in lenient
+            )
+            if keep:
+                assert sorted(r._ln for r in rows) == list(range(20))
+            plans.add(out._jdf.queryExecution().optimizedPlan().toString())
+    assert len(plans) == 4
+    # the strict errors, from memoized lists
+    for doc, message in (
+        ('{"voltage": [1], "zz": 3}', 'unexpected JSON field(s) ["zz"] in document: '),
+        ('{"voltage": [1, null]}', "null/empty/blank JSON document or null in a "
+         "non-nullable field: "),
+    ):
+        bad = spark.createDataFrame([(0, doc)], "_ln long, value string")
+        for keep in (None, ["_ln"]):
+            with pytest.raises(Exception) as err:
+                parse_json(bad, BATTERY_SPARK, "value", keep=keep).collect()
+            assert "bolson_spark: " + message + doc in str(err.value)
+
+    class Context:
+        """A stand-in for a SparkContext that is dropped."""
+
+    n_contexts = len(memo)
+    ctx = Context()
+    parse_mod._strict_selects(ctx, BATTERY_SPARK, "value", ())
+    assert len(memo) == n_contexts + 1
+    del ctx
+    gc.collect()
+    assert len(memo) == n_contexts and spark.sparkContext in memo
+
+
 # --- P4 seq ---------------------------------------------------------------
 
 
@@ -204,6 +264,37 @@ def test_add_seq_scalable_matches_global(spark):
     a = add_seq(df, "key").select("key", "bolson_seq").collect()
     b = add_seq_scalable(df, "key").select("key", "bolson_seq").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+def test_add_seq_by_partition_matches_window(spark):
+    """add_seq_by_partition numbers each partition from its offset: the
+    doc->seq mapping equals add_seq over monotonically_increasing_id on
+    the same cached partitions, an empty partition included, and
+    bolson_seq is non-nullable as add_seq's is."""
+    df = (
+        spark.range(0, 5000, 1, 5)
+        .where((F.col("id") < 1000) | (F.col("id") >= 2000))
+        .where(F.col("id") % 7 != 3)
+        .cache()
+    )
+    try:
+        pids = df.select(F.spark_partition_id().alias("p")).toArrow()
+        counts = [0] * 5
+        for p in pids.column("p").to_pylist():
+            counts[p] += 1
+        assert counts[1] == 0
+        got = add_seq_by_partition(df, counts, start=7)
+        want = add_seq(
+            df.withColumn("_a", F.monotonically_increasing_id()), "_a", start=7
+        ).drop("_a")
+        assert got.columns == ["bolson_seq", "id"]
+        assert not got.schema["bolson_seq"].nullable
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+        assert sorted(r.bolson_seq for r in got.collect()) == list(
+            range(7, 7 + sum(counts))
+        )
+    finally:
+        df.unpersist()
 
 
 def test_add_seq_scalable_deterministic_without_aqe(spark):

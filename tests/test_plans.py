@@ -48,14 +48,45 @@ def test_rebatch_is_shuffle_free(spark):
 
 def test_rebatch_hashes_seq_blocks(spark):
     """rebatch lays rows out by seq-block arithmetic: one hash exchange
-    on the block id, one partition per block when the row count is
-    known, and no range-sampling exchange."""
+    on the block id into defaultParallelism partitions, and no
+    range-sampling exchange."""
     seqd = spark.range(10_000).withColumnRenamed("id", "bolson_seq")
-    plan = formatted_plan(rebatch(seqd, max_rows=1000, rows=10_000))
+    plan = formatted_plan(rebatch(seqd, max_rows=1000))
+    parts = spark.sparkContext.defaultParallelism
     assert plan.count("Arguments: hashpartitioning") == 1, plan
-    assert re.search(r"hashpartitioning\(_block#\d+L, 2\)", plan), plan
+    assert re.search(rf"hashpartitioning\(_block#\d+L, {parts}\)", plan), plan
     assert "rangepartitioning" not in plan, plan
     assert rebatch(seqd).columns == ["bolson_seq"]
+
+
+def test_stream_microbatch_plan_is_exchange_free(spark):
+    """The stream's micro-batch composition over a cached three-partition
+    batch (strict parse, per-partition seq, coalesce, serialize) has no
+    Exchange, Window or Sort node: one narrow stage ending in the
+    Coalesce and serialize's MapInArrow
+    (plans/r14/stream_microbatch_{before,after}.txt)."""
+    from bolson_spark.operators import parse_json, serialize_ipc
+    from bolson_spark.schemas import BATTERY_SPARK
+    from bolson_spark.streaming.pipeline import microbatch_layout
+
+    batch = (
+        spark.range(0, 3000, 1, 3)
+        .selectExpr("concat('{\"voltage\": [', id, ']}') AS value")
+        .cache()
+    )
+    try:
+        parsed = parse_json(batch, BATTERY_SPARK, "value")
+        ser = serialize_ipc(
+            microbatch_layout(parsed, [1000, 1000, 1000], 0, 256), max_rows=256
+        )
+        plan = formatted_plan(ser)
+        for node in ("Exchange", "Window", "Sort"):
+            assert not re.search(rf"^\(\d+\) {node}", plan, re.M), plan
+        # 3000 rows // (4 * 256) = 2 coalesced partitions
+        assert re.search(r"^\(\d+\) Coalesce\n.*\nArguments: 2$", plan, re.M), plan
+        assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1, plan
+    finally:
+        batch.unpersist()
 
 
 def test_convert_routes_plans(spark):

@@ -210,6 +210,28 @@ def test_multi_partition_source_seq_semantics(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
 
 
+def test_stream_microbatch_runs_three_jobs(spark, tmp_path):
+    """One micro-batch of a file-source stream runs at most three Spark
+    jobs in its body (the stats job, the serialize job, the sink write),
+    counted from the status store by the query's job group."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "one.jsonl").write_text(
+        "".join(json.dumps({"voltage": [i, i + 1]}) + "\n" for i in range(2000))
+    )
+    sink = IpcFileSink(str(tmp_path / "topic"))
+    query, metrics = run_stream_convert(
+        spark.readStream.format("text").load(str(src)),
+        BATTERY_SPARK,
+        sink,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    query.awaitTermination(120)
+    assert metrics.batches == [2000]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
+    assert 1 <= len(jobs) <= 3, sorted(jobs)
+
+
 def test_schema_handshake_rejects_mismatch(tmp_path):
     sink = IpcFileSink(str(tmp_path / "topic"))
     s1 = spark_to_arrow_schema(BATTERY_SPARK)
@@ -401,6 +423,54 @@ def test_stream_quarantine_routes_bad_docs(spark, tmp_path):
     rows = sorted(out.collect(), key=lambda r: r.bolson_seq)
     assert [r.bolson_seq for r in rows] == [0, 1]
     assert [r.voltage for r in rows] == [[1], [4, 5]]
+
+    # bad documents in several source partitions (one file each, as in
+    # test_multi_partition_source_seq_semantics): the clean seqs are
+    # 0..n_clean-1 and each partition's clean rows one contiguous block
+    # in file order
+    src4 = tmp_path / "src4"
+    src4.mkdir()
+    clean_counts = []
+    for f, cnt in enumerate([300, 250, 200, 150]):
+        lines, clean = [], 0
+        for i in range(cnt):
+            if i % 37 == f:
+                lines.append(json.dumps({"voltage": [f, i], "intruder": 1}))
+            elif i % 41 == f + 1:
+                lines.append('{"voltage": [%d, %d]' % (f, i))
+            else:
+                lines.append(json.dumps({"voltage": [f, i]}))
+                clean += 1
+        (src4 / f"file-{f}.jsonl").write_text("\n".join(lines) + "\n")
+        clean_counts.append(clean)
+    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(120 * 1024))
+    try:
+        sink4 = IpcFileSink(str(tmp_path / "topic4"))
+        query, metrics = run_stream_convert(
+            spark.readStream.format("text").load(str(src4)),
+            BATTERY_SPARK,
+            sink4,
+            checkpoint_dir=str(tmp_path / "ckpt4"),
+            max_rows=64,
+            on_error="quarantine",
+            quarantine_dir=str(tmp_path / "quarantine4"),
+        )
+        query.awaitTermination(120)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
+    n_clean = sum(clean_counts)
+    assert metrics.batches == [n_clean]
+    assert metrics.num_quarantined == 900 - n_clean
+    back = deserialize_ipc(
+        sink4.read(spark), "bolson_seq bigint, voltage array<bigint>"
+    ).collect()
+    assert sorted(r.bolson_seq for r in back) == list(range(n_clean))
+    for f, clean in enumerate(clean_counts):
+        block = sorted((r.voltage[1], r.bolson_seq) for r in back if r.voltage[0] == f)
+        assert len(block) == clean
+        seqs = [s for _, s in block]
+        assert seqs == list(range(seqs[0], seqs[0] + clean))
 
 
 def test_stateful_running_stats(spark, tmp_path):
