@@ -7,8 +7,9 @@ Layout
 ------
 - ``session``     : SparkSession builder + testdata table loaders
 - ``schemas``     : explicit Arrow/Spark schemas (battery, trip, events)
-- ``operators``   : the reference's pipeline operators (parse, seq,
-                    rebatch, serialize-IPC) as pure DataFrame->DataFrame fns
+- ``operators``   : the reference's pipeline operators (parse, seq and
+                    its per-partition layout, serialize-IPC) and the
+                    convert composition, as pure DataFrame->DataFrame fns
 - ``functions``   : text analysis, dedup (exact/minhash/ngram/simhash),
                     similarity search (cosine knn, IVF), multimodal stubs
 - ``sources``     : schema-enforced readers (parquet/json/lines)

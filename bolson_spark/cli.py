@@ -476,13 +476,13 @@ def cmd_sessionize(args) -> int:
 def cmd_bench_convert(args) -> int:
     """B2 (bench.cpp:83-227): pre-generate -> timed convert -> rates.
 
-    Times ``operators.convert(..., serialize=True)`` end to end at
-    ``rows=--num-jsons`` and reports the routes ``convert_routes`` chose
-    for that count; ``--partitions`` sets only the input partitioning."""
+    Times ``operators.convert(..., serialize=True)`` end to end over an
+    input of ``--partitions`` arrival-ordered range partitions, the
+    shape of a file scan, so ``convert()`` numbers each partition from
+    its offset."""
     from pyspark.sql import functions as F
 
     from bolson_spark.operators import convert
-    from bolson_spark.operators.pipeline import convert_routes
     from bolson_spark.session import get_spark
 
     spark = get_spark("bolson-bench-convert")
@@ -492,7 +492,7 @@ def cmd_bench_convert(args) -> int:
     json_bytes = sum(len(d) + 1 for d in docs)
     df = spark.createDataFrame(
         [(i, d) for i, d in enumerate(docs)], ["arrival", "value"]
-    ).repartition(args.partitions).cache()
+    ).repartitionByRange(args.partitions, "arrival").cache()
     df.count()  # materialize input outside the timed region (FillBuffers)
     best = None
     for _ in range(args.repeats):
@@ -505,20 +505,16 @@ def cmd_bench_convert(args) -> int:
             max_rows=args.max_rows,
             max_ipc_size=args.max_ipc,
             serialize=True,
-            rows=args.num_jsons,
         )
         stats = ser.select(
             F.count(F.lit(1)).alias("n"), F.sum("ipc_bytes").alias("b")
         ).first()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
-    parse_fn, seq_fn = convert_routes(args.num_jsons)
     print(
         json.dumps(
             {
                 "num_jsons": args.num_jsons,
-                "parse": parse_fn.__name__,
-                "seq": seq_fn.__name__,
                 "json_mb": round(json_bytes / 1e6, 3),
                 "num_ipc": stats["n"],
                 "ipc_mb": round((stats["b"] or 0) / 1e6, 3),
@@ -926,7 +922,7 @@ def main(argv=None) -> int:
 
     b = sub.add_parser("bench", help="micro-benchmarks")
     bsub = b.add_subparsers(dest="bench_cmd", required=True)
-    bc = bsub.add_parser("convert", help="B2: parse+seq+rebatch+serialize rate")
+    bc = bsub.add_parser("convert", help="B2: seq+parse+serialize rate")
     bc.add_argument("--schema", choices=SCHEMAS, default="battery")
     bc.add_argument("--num-jsons", type=int, default=1024)  # cli.cpp:59-71 default
     bc.add_argument("--seed", type=int, default=0)

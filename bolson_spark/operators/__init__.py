@@ -1,6 +1,8 @@
 """The reference's pipeline operators as pure DataFrame->DataFrame
-functions (SURVEY.md §2.1): parse (P1), seq (P4), rebatch (R1),
-serialize-IPC (Z1), and the composed convert pipeline."""
+functions (SURVEY.md §2.1): parse (P1), seq (P4) with its
+per-partition layout, serialize-IPC (Z1), and the composed convert
+pipeline. ``rebatch`` (R1, a hash seq-block layout) is on no convert
+path any more."""
 
 from bolson_spark.operators.parse import (
     parse_json,
@@ -12,6 +14,7 @@ from bolson_spark.operators.seq import (
     add_seq,
     add_seq_by_partition,
     add_seq_scalable,
+    partition_layout,
 )
 from bolson_spark.operators.serialize import deserialize_ipc, serialize_ipc
 from bolson_spark.operators.pipeline import convert
@@ -24,6 +27,7 @@ __all__ = [
     "add_seq",
     "add_seq_scalable",
     "add_seq_by_partition",
+    "partition_layout",
     "add_batch_id",
     "rebatch",
     "batch_stats",

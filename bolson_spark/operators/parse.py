@@ -16,8 +16,9 @@ compiled to built-in expressions (``json_object_keys`` +
 vectorized, and Catalyst prunes it when ``strict=False``.
 
 Both strict parsers (``parse_json``, ``parse_json_arrow``) reject the
-same documents and emit the declared schema, nullability included: the
-convert path switches parser by batch size (``convert_routes``).
+same documents and emit the declared schema, nullability included:
+bulk ``convert()`` parses with the Arrow reader, the stream's
+micro-batch with Catalyst.
 """
 
 from __future__ import annotations

@@ -1,72 +1,23 @@
-"""The composed convert pipeline — parse -> seq -> rebatch [-> serialize].
+"""The composed convert pipeline — seq -> parse [-> serialize].
 
 This is the reference's converter thread loop (convert/converter.cpp:
 96-171: Parse -> Resize -> Serialize) as a declarative DataFrame
-composition; Spark tasks replace converter threads, Catalyst fuses the
-parse/seq/rebatch projections into one whole-stage-codegen span.
-
-The physical routes of the path — which parser, which seq — follow from
-the row count alone (``convert_routes``); ``convert()`` and ``bench
-convert`` take both from there. The stream's micro-batch takes only the
-parse: it numbers each source partition from its offset
-(``add_seq_by_partition``) and coalesces instead of ``rebatch``
-(``streaming/pipeline.py``).
+composition; Spark tasks replace converter threads. Like the reference
+(parse/parser.h:34-42) and the stream, ``convert()`` gives each input
+partition a contiguous seq range from its row count; the parse is the
+Arrow reader, where the stream's micro-batch parses with Catalyst.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT
-from bolson_spark.operators.parse import parse_json, parse_json_arrow
-from bolson_spark.operators.rebatch import rebatch
-from bolson_spark.operators.seq import add_seq, add_seq_scalable
+from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT, SEQ_COL
+from bolson_spark.operators.parse import parse_json_arrow
+from bolson_spark.operators.seq import add_seq, partition_layout
 from bolson_spark.operators.serialize import serialize_ipc
-
-# From this many rows the seq numbers through add_seq_scalable (three
-# bucket-parallel passes) instead of add_seq's single-reducer global
-# window: the two are parity-tested equal, and a 10M-row batch must not
-# serialize its numbering through one executor core.
-SEQ_SCALABLE_ROWS = 2_000_000
-
-# From this many rows the parse takes the Arrow C++ reader
-# (parse_json_arrow) instead of Catalyst's from_json: Arrow pays a
-# fixed Python-worker cost per task and wins on per-row cost. Measured
-# on the stream's micro-batch body (parse, seq, rebatch, serialize and
-# collect of one cached battery batch), local[4] on a 4-core VM, 8
-# interleaved pairs per size in alternating order, two runs at 10k, 20k
-# and 40k; median ms and pairs Arrow won:
-#
-#   rows   Catalyst     Arrow        Arrow won
-#   2k     966          1037         3/8
-#   10k    1091, 1001   1147, 928    4/8, 4/8
-#   15k    1015         1073         2/8
-#   20k    1111, 1034   986, 894     7/8, 7/8
-#   40k    1695, 1533   1448, 1382   8/8, 7/8
-#
-# That body still had a global window and a hash rebatch; the stream's
-# body now has neither, and the crossover has not been measured again.
-ARROW_PARSE_MIN_ROWS = 20_000
-
-
-def convert_routes(
-    rows: int | None,
-) -> tuple[Callable[..., DataFrame], Callable[..., DataFrame]]:
-    """The one route policy of the convert path: the (parse, seq)
-    functions for ``rows`` documents, ``None`` when unknown (bulk, where
-    per-row cost dominates). The scalable seq scans its input three
-    times; Catalyst's parse prunes to the order key in the key-only
-    passes, while ``mapInArrow`` is opaque and would re-parse, so it
-    pairs with Catalyst. Both parsers keep one strict contract, so the
-    route never changes which documents pass or the payload."""
-    if rows is not None and rows >= SEQ_SCALABLE_ROWS:
-        return parse_json, add_seq_scalable
-    if rows is None or rows >= ARROW_PARSE_MIN_ROWS:
-        return parse_json_arrow, add_seq
-    return parse_json, add_seq
 
 
 def convert(
@@ -78,24 +29,74 @@ def convert(
     max_rows: int = MAX_ROWS_DEFAULT,
     max_ipc_size: int = MAX_IPC_SIZE,
     serialize: bool = False,
-    rows: int | None = None,
 ) -> DataFrame:
-    """Raw JSON rows -> parsed + sequenced + rebatched [+ serialized].
+    """Raw JSON rows -> sequenced + parsed [+ serialized].
 
     The output rows (and each IPC payload) are ``bolson_seq`` followed
     by the schema fields — the reference's layout (parse/arrow.cpp:155)
-    and the stream's. ``order_by`` only orders the seq; it is dropped
-    after numbering. Rows are laid out by ``rebatch``'s seq blocks.
+    and the stream's. ``bolson_seq`` numbers the rows in ``order_by``
+    order, nulls first; the key is then dropped. The parse is strict.
 
-    The parse is strict (the reference's hard error on any bad
-    document). ``rows`` is the document count when the caller knows it;
-    ``convert_routes(rows)`` picks the parser and the seq from it. Every
-    route gives the same rows and payloads.
+    One key-only job runs when ``convert()`` is called: each input
+    partition's row count, null keys and key range. With no null key
+    and each non-empty partition's keys above the previous one's (a
+    file scan, a parallelized list), each partition is sorted locally
+    and numbered from its offset (``partition_layout``), with no
+    exchange. The input must then keep its partitioning for the job
+    that runs the result, as a file scan or a cached frame does; a row
+    whose key is outside its partition's measured range fails that job
+    (an uncached range exchange can move rows, see
+    ``add_seq_scalable``). Any other input takes ``add_seq``'s window.
     """
-    parse_fn, seq_fn = convert_routes(rows)
-    parsed = parse_fn(df, schema, json_col, keep=[order_by])
-    seqd = seq_fn(parsed, order_by).drop(order_by)
-    batched = rebatch(seqd, max_rows=max_rows)
+    key = F.col(order_by)
+    stats = sorted(
+        df.groupBy(F.spark_partition_id().alias("p"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(key).alias("keys"),
+            F.min(key).alias("lo"),
+            F.max(key).alias("hi"),
+        )
+        .collect(),
+        key=lambda r: r.p,
+    )
+    rising = all(r.n == r.keys for r in stats) and all(
+        a.hi < b.lo for a, b in zip(stats, stats[1:])
+    )
+    if rising:
+        parts = stats[-1].p + 1 if stats else 0
+        counts, lo, hi = [0] * parts, [None] * parts, [None] * parts
+        for r in stats:
+            counts[r.p], lo[r.p], hi[r.p] = r.n, r.lo, r.hi
+        key_type = T.ArrayType(df.schema[order_by].dataType)
+        pid = F.spark_partition_id() + 1
+
+        def bound(values: list) -> Column:
+            return F.try_element_at(
+                F.array(*[F.lit(v) for v in values]).cast(key_type), pid
+            )
+
+        # a filter is never pruned, so the guard runs in every job that
+        # reads the result, the key's own column dropped or not
+        guarded = df.where(
+            F.coalesce(
+                F.assert_true(
+                    key.between(bound(lo), bound(hi)),
+                    "bolson_spark: convert() input partitioning changed "
+                    "after its stats job (cache the input)",
+                ),
+                F.lit(True),
+            )
+        )
+        seqd = partition_layout(
+            guarded.sortWithinPartitions(order_by), counts, max_rows=max_rows
+        )
+    else:
+        seqd = add_seq(df, order_by)
+    # numbered before the parse, so the key never reaches Python
+    parsed = parse_json_arrow(
+        seqd.select(SEQ_COL, json_col), schema, json_col, keep=[SEQ_COL]
+    )
     if serialize:
-        return serialize_ipc(batched, max_rows=max_rows, max_ipc_size=max_ipc_size)
-    return batched
+        return serialize_ipc(parsed, max_rows=max_rows, max_ipc_size=max_ipc_size)
+    return parsed

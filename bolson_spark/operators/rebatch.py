@@ -11,19 +11,19 @@ Spark-first mapping: with contiguous ``bolson_seq`` starting at
 
 - ``add_batch_id``: the logical output batch, ``floor((seq - base) /
   max_rows)`` — evaluated inside whole-stage codegen, no shuffle.
-- ``rebatch``: the physical layout of the batch ``convert``, whose
-  global seq leaves rows in no useful partition order. Rows move in
-  blocks of ``4 * max_rows`` consecutive seqs, ``block = floor(seq /
-  (4 * max_rows))``, hash-partitioned on the block and sorted
-  by seq within each partition. The block boundaries are known from the
-  arithmetic, so unlike range partitioning there is no range-sampling
-  job. Hash collisions can put several non-adjacent blocks in one
-  partition; ``serialize_ipc`` slices within contiguous seq runs, so
-  every message still covers a contiguous seq range. The physical
-  zero-copy slicing happens there, on Arrow batches. The stream
-  micro-batch does not use it: ``add_seq_by_partition`` leaves each
-  source partition one contiguous seq run already, so a ``coalesce``
-  suffices there.
+- ``rebatch``: a physical seq-block layout, on no convert path: the
+  stream and ``convert()`` number each source partition from its
+  offset (``seq.partition_layout``), which leaves every partition one
+  contiguous seq run, or (``convert()``'s fallback) by ``add_seq``'s
+  window into one partition. It stays exported for
+  ``perfbench/convert.py``'s traced pass, which imports it; delete it
+  once that pass stops. Rows move in blocks of ``4 * max_rows``
+  consecutive seqs, ``block = floor(seq / (4 * max_rows))``,
+  hash-partitioned on the block and sorted by seq within each
+  partition, with no range-sampling job. Hash collisions can put
+  several non-adjacent blocks in one partition; ``serialize_ipc``
+  slices within contiguous seq runs, so every message still covers a
+  contiguous seq range.
 - ``batch_stats``: the per-slice seq-range stats that the reference's
   Resizer recomputes (resizer.cpp:27-42).
 """

@@ -29,11 +29,13 @@ Three implementations:
   silently mis-number. (Observable at scale; at toy scale AQE coalesces
   the shuffle to one partition, masking it.) Literal boundaries remove
   that failure mode and any AQE dependence.
-- ``add_seq_by_partition`` — the stream micro-batch's numbering: the
-  reference's per-buffer seq ranges (parser.h:34-42). Each source
-  partition takes a contiguous range from its row count, which the
-  caller measured on the same (cached) partitioning; no shuffle, sort
-  or window.
+- ``add_seq_by_partition`` — the reference's per-buffer seq ranges
+  (parser.h:34-42), the numbering of the stream's micro-batch and of
+  ``convert()``'s partition path. Each source partition takes a
+  contiguous range from its row count, which the caller measured on
+  the same partitioning; no shuffle, sort or window.
+  ``partition_layout`` adds the one layout step both callers share, a
+  ``coalesce``.
 """
 
 from __future__ import annotations
@@ -44,7 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bolson_spark import SEQ_COL
+from bolson_spark import MAX_ROWS_DEFAULT, SEQ_COL
 
 _NUMERIC_TYPES = (
     T.ByteType,
@@ -106,6 +108,24 @@ def add_seq_by_partition(
     )
     # Reference prepends bolson_seq at column index 0 (parse/arrow.cpp:155)
     return df.select((offset + local).alias(name), *df.columns)
+
+
+def partition_layout(
+    df: DataFrame,
+    counts: Sequence[int],
+    start: int = 0,
+    max_rows: int = MAX_ROWS_DEFAULT,
+) -> DataFrame:
+    """Each partition of ``df`` numbered from its offset after ``start``
+    (``add_seq_by_partition`` over the per-partition row ``counts``),
+    then coalesced to one partition per ``4 * max_rows`` rows. Both are
+    narrow, so the layout makes no exchange; source partitions keep
+    their rows, and ``serialize_ipc`` cuts its messages at the seq gaps
+    between the partitions a coalesce merged."""
+    n = int(sum(counts))
+    return add_seq_by_partition(df, counts, start=start).coalesce(
+        max(1, n // (4 * max_rows))
+    )
 
 
 def add_seq_scalable(

@@ -15,9 +15,9 @@ seq_last, num_rows, ipc_bytes)`` — the SerializedBatch/IpcQueueItem
 shape (convert/serializer.h:24-38) ready for a pub/sub sink.
 
 At 100 TB scale this is embarrassingly parallel: no shuffle is
-introduced here; upstream ``rebatch`` (``convert``) or the stream's
-``coalesce`` fixed the partitioning, and each task streams batches
-through Python with Arrow (vectorized, not row-at-a-time).
+introduced here; upstream ``partition_layout``'s ``coalesce`` or
+``add_seq``'s window fixed the partitioning, and each task streams
+batches through Python with Arrow (vectorized, not row-at-a-time).
 """
 
 from __future__ import annotations
@@ -83,12 +83,11 @@ def serialize_ipc(
             # slice WITHIN contiguous seq runs: the envelope contract
             # (FNC02) is that every message covers a contiguous,
             # non-overlapping seq range. A partition can legitimately
-            # hold several non-adjacent runs (rebatch's hash collisions
-            # put several blocks in one partition, sorted by seq; the
-            # stream's coalesce merges source partitions' runs) — a
-            # blind [off, off+max_rows)
-            # slice would span the gap and publish a message whose
-            # [seq_first, seq_last] covers rows it does not contain.
+            # hold several non-adjacent runs (partition_layout's
+            # coalesce merges source partitions' runs) — a blind
+            # [off, off+max_rows) slice would span the gap and publish
+            # a message whose [seq_first, seq_last] covers rows it
+            # does not contain.
             seqs_np = batch.column(seq_idx).to_numpy(
                 zero_copy_only=False
             )

@@ -63,11 +63,15 @@ def read_json_lines_stream(
 
 def read_socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
     """The literal TCP analog of the reference's illex client
-    (stream.cpp:127): one line per JSON document over a socket."""
+    (stream.cpp:127): one line per JSON document over a socket. Each
+    micro-batch is one partition (Spark's default deals its lines
+    round-robin over ``defaultParallelism``), so the stream's
+    partition-major seq is the socket's arrival order."""
     return (
         spark.readStream.format("socket")
         .option("host", host)
         .option("port", port)
+        .option("numPartitions", 1)
         .load()
     )
 

@@ -10,29 +10,28 @@ Spark mapping:
   ``format("text")`` for replayable tests, Kafka in production);
 - convert: the batch operators applied inside ``foreachBatch``, as
   three Spark jobs and no exchange: one stats job (each source
-  partition's row count and JSON bytes), one job that parses (strict),
-  numbers each source partition from its offset after a
-  driver-maintained base (``add_seq_by_partition``; replay-stable: a
-  replayed batch resolves to its original base and renumbers
-  identically), coalesces and IPC-serializes, and the sink write. The
-  stream does not use ``rebatch``: its rows already sit in contiguous
-  seq runs per partition;
+  partition's row count and JSON bytes), one job that parses (strict,
+  Catalyst), numbers each source partition from its offset after a
+  driver-maintained base and coalesces (``partition_layout``;
+  replay-stable: a replayed batch resolves to its original base and
+  renumbers identically), and IPC-serializes, and the sink write;
 - sink: IpcFileSink (schema handshake on start, append per batch);
 - drain: ``trigger(availableNow=True)`` + ``awaitTermination`` ==
   "process everything the source has, then stop" — the
   ``jsons_received == publish_count`` spin-loop without the spin.
 
-Ordering at scale: a single socket gives a total arrival order in the
-reference (stream.cpp:70 "TCP clients: 1"). Here seq is per-partition
-contiguous + a batch base — the documented semantics of §1.4
-(consumers re-sort by seq) — so only a single-partition source keeps
-the total order; Spark's socket source deals each micro-batch's lines
-round-robin over ``defaultParallelism`` partitions.
+Ordering: seq is per-partition contiguous + a batch base — the
+documented semantics of §1.4 (consumers re-sort by seq) — so it is the
+source's total arrival order exactly when each micro-batch is one
+partition. ``sources.read_socket_stream`` reads each micro-batch into
+one partition, so a socket stream numbers in arrival order, as the
+reference's single TCP client does (stream.cpp:70 "TCP clients: 1"); a
+file or Kafka source numbers each partition's rows in their own order,
+partitions in id order.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -42,9 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT
-from bolson_spark.operators.parse import as_declared, parse_json_quarantine
-from bolson_spark.operators.pipeline import convert_routes
-from bolson_spark.operators.seq import add_seq_by_partition
+from bolson_spark.operators.parse import as_declared, parse_json, parse_json_quarantine
+from bolson_spark.operators.seq import partition_layout
 from bolson_spark.operators.serialize import serialize_ipc
 from bolson_spark.schemas import spark_to_arrow_schema
 from bolson_spark.streaming.sink import PublishSink
@@ -175,22 +173,6 @@ def _write_seq_base(
     os.replace(tmp, base_file)
 
 
-def microbatch_layout(
-    parsed: DataFrame, counts: Sequence[int], base: int, max_rows: int
-) -> DataFrame:
-    """The stream's seq and layout of one parsed micro-batch: each
-    source partition numbered from its offset after ``base``
-    (``add_seq_by_partition`` over the per-partition row ``counts``),
-    then coalesced to one partition per ``4 * max_rows`` rows. Both are
-    narrow, so the micro-batch makes no exchange; source partitions
-    keep their rows, and ``serialize_ipc`` cuts its messages at the seq
-    gaps between the partitions a coalesce merged."""
-    n = int(sum(counts))
-    return add_seq_by_partition(parsed, counts, start=base).coalesce(
-        max(1, n // (4 * max_rows))
-    )
-
-
 @dataclass
 class StreamMetrics:
     """M1 analog (convert/metrics.h:26-56): counts reduced across
@@ -220,12 +202,9 @@ def run_stream_convert(
 ):
     """Start the convert stream; returns (query, metrics).
 
-    Each micro-batch takes its parse from
-    ``operators.pipeline.convert_routes`` at its measured row count, the
-    policy ``convert()`` uses: small batches parse with Catalyst, large
-    ones with the Arrow reader, both under one strict contract. The seq
-    is ``add_seq_by_partition`` over the per-partition row counts of the
-    batch's stats job, the layout a ``coalesce`` to one partition per
+    Each micro-batch parses with Catalyst (``parse_json``), and
+    ``partition_layout`` numbers it over the per-partition row counts of
+    the batch's stats job and coalesces it to one partition per
     ``4 * max_rows`` rows.
 
     ``on_error`` selects the failure posture: ``"fail"`` reproduces the
@@ -319,41 +298,28 @@ def run_stream_convert(
         batch_df = batch_df.cache()
         routed = parsed = ordered = ser = None
         try:
-            # one shuffle-free job: each row's source partition and
-            # JSON bytes (12 B a row to the driver); it also fills the
-            # cache, whose partitions every later job of the batch reads
-            stats = batch_df.select(
-                F.spark_partition_id().alias("p"),
-                F.octet_length(json_col).alias("b"),
-            ).toArrow()
-            n = stats.num_rows
-            if n == 0:
-                return
-            jb = pc.sum(stats.column("b")).as_py() or 0
             # order inside the micro-batch: each source partition's own
-            # row order, partitions in id order. Each partition numbers
-            # its rows from its own offset (add_seq_by_partition), so
-            # no job sorts them. A single-partition source gives the
-            # reference's total arrival order; Spark's socket source is
-            # not one (it deals a batch's lines round-robin over
-            # defaultParallelism partitions).
-            counts = np.bincount(stats.column("p").to_numpy())
+            # row order, partitions in id order; each partition numbers
+            # its rows from its own offset, so no job sorts them
             nq = 0
             if on_error == "quarantine":
                 routed = parse_json_quarantine(
-                    batch_df, schema, json_col
+                    batch_df.withColumn("_b", F.octet_length(json_col)),
+                    schema,
+                    json_col,
+                    keep=["_b"],
                 ).cache()
-                # one job over routed: each row's partition, whether it
-                # is clean, and a bad row's bytes
-                rstats = routed.select(
+                # one shuffle-free job over routed: each row's source
+                # partition, whether it is clean, and its JSON bytes; it
+                # also fills both caches, whose partitions every later
+                # job of the batch reads
+                stats = routed.select(
                     F.spark_partition_id().alias("p"),
                     F.col("quarantine_reason").isNull().alias("clean"),
-                    F.octet_length("raw").alias("bq"),
+                    F.col("_b").alias("b"),
                 ).toArrow()
-                clean = rstats.column("clean").to_numpy(zero_copy_only=False)
-                counts = np.bincount(rstats.column("p").to_numpy()[clean])
-                nq = n - int(clean.sum())
-                bq = pc.sum(rstats.column("bq")).as_py() or 0
+                clean = stats.filter(stats.column("clean"))
+                nq = stats.num_rows - clean.num_rows
                 if nq and quarantine_dir:
                     # a replay rewrites its own (run, batch) partition
                     # instead of duplicating rows, and a fresh-checkpoint
@@ -374,19 +340,25 @@ def run_stream_convert(
                 )
                 # keep per-doc metrics consistent: num_jsons AND
                 # json_bytes both count only the converted (clean) docs
-                n -= nq
-                jb -= bq
-                if n == 0:
-                    # nothing left to publish: the batch is complete
-                    # once the (idempotent) quarantine write landed, so
-                    # counting here cannot be replayed-and-recounted
-                    metrics.num_quarantined += nq
-                    return  # finally unpersists the caches
+                stats = clean
             else:
-                # the quarantine keeps its own parse (on_error is a
-                # semantic choice, not a route)
-                parse_fn, _ = convert_routes(n)
-                parsed = parse_fn(batch_df, schema, json_col)
+                # one shuffle-free job: each row's source partition and
+                # JSON bytes (12 B a row to the driver); it also fills
+                # the cache, whose partitions every later job reads
+                stats = batch_df.select(
+                    F.spark_partition_id().alias("p"),
+                    F.octet_length(json_col).alias("b"),
+                ).toArrow()
+                parsed = parse_json(batch_df, schema, json_col)
+            n = stats.num_rows
+            if n == 0:
+                # nothing to publish: the batch is complete once the
+                # (idempotent) quarantine write landed, so counting here
+                # cannot be replayed-and-recounted
+                metrics.num_quarantined += nq
+                return  # finally unpersists the caches
+            jb = pc.sum(stats.column("b")).as_py() or 0
+            counts = np.bincount(stats.column("p").to_numpy())
             # replay-stable base: a replayed batch id reuses its
             # original base (identical renumbering -> byte-identical
             # republished messages); persisted BEFORE the publish
@@ -400,7 +372,7 @@ def run_stream_convert(
                 parsed = parsed.cache()
                 parsed.count()
                 parsed_ts = _time.time()
-            ordered = microbatch_layout(parsed, counts, base, max_rows)
+            ordered = partition_layout(parsed, counts, base, max_rows)
             if staged:
                 ordered = ordered.cache()
                 ordered.count()

@@ -582,11 +582,10 @@ def test_cli_stream_latency_csv(spark, tmp_path, capsys):
 
 
 def test_cli_bench_convert_smoke(spark, capsys):
-    """`bench convert` times convert(..., serialize=True) at
-    rows=--num-jsons, reports at least ceil(num_jsons / max_rows)
-    messages and names the routes the policy chose."""
+    """`bench convert` times convert(..., serialize=True) over
+    arrival-ordered range partitions and reports at least
+    ceil(num_jsons / max_rows) messages."""
     assert main(["bench", "convert", "--num-jsons", "2000"]) == 0
     out = _out_line(capsys)
     assert out["num_jsons"] == 2000
     assert out["num_ipc"] >= 2 and out["ipc_mb"] > 0 and out["sec"] > 0
-    assert (out["parse"], out["seq"]) == ("parse_json", "add_seq")

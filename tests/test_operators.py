@@ -4,6 +4,7 @@ requirements (test/bolson/convert/test_convert.h tags cited inline)."""
 from __future__ import annotations
 
 import json
+import os
 import random
 
 import pytest
@@ -21,11 +22,6 @@ from bolson_spark.operators import (
     parse_json_arrow,
     serialize_ipc,
     validate_no_unexpected_fields,
-)
-from bolson_spark.operators.pipeline import (
-    ARROW_PARSE_MIN_ROWS,
-    SEQ_SCALABLE_ROWS,
-    convert_routes,
 )
 from bolson_spark.schemas import (
     BATTERY_SPARK,
@@ -386,54 +382,70 @@ def test_rebatch_invariants(spark):
     assert sum(r.rows for r in stats) == n
 
 
-def test_convert_routes_policy():
-    """The one route policy: the parse and seq of the convert path
-    follow from the row count alone."""
+def _convert_input(spark, keys, shape="ordered", docs=None):
+    """(arrival key, JSON doc) rows, one per key: "ordered" is a
+    parallelized list, whose four slices are contiguous in list order;
+    "shuffled" deals the same rows round-robin over three partitions."""
+    keys = list(keys)
+    docs = docs or ['{"voltage": [1]}'] * len(keys)
+    raw = spark.createDataFrame(
+        spark.sparkContext.parallelize(list(zip(keys, docs)), 4),
+        "arrival bigint, value string",
+    )
+    return raw.repartition(3) if shape == "shuffled" else raw
+
+
+def test_convert_routes_policy(spark):
+    """convert() numbers by partition offset exactly when its input's
+    non-empty partitions hold strictly rising ranges of non-null keys
+    (a tie inside a partition is fine); any other input takes
+    add_seq's window."""
+    from bolson_spark.operators import convert
+    from bolson_spark.plans import formatted_plan
+
+    ordered = list(range(40))  # slices 0-9, 10-19, 20-29, 30-39
+    inside_tie = ordered[:5] + [4] + ordered[6:]
+    boundary_tie = ordered[:10] + [9] + ordered[11:]
+    null_key = ordered[:15] + [None] + ordered[16:]
     table = [
-        (None, parse_json_arrow, add_seq),
-        (0, parse_json, add_seq),
-        (ARROW_PARSE_MIN_ROWS - 1, parse_json, add_seq),
-        (ARROW_PARSE_MIN_ROWS, parse_json_arrow, add_seq),
-        (SEQ_SCALABLE_ROWS - 1, parse_json_arrow, add_seq),
-        (SEQ_SCALABLE_ROWS, parse_json, add_seq_scalable),
-        (10 * SEQ_SCALABLE_ROWS, parse_json, add_seq_scalable),
+        (ordered, "ordered", False),
+        (inside_tie, "ordered", False),
+        ([], "ordered", False),
+        (ordered, "shuffled", True),
+        (ordered[::-1], "ordered", True),
+        (boundary_tie, "ordered", True),
+        (null_key, "ordered", True),
     ]
-    for rows, parse_fn, seq_fn in table:
-        assert convert_routes(rows) == (parse_fn, seq_fn), rows
+    for keys, shape, window in table:
+        df = convert(
+            _convert_input(spark, keys, shape), BATTERY_SPARK, "value", "arrival"
+        )
+        plan = formatted_plan(df)
+        assert ("Window" in plan) == window, (keys, shape)
+        assert ("Exchange" in plan) == window, (keys, shape)
 
 
-def _convert_payloads(spark, docs, schema, rows, max_rows):
-    """convert(..., serialize=True) of `docs` in arrival order at
-    `rows`: the message rows and their decoded tables."""
+def _convert_payloads(spark, docs, schema, shape, max_rows):
+    """convert(..., serialize=True) of `docs` in arrival order from an
+    input of `shape`: the message rows and their decoded tables."""
     import pyarrow as pa
 
     from bolson_spark.operators import convert
 
-    raw = spark.createDataFrame(
-        list(enumerate(docs)), "arrival bigint, value string"
-    ).repartition(3)
+    raw = _convert_input(spark, range(len(docs)), shape, docs)
     out = convert(
-        raw, schema, "value", "arrival", max_rows=max_rows,
-        serialize=True, rows=rows,
+        raw, schema, "value", "arrival", max_rows=max_rows, serialize=True
     ).collect()
     return raw, out, [pa.ipc.open_stream(r.payload).read_all() for r in out]
 
 
-# ids name the (parse, seq) route that convert_routes picks for `rows`
-@pytest.mark.parametrize(
-    "rows",
-    [
-        pytest.param(None, id="arrow-exact"),
-        pytest.param(3000, id="catalyst-exact"),
-        pytest.param(SEQ_SCALABLE_ROWS, id="catalyst-scalable"),
-    ],
-)
-def test_convert_serialize_layout_and_content(spark, rows):
+@pytest.mark.parametrize("shape", ["ordered", "shuffled"])
+def test_convert_serialize_layout_and_content(spark, shape):
     """convert(..., serialize=True): the payload is bolson_seq plus the
     schema fields, typed as the stream's handshake declares; every
     message covers a contiguous seq run of at most max_rows; the runs
-    tile 0..n-1; the rows equal a from_json parse. `rows` only picks the
-    route."""
+    tile 0..n-1; the rows equal a from_json parse. Ordered input is
+    numbered by partition offset, shuffled input by add_seq's window."""
     from bolson_spark.schemas import spark_to_arrow_schema
 
     n, max_rows = 3000, 256
@@ -442,7 +454,7 @@ def test_convert_serialize_layout_and_content(spark, rows):
         json.dumps({"voltage": [rng.randint(0, 9999) for _ in range(i % 4)]})
         for i in range(n)
     ]
-    raw, out, tables = _convert_payloads(spark, docs, BATTERY_SPARK, rows, max_rows)
+    raw, out, tables = _convert_payloads(spark, docs, BATTERY_SPARK, shape, max_rows)
     handshake = spark_to_arrow_schema(
         T.StructType(
             [T.StructField("bolson_seq", T.LongType(), False)]
@@ -478,9 +490,9 @@ def test_convert_serialize_layout_and_content(spark, rows):
 
 
 def test_convert_routes_give_equal_payloads(spark):
-    """The wide trip schema through the Arrow route (rows=None) and the
-    Catalyst route (rows=3000): every payload carries the handshake
-    schema, and the decoded tables are equal."""
+    """The wide trip schema from ordered input (numbered by partition
+    offset) and from shuffled input (add_seq's window): every payload
+    carries the handshake schema, and the decoded tables are equal."""
     import pyarrow as pa
 
     from bolson_spark.schemas import spark_to_arrow_schema
@@ -493,12 +505,53 @@ def test_convert_routes_give_equal_payloads(spark):
         )
     )
     decoded = []
-    for rows in (None, 3000):
-        _, _, tables = _convert_payloads(spark, docs, TRIP_SPARK, rows, 512)
-        assert all(t.schema == handshake for t in tables), rows
+    for shape in ("ordered", "shuffled"):
+        _, _, tables = _convert_payloads(spark, docs, TRIP_SPARK, shape, 512)
+        assert all(t.schema == handshake for t in tables), shape
         decoded.append(pa.concat_tables(tables).sort_by("bolson_seq"))
     assert decoded[0].num_rows == 3000
     assert decoded[0].equals(decoded[1])
+
+
+def test_convert_ordered_input_runs_three_jobs(spark):
+    """A convert(..., serialize=True) pass over ordered input runs at
+    most three Spark jobs: the stats aggregate (its map stage and its
+    result) and the job that consumes the output."""
+    from bolson_spark.operators import convert
+
+    sc = spark.sparkContext
+    group = "convert-ordered-jobs"
+    raw = _convert_input(spark, range(3000))
+    sc.setJobGroup(group, "convert() job count")
+    try:
+        convert(raw, BATTERY_SPARK, "value", "arrival", serialize=True).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, sorted(jobs)
+
+
+def test_convert_refuses_changed_partitioning(spark, tmp_path):
+    """The partition path numbers rows from the counts its stats job
+    measured. When a key leaves its partition's measured range before
+    the numbering job runs (here the key flips sign once a flag file
+    exists, created after convert() returns), that job fails instead of
+    publishing wrong seqs — even though the key column is dropped."""
+    from bolson_spark.operators import convert
+
+    flag = str(tmp_path / "flip")
+
+    def flip(i):
+        return -i if os.path.exists(flag) else i
+
+    key = F.udf(flip, "bigint").asNondeterministic()
+    raw = _convert_input(spark, range(100)).withColumn("k", key("arrival"))
+    out = convert(raw, BATTERY_SPARK, "value", "k", serialize=True)
+    open(flag, "w").close()
+    with pytest.raises(Exception, match="partitioning changed"):
+        out.select("seq_first").collect()
 
 
 # --- Z1 serialize ---------------------------------------------------------

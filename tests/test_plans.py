@@ -67,7 +67,7 @@ def test_stream_microbatch_plan_is_exchange_free(spark):
     (plans/r14/stream_microbatch_{before,after}.txt)."""
     from bolson_spark.operators import parse_json, serialize_ipc
     from bolson_spark.schemas import BATTERY_SPARK
-    from bolson_spark.streaming.pipeline import microbatch_layout
+    from bolson_spark.operators.seq import partition_layout
 
     batch = (
         spark.range(0, 3000, 1, 3)
@@ -77,7 +77,7 @@ def test_stream_microbatch_plan_is_exchange_free(spark):
     try:
         parsed = parse_json(batch, BATTERY_SPARK, "value")
         ser = serialize_ipc(
-            microbatch_layout(parsed, [1000, 1000, 1000], 0, 256), max_rows=256
+            partition_layout(parsed, [1000, 1000, 1000], 0, 256), max_rows=256
         )
         plan = formatted_plan(ser)
         for node in ("Exchange", "Window", "Sort"):
@@ -90,18 +90,23 @@ def test_stream_microbatch_plan_is_exchange_free(spark):
 
 
 def test_convert_routes_plans(spark):
-    """convert()'s plan follows convert_routes: at rows=None (bulk) the
-    Arrow parse adds a second MapInArrow node next to serialize's; at
-    2000 rows, a stream-sized micro-batch, only serialize's remains
-    (plans/r13/convert_routes_{bulk,microbatch}.txt)."""
+    """convert() over ordered input (range partitions, the shape of a
+    file scan) numbers each partition from its offset: no Exchange and
+    no Window node (the local sort is elided too, as a range reports its
+    order), and two MapInArrow nodes, the Arrow parse and serialize
+    (plans/r15/convert_{before,after}.txt)."""
     from bolson_spark.operators import convert
     from bolson_spark.schemas import BATTERY_SPARK
 
-    raw = spark.range(10).selectExpr("id AS _ln", "'{\"voltage\": [1]}' AS value")
-    for rows, nodes in ((None, 2), (2000, 1)):
-        df = convert(raw, BATTERY_SPARK, "value", "_ln", serialize=True, rows=rows)
-        plan = formatted_plan(df)
-        assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == nodes, plan
+    raw = spark.range(0, 3000, 1, 3).selectExpr(
+        "id AS _ln", "concat('{\"voltage\": [', id, ']}') AS value"
+    )
+    plan = formatted_plan(
+        convert(raw, BATTERY_SPARK, "value", "_ln", serialize=True)
+    )
+    for node in ("Exchange", "Window", "Sort"):
+        assert not re.search(rf"^\(\d+\) {node}", plan, re.M), plan
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 2, plan
 
 
 def test_semi_anti_joins_compile_to_joins(spark):

@@ -3,15 +3,17 @@ the Spark analog of the reference's seeded randomized generation
 (SURVEY.md §5.3: GenerateJSONs with schema min/max metadata, seed 0).
 
 Invariants asserted for ARBITRARY inputs, not just the fixture corpus:
-- FNC02: one output row per input JSON, across parse → seq → rebatch →
-  serialize → deserialize.
-- FNC03: information equality after the full IPC roundtrip.
+- FNC02: one output row per input JSON, across parse → seq → serialize →
+  deserialize, both composed by hand and through ``convert()``.
+- FNC03: information equality after the full IPC roundtrip, with seq
+  in arrival-key order.
 - Envelope: every IPC message holds <= max_rows rows; per-message seq
   ranges are contiguous, non-overlapping, and cover exactly [0, n).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 
 from hypothesis import HealthCheck, given, settings
@@ -20,6 +22,7 @@ from pyspark.sql import functions as F
 
 from bolson_spark.operators import (
     add_seq,
+    convert,
     deserialize_ipc,
     parse_json,
     serialize_ipc,
@@ -34,29 +37,10 @@ battery_doc = st.lists(
 )
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    derandomize=True,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    docs=st.lists(battery_doc, min_size=1, max_size=200),
-    max_rows=st.integers(min_value=1, max_value=64),
-)
-def test_convert_roundtrip_property(spark, docs, max_rows):
-    df = spark.createDataFrame(
-        [(i, json.dumps({"voltage": v})) for i, v in enumerate(docs)],
-        ["arrival", "value"],
-    )
-    parsed = parse_json(df, BATTERY_SPARK, "value", keep=["arrival"])
-    seqd = (
-        add_seq(parsed, "arrival")
-        .drop("arrival")
-        .repartitionByRange(2, F.col("bolson_seq"))
-        .sortWithinPartitions("bolson_seq")
-    )
-    ser = serialize_ipc(seqd, max_rows=max_rows).cache()
+def _assert_roundtrip(ser, docs, keys, max_rows):
+    """The messages of `ser` tile seqs 0..n-1 in contiguous runs of at
+    most max_rows rows, and decode to `docs` in `keys` order (nulls
+    first; docs with equal keys may take their seqs in any order)."""
     msgs = ser.collect()
     n = len(docs)
     # envelope invariants
@@ -71,9 +55,64 @@ def test_convert_roundtrip_property(spark, docs, max_rows):
     back = deserialize_ipc(
         ser, "bolson_seq bigint, voltage array<bigint>"
     ).collect()
-    ser.unpersist()
     got = {r.bolson_seq: list(r.voltage) for r in back}
-    assert got == {i: v for i, v in enumerate(docs)}
+    order = sorted(range(n), key=lambda i: (keys[i] is not None, keys[i] or 0))
+    for _, tie in itertools.groupby(enumerate(order), key=lambda t: keys[t[1]]):
+        tie = list(tie)
+        assert sorted(got[s] for s, _ in tie) == sorted(docs[i] for _, i in tie)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    docs=st.lists(battery_doc, min_size=1, max_size=200),
+    max_rows=st.integers(min_value=1, max_value=64),
+    parts=st.integers(min_value=1, max_value=4),
+    shape=st.sampled_from(
+        ["contiguous", "round_robin", "null_key", "boundary_tie"]
+    ),
+)
+def test_convert_roundtrip_property(spark, docs, max_rows, parts, shape):
+    """Docs keyed by arrival id, in `parts` contiguous slices or dealt
+    round-robin; "null_key" nulls one key and "boundary_tie" repeats
+    the last key of the first slice at the start of the next. The
+    hand-composed parse -> add_seq -> serialize path and ``convert()``
+    both number the docs in key order."""
+    n = len(docs)
+    keys = list(range(n))
+    if shape == "null_key":
+        keys[n // 2] = None
+    if shape == "boundary_tie" and n > 1:
+        b = max(1, n // parts)  # the first key of parallelize's 2nd slice
+        keys[b] = keys[b - 1]
+    rows = [(k, json.dumps({"voltage": v})) for k, v in zip(keys, docs)]
+    schema = "arrival bigint, value string"
+    if shape == "round_robin":
+        df = spark.createDataFrame(rows, schema).repartition(parts)
+    else:
+        df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+    parsed = parse_json(df, BATTERY_SPARK, "value", keep=["arrival"])
+    seqd = (
+        add_seq(parsed, "arrival")
+        .drop("arrival")
+        .repartitionByRange(2, F.col("bolson_seq"))
+        .sortWithinPartitions("bolson_seq")
+    )
+    for ser in (
+        serialize_ipc(seqd, max_rows=max_rows),
+        convert(
+            df, BATTERY_SPARK, "value", "arrival", max_rows=max_rows, serialize=True
+        ),
+    ):
+        ser = ser.cache()
+        try:
+            _assert_roundtrip(ser, docs, keys, max_rows)
+        finally:
+            ser.unpersist()
 
 
 @settings(

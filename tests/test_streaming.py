@@ -77,21 +77,11 @@ def test_stream_convert_end_to_end(spark, tmp_path, jsonl_dir):
     )
 
 
-def test_stream_convert_arrow_parser(spark, tmp_path, monkeypatch):
-    """A micro-batch of ARROW_PARSE_MIN_ROWS docs takes the Arrow parse
-    route (convert_routes) through the stream end to end: drain parity,
-    payloads with the handshake schema, contiguous seqs, equal docs."""
-    import bolson_spark.operators.pipeline as routes
-
-    n = routes.ARROW_PARSE_MIN_ROWS
-    calls = []
-    real = routes.parse_json_arrow
-
-    def spy(*a, **kw):
-        calls.append(a[0])
-        return real(*a, **kw)
-
-    monkeypatch.setattr(routes, "parse_json_arrow", spy)
+def test_stream_convert_20k_doc_microbatch(spark, tmp_path):
+    """One 20k-doc micro-batch through the stream end to end: drain
+    parity, payloads with the handshake schema, contiguous seqs, equal
+    docs."""
+    n = 20_000
     rng = random.Random(4)
     docs = [
         {"voltage": [rng.randint(0, 2047) for _ in range(rng.randint(1, 16))]}
@@ -113,7 +103,7 @@ def test_stream_convert_arrow_parser(spark, tmp_path, monkeypatch):
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     query.awaitTermination(120)
-    assert metrics.batches == [n] and len(calls) == 1
+    assert metrics.batches == [n]
     out_schema = T.StructType(
         [T.StructField("bolson_seq", T.LongType(), False)] + BATTERY_SPARK.fields
     )
@@ -230,6 +220,33 @@ def test_stream_microbatch_runs_three_jobs(spark, tmp_path):
     assert metrics.batches == [2000]
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
     assert 1 <= len(jobs) <= 3, sorted(jobs)
+
+
+def test_stream_quarantine_microbatch_job_counts(spark, tmp_path):
+    """A quarantine micro-batch runs one stats job over its routed rows:
+    at most three jobs when every document is clean (stats, serialize,
+    sink write) and four with bad documents (plus the dead-letter
+    write)."""
+    for name, bad in (("clean", 0), ("bad", 3)):
+        src = tmp_path / name
+        src.mkdir()
+        lines = [json.dumps({"voltage": [i]}) for i in range(500)]
+        lines[:bad] = ['{"voltage": [1]'] * bad
+        (src / "one.jsonl").write_text("\n".join(lines) + "\n")
+        query, metrics = run_stream_convert(
+            spark.readStream.format("text").load(str(src)),
+            BATTERY_SPARK,
+            IpcFileSink(str(tmp_path / f"topic_{name}")),
+            checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+            on_error="quarantine",
+            quarantine_dir=str(tmp_path / f"quarantine_{name}"),
+        )
+        query.awaitTermination(120)
+        assert metrics.batches == [500 - bad] and metrics.num_quarantined == bad
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+            str(query.runId)
+        )
+        assert 1 <= len(jobs) <= 3 + (bad > 0), (name, sorted(jobs))
 
 
 def test_schema_handshake_rejects_mismatch(tmp_path):
@@ -733,7 +750,8 @@ def test_stream_convert_over_tcp_socket(spark, tmp_path):
     """The literal S1 interface: line-framed JSON over a TCP socket
     (stream.cpp:127-161). A server thread plays the reference's JSON
     producer; the socket-source query converts until all documents have
-    drained, then stops — received == published, seq contiguous."""
+    drained, then stops — received == published, seq contiguous and in
+    arrival order."""
     import socket
     import threading
     import time
@@ -788,9 +806,10 @@ def test_stream_convert_over_tcp_socket(spark, tmp_path):
         msgs, "bolson_seq bigint, voltage array<bigint>"
     ).collect()
     assert sorted(r.bolson_seq for r in back) == list(range(len(docs)))
-    assert sorted(tuple(r.voltage) for r in back) == sorted(
-        tuple(d["voltage"]) for d in docs
-    )
+    # one socket, one partition per micro-batch: seq is arrival position
+    assert [r.voltage for r in sorted(back, key=lambda r: r.bolson_seq)] == [
+        d["voltage"] for d in docs
+    ]
 
 
 try:
