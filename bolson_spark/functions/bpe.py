@@ -26,42 +26,24 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _merge_pair_col(syms: Column, left: str, right: str) -> Column:
-    """Apply one BPE merge to a symbol array: leftmost-first greedy
-    replacement of adjacent (left, right) with left+right, as a single
-    left-to-right aggregate fold (matches the sequential semantics of
-    the reference algorithm — a merged symbol cannot re-pair with the
-    element it just consumed)."""
-    a, b = F.lit(left), F.lit(right)
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == a)
-            & (s == b),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.concat(a, b)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
 def _sql_str(s: str) -> str:
     """A Spark-SQL single-quoted string literal for `s`."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _merge_pair_sql(inner: str, left: str, right: str) -> str:
-    """SQL-text twin of :func:`_merge_pair_col` over the expression
-    text `inner` — the `double_array_lit` move applied to the merge
-    chain: building the 12-level fold through the Column API costs
-    ~75 ms of py4j round trips PER MERGE (0.85 s for a 12-merge chain,
-    measured, an SF-independent driver constant), while formatting the
-    text here and letting the JVM parse it once is ~8x faster and
-    parses to the same expression tree (differential-checked:
-    exceptAll both ways == 0 on the corpus)."""
+    """Apply one BPE merge to the symbol array whose SQL text is
+    `inner`: leftmost-first greedy replacement of adjacent (left,
+    right) with left+right, as a single left-to-right aggregate fold
+    (matches the sequential semantics of the reference algorithm — a
+    merged symbol cannot re-pair with the element it just consumed).
+
+    Returned as SQL TEXT, not a Column — the `double_array_lit` move
+    applied to the merge chain: building the 12-level fold through
+    the Column API cost ~75 ms of py4j round trips PER MERGE (0.85 s
+    for a 12-merge chain, measured, an SF-independent driver
+    constant), while formatting the text here and letting the JVM
+    parse it once is ~8x faster."""
     a, b = _sql_str(left), _sql_str(right)
     ab = _sql_str(left + right)
     return (
@@ -116,12 +98,14 @@ def bpe_train(
       (localCheckpoint), count it, and pick — driver loop at or under
       `driver_vocab_cap` rows, distributed loop above. There is no
       input on which this collects an unbounded table.
-    - ``"driver"`` / ``"distributed"``: force a path (tests assert the
-      two produce identical merge tables).
+    - ``"driver"`` / ``"distributed"``: force a path. Both routes stay
+      because ``"auto"`` picks between them from the vocabulary size
+      it measures, and each is the independent check on the other
+      (tests assert identical merge tables).
 
     The distributed loop runs one `groupBy(pair).sum(freq)` + a
     1-row collect per merge round over the vocabulary table, applies
-    the merge as the same `_merge_pair_col` codegen expression the
+    the merge as the same `_merge_pair_sql` codegen expression the
     encoder uses, and localCheckpoints per round to truncate lineage
     — O(rounds) jobs over |vocab| rows, O(1) driver transfer.
 
@@ -195,7 +179,7 @@ def _bpe_train_distributed(
     """The scale path of :func:`bpe_train`: the merge loop as Spark
     jobs over the (word, freq) table. Per round: adjacent-pair explode
     -> map-side-combined `groupBy(pair).sum(freq)` -> collect exactly
-    ONE winning row -> apply the merge with the same `_merge_pair_col`
+    ONE winning row -> apply the merge with the same `_merge_pair_sql`
     codegen fold the encoder uses -> localCheckpoint (truncates the
     per-round lineage so the merge expression doesn't nest). Driver
     transfer is one row per round; the vocabulary never leaves the
@@ -236,24 +220,14 @@ def _bpe_train_distributed(
     return merges
 
 
-def bpe_encode_col(
-    col: Column | str, merges: list[tuple[str, str, int]]
-) -> Column:
-    """Tokenize a word column with a learned merge table: char split,
-    then the merges applied in training order (a static expression
-    chain — the merge table is tiny and enters the plan as literals).
-
-    Pass the column NAME (str) where possible: the whole chain is then
-    formatted as SQL text and parsed by the JVM in ONE call
-    (:func:`_merge_pair_sql` — 0.85 s -> 0.10 s driver time for a
-    12-merge chain, measured, SF-independent). A Column input takes
-    the per-merge Column-API route (same expression, more py4j)."""
-    if isinstance(col, str):
-        inner = f"split({col}, '')"
-        for left, right, _ in merges:
-            inner = _merge_pair_sql(inner, left, right)
-        return F.expr(inner)
-    syms = F.split(col, "")
+def bpe_encode_col(col: str, merges: list[tuple[str, str, int]]) -> Column:
+    """Tokenize the word column named `col` with a learned merge table:
+    char split, then the merges applied in training order (a static
+    expression chain — the merge table is tiny and enters the plan as
+    literals). The whole chain is formatted as SQL text and parsed by
+    the JVM in ONE call (:func:`_merge_pair_sql` — 0.85 s -> 0.10 s
+    driver time for a 12-merge chain, measured, SF-independent)."""
+    inner = f"split({col}, '')"
     for left, right, _ in merges:
-        syms = _merge_pair_col(syms, left, right)
-    return syms
+        inner = _merge_pair_sql(inner, left, right)
+    return F.expr(inner)

@@ -238,6 +238,11 @@ def minhash_signature(
     the rest is integer arithmetic inside whole-stage codegen; the
     identical formula runs in the DuckDB oracle via
     CAST('0x'||substr(md5(w),..) AS BIGINT). No Python anywhere.
+
+    The production minhash queries build their signatures in
+    :func:`_minhash_prep`; this Column-API build, with
+    :func:`band_keys_from_signature`, is kept as the independent check
+    on it (their band-key rows are tested equal).
     """
     tok = F.array_distinct(tokens(F.col(text_col)))
     md5s = F.transform(tok, lambda w: F.md5(w))
@@ -268,7 +273,9 @@ def band_keys_from_signature(
 ) -> DataFrame:
     """(doc_id, band, band_key) rows from a minhash signature frame:
     band b's key = md5('|'.join(mh[b*r .. b*r+r-1])). Narrow map +
-    posexplode — the bucket join key for LSH candidate generation."""
+    posexplode — the bucket join key for LSH candidate generation.
+    Kept, with :func:`minhash_signature`, as the independent check on
+    :func:`_minhash_prep`'s band keys (tested equal)."""
     bands = choose_bands(num_hashes) if bands is None else bands
     r = num_hashes // bands
     # Band key = first 60 bits of md5 as a BIGINT, not the 32-char hex
@@ -301,61 +308,6 @@ def band_keys_from_signature(
     return sig.select(
         "doc_id", F.posexplode(keys).alias("band", "band_key")
     )
-
-
-def band_keys_vectorized(
-    col: Column,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int | None = None,
-) -> Column:
-    """Arrow-batched pandas_udf computing the SAME band keys as the
-    declarative minhash_signature → band_keys_from_signature path
-    (tested equal) — kept as the engine's second physical
-    implementation of the minhash operator, mirroring the reference's
-    CPU-vs-FPGA dual execution of one logical parse op."""
-    import hashlib
-
-    bands = choose_bands(num_hashes) if bands is None else bands
-    rows_per_band = num_hashes // bands
-
-    @F.pandas_udf("array<long>")
-    def _keys(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            toks = list(dict.fromkeys(text.split(" ")))
-            hs = [
-                (
-                    int.from_bytes(d[:4], "big"),
-                    int.from_bytes(d[4:8], "big"),
-                )
-                for d in (
-                    hashlib.md5(w.encode("utf-8")).digest() for w in toks
-                )
-            ]
-            mh = [
-                min((hi + i * lo) % (1 << 32) for hi, lo in hs)
-                for i in range(num_hashes)
-            ]
-            out.append(
-                [
-                    # same 60-bit md5 truncation as the declarative path
-                    int(
-                        hashlib.md5(
-                            "|".join(
-                                str(v)
-                                for v in mh[
-                                    b * rows_per_band : (b + 1) * rows_per_band
-                                ]
-                            ).encode("utf-8")
-                        ).hexdigest()[:15],
-                        16,
-                    )
-                    for b in range(bands)
-                ]
-            )
-        return pd.Series(out)
-
-    return _keys(col)
 
 
 def _set_fingerprint(col: Column) -> Column:
@@ -1155,6 +1107,10 @@ def simhash64(col: Column) -> Column:
     independent aggregates) re-evaluates the md5-per-token subtree 64
     times — O(64·|tokens|) hashes instead of O(|tokens|) — and is
     ~25× slower at any scale.
+
+    The registry runs :func:`simhash64_vectorized`; this JVM build is
+    kept as its independent check (same bits by a different engine,
+    tested equal).
     """
     tok = F.array_distinct(tokens(col))
     # One md5 per token, split into two 32-bit halves (conv of 8 hex

@@ -173,17 +173,45 @@ TOP_NGRAM_CHAR_FRAC_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 DUP_NGRAM_CHAR_FRAC_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12}
 
 
-def _repetition_metrics_local(
-    df: DataFrame, text_col: str, ns: list[int]
-) -> DataFrame:
-    """Zero-shuffle route of :func:`repetition_metrics` (the default;
-    see its docstring): per n, the doc's gram array is sorted and
-    folded ONCE — runs of adjacent equal grams are the per-gram
-    counts, visited in ascending gram order. The fold accumulators
-    mirror char_entropy's sorted-run recipe; all arithmetic is the
-    same integer c * length(gram) the shuffle routes aggregate, so
-    the rounded fractions are bit-identical."""
+def repetition_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """The FULL Gopher repetition-signal family (Rae et al. 2021,
+    Table A1) in its published CHARACTER-fraction form — complementing
+    the registry's existing repetition slots (quality_metrics: top-
+    bigram SLOT fraction; gopher_repetition: top-word slot + dup-
+    trigram OCCURRENCE fractions; dup_ngram_fraction: cross-document
+    distinct-8-gram overlap) with the per-n character coverage the
+    paper actually thresholds on:
+
+    - ``top{n}_char_frac`` (n=2,3,4): characters attributed to the
+      single most frequent n-gram, ``count * chars(gram) / chars(doc)``
+      — the standard published approximation (overlapping occurrences
+      count their characters independently, so the fraction can
+      exceed 1 on degenerate input; thresholds are far below that).
+      Ties on count break by gram ASC, so the metric is deterministic
+      and engine-independent.
+    - ``dup{n}_char_frac`` (n=5,6,7,8): characters attributed to ALL
+      occurrences of n-grams appearing >= 2 times,
+      ``sum(count * chars(gram)) / chars(doc)`` (same convention).
+    - ``keep``: TRUE iff every fraction is within its Table A1
+      threshold (TOP_NGRAM_CHAR_FRAC_MAX / DUP_NGRAM_CHAR_FRAC_MAX).
+
+    One row per input document; NULL/too-short text reports zero
+    fractions and keep=TRUE (nothing repeats in it — the same
+    manifest contract as dup_span_coverage).
+
+    Scale shape: one narrow map, no gram shuffle. Every (doc, n, gram)
+    group lives entirely inside one row's gram array, so the count
+    never needs an exchange: per n, sort the doc's gram array and fold
+    it once (the char_entropy sorted-run recipe) — adjacent equal
+    grams form runs; walking runs in ascending gram order makes "first
+    strictly-greater count wins" exactly the count-DESC, gram-ASC
+    tie-break; dup sums accumulate run_len * chars(gram) for runs
+    >= 2. O(L log L) per doc in whole-stage codegen, no explode, no
+    join back. Fractions are a single integer division rounded to 6,
+    the documented cross-engine float recipe."""
     from bolson_spark.functions.dedup import _spread
+
+    ns = sorted(TOP_NGRAM_CHAR_FRAC_MAX) + sorted(DUP_NGRAM_CHAR_FRAC_MAX)
 
     # the fold is CPU per row, not bytes — decouple map parallelism
     # from file layout when the input is under-split (no-op at scale)
@@ -198,8 +226,8 @@ def _repetition_metrics_local(
     # sf0.1), an SF-independent driver constant. The SQL below mirrors
     # the former Column tree field for field (explicit bigint casts
     # keep accumulator types identical); results are pinned by the
-    # hand-computed fixture test, the three-route exceptAll parity
-    # test (string/hash routes untouched), and the DuckDB oracle.
+    # hand-computed fixture test and by the DuckDB oracle, on the
+    # registry corpus and on a crafted tie/degenerate corpus.
 
     def grams_sql(n: int) -> str:
         # one gram stream per n, sorted so adjacent equals form runs;
@@ -280,291 +308,6 @@ def _repetition_metrics_local(
     }
     out = staged.select(
         "doc_id", "n_chars", *[frac(n).alias(cols[n]) for n in ns]
-    )
-    keep = F.lit(True)
-    for n, t in TOP_NGRAM_CHAR_FRAC_MAX.items():
-        keep = keep & (F.col(f"top{n}_char_frac") <= t)
-    for n, t in DUP_NGRAM_CHAR_FRAC_MAX.items():
-        keep = keep & (F.col(f"dup{n}_char_frac") <= t)
-    return out.withColumn("keep", keep)
-
-
-def repetition_metrics(
-    df: DataFrame, text_col: str = "text", gram_shuffle: str = "local"
-) -> DataFrame:
-    """The FULL Gopher repetition-signal family (Rae et al. 2021,
-    Table A1) in its published CHARACTER-fraction form — complementing
-    the registry's existing repetition slots (quality_metrics: top-
-    bigram SLOT fraction; gopher_repetition: top-word slot + dup-
-    trigram OCCURRENCE fractions; dup_ngram_fraction: cross-document
-    distinct-8-gram overlap) with the per-n character coverage the
-    paper actually thresholds on:
-
-    - ``top{n}_char_frac`` (n=2,3,4): characters attributed to the
-      single most frequent n-gram, ``count * chars(gram) / chars(doc)``
-      — the standard published approximation (overlapping occurrences
-      count their characters independently, so the fraction can
-      exceed 1 on degenerate input; thresholds are far below that).
-      Ties on count break by gram ASC, so the metric is deterministic
-      and engine-independent.
-    - ``dup{n}_char_frac`` (n=5,6,7,8): characters attributed to ALL
-      occurrences of n-grams appearing >= 2 times,
-      ``sum(count * chars(gram)) / chars(doc)`` (same convention).
-    - ``keep``: TRUE iff every fraction is within its Table A1
-      threshold (TOP_NGRAM_CHAR_FRAC_MAX / DUP_NGRAM_CHAR_FRAC_MAX).
-
-    One row per input document; NULL/too-short text reports zero
-    fractions and keep=TRUE (nothing repeats in it — the same
-    manifest contract as dup_span_coverage).
-
-    Scale shape: ONE pass builds all seven gram streams per document
-    (bind_array'd split — the r9 HOF-capture discipline — then a
-    single explode of (n, gram) structs: ~7x n_tokens fixed-width-ish
-    rows/doc); the per-(doc, n, gram) count is one map-side-combined
-    aggregation; the top-gram pick is a window bounded per (doc, n);
-    everything pivots back with conditional aggregation — two
-    shuffles total, both keyed by doc_id(+gram). Fractions are a
-    single integer division rounded to 6, the documented cross-engine
-    float recipe.
-
-    ``gram_shuffle`` picks the physical shape of the gram counting
-    (r9 VERDICT #4 / r10 optimization — identical results, measured
-    against each other in SCALING.md):
-
-    - ``"local"`` (default, r10): ZERO-shuffle narrow map. Every
-      (doc, n, gram) group lives entirely inside one row's gram
-      array, so the count never needs an exchange: per n, sort the
-      doc's gram array and fold it once (the char_entropy sorted-run
-      recipe) — adjacent equal grams form runs; walking runs in
-      ascending gram order makes "first strictly-greater count wins"
-      exactly the count-DESC, gram-ASC tie-break; dup sums accumulate
-      run_len * chars(gram) for runs >= 2. O(L log L) per doc in
-      whole-stage codegen, no explode (the shuffle routes materialize
-      ~7x n_tokens gram rows), no join back. guide §2.4: remove
-      shuffles outright.
-    - ``"string"``: the (doc, n, gram) rows carry the gram
-      STRING — chars(gram) and the gram-ASC tie-break come for free,
-      one gram pass total.
-    - ``"hash"``: the shuffle carries ``(xxhash64(gram),
-      length(gram))`` — fixed-width rows, ~n*word_len fewer shuffle
-      bytes per gram. The dup side needs only (count, length); the
-      top side's gram-ASC tie-break is resolved by a REDERIVE pass
-      that re-shuffles each document's TEXT once (1x corpus bytes —
-      far below the ~7-stream gram-string bytes it avoids) and
-      re-generates only the top-n gram streams doc-locally, keeping
-      every tied candidate via rank()=1 and taking the lexicographic
-      min inside one codegen expression. A 64-bit in-doc hash
-      collision would merge two grams' counts — the same negligible-
-      collision contract as every md5/xxhash draw in this repo."""
-    from bolson_spark.functions.text import bind_array
-
-    if gram_shuffle not in ("local", "string", "hash"):
-        raise ValueError(
-            "gram_shuffle must be 'local', 'string' or 'hash', "
-            f"got {gram_shuffle!r}"
-        )
-    ns = sorted(TOP_NGRAM_CHAR_FRAC_MAX) + sorted(DUP_NGRAM_CHAR_FRAC_MAX)
-    if gram_shuffle == "local":
-        return _repetition_metrics_local(df, text_col, ns)
-
-    # Spread once for BOTH shuffle routes (guide §2.4, no-op on
-    # well-split input): the gram-stream explode AND the hash route's
-    # rederive projection are CPU-heavy narrow maps over `df`, and the
-    # rederive's candidate join is a broadcast — no exchange ever
-    # parallelizes it, so on a single-file input the whole interpreted
-    # HOF gram rebuild ran on ONE core (profiled r11: 2.4 s of the
-    # hashed twin's 4.2 s at sf0.01 was this single-core projection).
-    from bolson_spark.functions.dedup import _spread
-
-    df = _spread(df)
-
-    def all_grams(ws: Column) -> Column:
-        # NB: the per-n lambda must stay ONE-argument — pyspark infers
-        # HOF arity from the Python signature, so a `lambda i, n=n`
-        # default-arg binding silently becomes the (element, index)
-        # two-arg form and n is fed the array index. Bind n through a
-        # factory instead.
-        def gram_struct(n: int):
-            return lambda i: F.struct(
-                F.lit(n).alias("n"),
-                F.array_join(F.slice(ws, i, n), " ").alias("gram"),
-            )
-
-        parts = []
-        for n in ns:
-            grams_n = F.transform(
-                F.sequence(F.lit(1), F.size(ws) - (n - 1)), gram_struct(n)
-            )
-            parts.append(
-                F.when(F.size(ws) >= n, grams_n).otherwise(
-                    F.array().cast("array<struct<n:int,gram:string>>")
-                )
-            )
-        return F.flatten(F.array(*parts))
-
-    rows = explode_once(
-        df,
-        ["doc_id"],
-        bind_array(F.split(F.col(text_col), " "), all_grams),
-        ["g"],
-    ).select("doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
-    from pyspark.sql.window import Window
-
-    top_ns = list(TOP_NGRAM_CHAR_FRAC_MAX)
-    dup_ns = list(DUP_NGRAM_CHAR_FRAC_MAX)
-    if gram_shuffle == "string":
-        counts = rows.groupBy("doc_id", "n", "gram").agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        w_top = Window.partitionBy("doc_id", "n").orderBy(
-            F.desc("c"), F.asc("gram")
-        )
-        top = (
-            counts.where(F.col("n").isin(top_ns))
-            .withColumn("_rn", F.row_number().over(w_top))
-            .where(F.col("_rn") == 1)
-            .select(
-                "doc_id",
-                "n",
-                (F.col("c") * F.length("gram")).alias("_chars"),
-            )
-        )
-        dup = (
-            counts.where(
-                F.col("n").isin(dup_ns) & (F.col("c") >= 2)
-            )
-            .groupBy("doc_id", "n")
-            .agg(F.sum(F.col("c") * F.length("gram")).alias("_chars"))
-        )
-    else:
-        # fixed-width count shuffle: hash + length instead of the gram
-        hashed = rows.select(
-            "doc_id",
-            "n",
-            F.xxhash64("gram").alias("gh"),
-            F.length("gram").alias("gl"),
-        )
-        counts = hashed.groupBy("doc_id", "n", "gh").agg(
-            F.count(F.lit(1)).alias("c"), F.max("gl").alias("gl")
-        )
-        dup = (
-            counts.where(F.col("n").isin(dup_ns) & (F.col("c") >= 2))
-            .groupBy("doc_id", "n")
-            .agg(F.sum(F.col("c") * F.col("gl")).alias("_chars"))
-        )
-        # rank(), not row_number(): hash order is not the tie-break
-        # rule, so EVERY count-tied candidate survives to the
-        # rederive, where the real gram-ASC rule decides. The tied
-        # hashes collapse into ONE array per (doc, n) — r11: the
-        # previous one-row-per-tied-candidate shape exploded to ~110
-        # rows per (doc, n) on low-repetition docs (every count-1 gram
-        # ties; 55k rederive rows for 500 sf0.01 docs), and each row
-        # re-built the doc's full gram array in the interpreted-HOF
-        # rederive. One row per (doc, n) builds the gram stream once
-        # and membership-tests against the tied-hash set: same O(L*T)
-        # comparisons, 1/T-th the interpreted array builds (profiled
-        # 2.5 s -> 0.1 s of the sf0.01 twin).
-        w_top = Window.partitionBy("doc_id", "n").orderBy(F.desc("c"))
-        cands = (
-            counts.where(F.col("n").isin(top_ns))
-            .withColumn("_rk", F.rank().over(w_top))
-            .where(F.col("_rk") == 1)
-            # all rank-1 rows of a (doc, n) share the top count, so
-            # max(c) is exactly that count
-            .groupBy("doc_id", "n")
-            .agg(F.collect_set("gh").alias("ghs"), F.max("c").alias("c"))
-            .groupBy("doc_id")
-            .agg(
-                F.collect_list(F.struct("n", "ghs", "c")).alias("_cands")
-            )
-        )
-        # rederive pass: re-shuffle only (doc_id, text) — 1x corpus
-        # bytes — and regenerate the top-n gram streams doc-locally
-        # inside one codegen expression per candidate
-        src = df.select(
-            "doc_id", F.split(F.col(text_col), " ").alias("_ws")
-        ).join(cands, "doc_id")
-        ex = src.select("doc_id", "_ws", F.explode("_cands").alias("c"))
-        ws2 = F.col("_ws")
-
-        def grams_of(n: int) -> Column:
-            return F.when(
-                F.size(ws2) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(ws2) - (n - 1)),
-                    lambda i: F.array_join(F.slice(ws2, i, n), " "),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-
-        gram_arr = None
-        for n in top_ns:
-            gram_arr = (
-                F.when(F.col("c.n") == n, grams_of(n))
-                if gram_arr is None
-                else gram_arr.when(F.col("c.n") == n, grams_of(n))
-            )
-        matches = F.filter(
-            gram_arr,
-            lambda g: F.array_contains(F.col("c.ghs"), F.xxhash64(g)),
-        )
-        resolved = ex.select(
-            "doc_id",
-            F.col("c.n").alias("n"),
-            F.array_min(matches).alias("_g"),
-            F.col("c.c").alias("c"),
-        )
-        # tied candidates (same top count, different grams): the rule
-        # is gram-ASC ACROSS candidates — struct MIN on the resolved
-        # gram picks it; candidate rows are per-doc bounded, so this
-        # agg shuffles only ties
-        top = (
-            resolved.groupBy("doc_id", "n")
-            .agg(
-                F.min(
-                    F.struct(
-                        F.col("_g"),
-                        (F.col("c") * F.length("_g")).alias("_ch"),
-                    )
-                ).alias("_m")
-            )
-            .select("doc_id", "n", F.col("_m._ch").alias("_chars"))
-        )
-    per = (
-        top.unionByName(dup)
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.max(
-                    F.when(F.col("n") == n, F.col("_chars"))
-                ).alias(f"_ch{n}")
-                for n in ns
-            ]
-        )
-    )
-    n_chars = F.length(F.col(text_col)).cast("bigint")
-    out = df.select("doc_id", n_chars.alias("n_chars")).join(
-        per, "doc_id", "left"
-    )
-
-    def frac(n: int) -> Column:
-        return F.when(
-            F.coalesce(F.col("n_chars"), F.lit(0)) == 0, F.lit(0.0)
-        ).otherwise(
-            F.round(
-                F.coalesce(F.col(f"_ch{n}"), F.lit(0)).cast("double")
-                / F.col("n_chars").cast("double"),
-                6,
-            )
-        )
-
-    cols = {
-        **{n: f"top{n}_char_frac" for n in TOP_NGRAM_CHAR_FRAC_MAX},
-        **{n: f"dup{n}_char_frac" for n in DUP_NGRAM_CHAR_FRAC_MAX},
-    }
-    out = out.select(
-        "doc_id",
-        F.coalesce(F.col("n_chars"), F.lit(0)).alias("n_chars"),
-        *[frac(n).alias(cols[n]) for n in ns],
     )
     keep = F.lit(True)
     for n, t in TOP_NGRAM_CHAR_FRAC_MAX.items():

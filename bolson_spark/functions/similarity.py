@@ -114,7 +114,12 @@ def blocked_nearest_neighbor(
     computed ONCE in the narrow pre-join projection — computing them
     per pair would redo O(dim) work |block| times per vector. With IVF
     cluster ids as the block key this is exactly the probe step of a
-    distributed ANN index."""
+    distributed ANN index.
+
+    No registry query runs this join route; it is kept as the
+    independent check on the GEMM routes
+    (:func:`blocked_nearest_neighbor_gemm` is tested equal to it, and
+    the tiled twin to the GEMM)."""
     a = df.select(
         F.col(id_col).alias("vec_id_a"),
         F.col(block_col).alias("block"),
@@ -284,7 +289,13 @@ def blocked_nearest_neighbor_gemm_tiled(
 ) -> DataFrame:
     """Memory-bounded twin of :func:`blocked_nearest_neighbor_gemm`:
     identical output, but each task holds <= 2*max_block vectors (tiled
-    GEMM over chunk pairs + a final map-side-combinable argmax)."""
+    GEMM over chunk pairs + a final map-side-combinable argmax).
+
+    Both routes stay: on the sf0.1 embeddings (2000 rows, 4 cores, 8
+    interleaved pairs, equal outputs) the unsplit GEMM took 0.67 s
+    against 2.11 s tiled, so it wins on small blocks, while only the
+    tiled route bounds an oversized block. Merging them needs a
+    block-size selection."""
     import numpy as np
     import pandas as pd
 
@@ -359,7 +370,12 @@ def embedding_cosine_pairs_tiled(
     """Memory-bounded twin of :func:`embedding_cosine_pairs`: identical
     pair set, each task bounded at 2*max_block vectors. Every unordered
     same-block pair appears in exactly one tile (its chunk pair), so no
-    dedup pass is needed."""
+    dedup pass is needed.
+
+    Both routes stay for the reason given at
+    :func:`blocked_nearest_neighbor_gemm_tiled` (same sf0.1 A/B:
+    0.44 s unsplit vs 0.81 s tiled; the tiled route bounds oversized
+    blocks)."""
     import numpy as np
     import pandas as pd
 
@@ -581,7 +597,6 @@ def ivf_assign_gemm(
     cent_id: str = "centroid_id",
     cent_vec: str = "centroid",
     carry: tuple[str, ...] = (),
-    two_level: bool = False,
 ) -> DataFrame:
     """:func:`ivf_assign` for LARGE centroid sets: the expression-based
     crossJoin materializes N×C rows JVM-side, which is fine at C≈8-64
@@ -604,19 +619,7 @@ def ivf_assign_gemm(
     ``carry`` names extra input columns passed through unchanged —
     callers that need (id, vector, cluster) downstream (the dedup
     blocking) avoid re-joining the assignment back to the corpus,
-    which would be a full N-row shuffle join.
-
-    ``two_level=True`` is that documented refinement, built in: the
-    id-sorted centroids chunk into ~sqrt(C) contiguous groups, each
-    summarized by its mean vector; a row scores the ~sqrt(C) group
-    means first, then only the winning group's ~sqrt(C) members —
-    ~2*sqrt(C) similarity scores per row instead of C, turning the
-    flat route's N*C assignment flops into N*2*sqrt(C). APPROXIMATE:
-    a row whose true best centroid lives in a group whose MEAN scores
-    below another group's is mis-assigned — exact when the centroid
-    set is separable (tested), same fidelity trade as every IVF probe
-    with n_probe=1. cluster_sim stays the true ROUND(cos,6) against
-    the chosen centroid."""
+    which would be a full N-row shuffle join."""
     import numpy as np
     import pandas as pd
 
@@ -635,40 +638,15 @@ def ivf_assign_gemm(
         f", {c} {t}" for c, t in carry_t.items()
     )
 
-    if two_level:
-        n_c = len(cids)
-        g = max(1, int(np.ceil(np.sqrt(n_c))))
-        n_super = int(np.ceil(n_c / g))
-        smat = np.stack(
-            [cmat[s * g : (s + 1) * g].mean(axis=0) for s in range(n_super)]
-        )
-        snorm = np.sqrt((smat * smat).sum(axis=1))
-
     def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             xn = np.sqrt((x * x).sum(axis=1))
-            if two_level:
-                sup = ((x @ smat.T) / np.outer(xn, snorm)).argmax(axis=1)
-                best = np.empty(len(x), dtype=np.int64)
-                sim = np.empty(len(x), dtype=np.float64)
-                for s in np.unique(sup):
-                    rows = np.flatnonzero(sup == s)
-                    lo, hi = s * g, min((s + 1) * g, n_c)
-                    sims = np.round(
-                        (x[rows] @ cmat[lo:hi].T)
-                        / np.outer(xn[rows], cnorm[lo:hi]),
-                        6,
-                    )
-                    loc = sims.argmax(axis=1)
-                    best[rows] = lo + loc
-                    sim[rows] = sims[np.arange(len(rows)), loc]
-            else:
-                sims = np.round((x @ cmat.T) / np.outer(xn, cnorm), 6)
-                best = sims.argmax(axis=1)  # first max = lowest cid
-                sim = sims[np.arange(len(best)), best]
+            sims = np.round((x @ cmat.T) / np.outer(xn, cnorm), 6)
+            best = sims.argmax(axis=1)  # first max = lowest cid
+            sim = sims[np.arange(len(best)), best]
             out = {
                 id_col: pdf[id_col],
                 "cluster": cids[best],
@@ -690,7 +668,6 @@ def dedup_embedding_ivf(
     max_block: int = 4096,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    two_level: bool = False,
 ) -> DataFrame:
     """Scale-safe IVF-blocked embedding near-dup — the production form
     of the `dedup_embedding_ivf` registry query, with the cell count a
@@ -703,9 +680,7 @@ def dedup_embedding_ivf(
     n_cells·target_cell²/2 ≈ N·target_cell/2 — LINEAR in N, where the
     registry's fixed 8 cells (kept as-is for oracle determinism) is
     quadratic/8. The trade is the coarse-assignment stage, N×n_cells
-    BLAS flops via :func:`ivf_assign_gemm`; ``two_level=True`` cuts
-    that to N×2·sqrt(n_cells) via its grouped coarse quantizer
-    (approximate blocking — see there). Seed centroids are
+    BLAS flops via :func:`ivf_assign_gemm`. Seed centroids are
     the n_cells lowest-id vectors (deterministic, TakeOrdered);
     production callers refine them with :func:`kmeans_refine` — the
     blocking stays approximate either way (cross-cell pairs unseen),
@@ -735,7 +710,6 @@ def dedup_embedding_ivf(
             vec_col=vec_col,
             id_col=id_col,
             carry=(vec_col,),
-            two_level=two_level,
         )
         .select(id_col, vec_col, "cluster")
         .persist()

@@ -1025,7 +1025,8 @@ def heavy_hitters(
     vocabulary, the losing one when tail shuffle bytes dominate
     (measured A/B in SCALING.md); "auto" (default) picks by a
     sampled distinct-count estimate vs `naive_distinct_cap`. All
-    routes return the identical exact result (tested).
+    routes return the identical exact result (tested). Both routes
+    stay because "auto" chooses between them from what it measures.
 
     Output: (key_col, cnt, n_total), count-descending ties by key.
     """

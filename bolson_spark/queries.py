@@ -440,7 +440,7 @@ FROM seq GROUP BY 1
 
 
 def q_convert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: parse -> seq -> rebatch -> per-batch aggregates
+    """Flagship: parse -> seq -> batch id -> per-batch aggregates
     (converter thread loop, convert/converter.cpp:96-171).
 
     Uses the scalable partition-offset seq path (no global single-
@@ -472,8 +472,8 @@ def q_convert_pipeline_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (catalyst-scalable / catalyst-exact / arrow-exact) under one
     oracle. Uses exact seq deliberately: ``mapInArrow`` is opaque to
     Catalyst, so the scalable path's key-only boundary/count passes
-    would re-execute the full parse (operators/pipeline.py composition
-    note)."""
+    (operators/seq.py::add_seq_scalable docstring, passes 1-2) could
+    not prune it and would re-execute the full parse."""
     from bolson_spark.operators.parse import parse_json_arrow
 
     ev = _t(spark, sf_dir, "events")

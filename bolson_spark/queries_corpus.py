@@ -508,7 +508,7 @@ BPE_MERGES = 12
 # markers force full-symbol alignment (no suffix of one symbol can
 # complete a match), and SQL replace() scans left-to-right without
 # rescanning its own output — exactly the leftmost-greedy fold of
-# functions/bpe.py::_merge_pair_col, including the L=R run-parity
+# functions/bpe.py::_merge_pair_sql, including the L=R run-parity
 # case ('aaaa' -> 'aa','aa'). Assumes corpus text contains neither
 # control char (true of any printable corpus).
 _BPE_SEP = "chr(31)"
@@ -915,21 +915,6 @@ def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bolson_spark.functions.quality import repetition_metrics
 
     return repetition_metrics(_t(spark, sf_dir, "documents"))
-
-
-def q_repetition_metrics_hashed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Physical twin of repetition_metrics forcing the FIXED-WIDTH
-    gram-count shuffle (xxhash64 + length rows, doc-local rederive of
-    the top gram's tie-break) — identical results against the same
-    oracle; the measured string-vs-hash trade at 1x/10x/100x lives in
-    SCALING.md (r9 VERDICT #4)."""
-    from bolson_spark.functions.quality import repetition_metrics
-
-    return repetition_metrics(
-        _t(spark, sf_dir, "documents"), gram_shuffle="hash"
-    )
 
 
 def _repetition_metrics_sql() -> str:
@@ -2466,11 +2451,6 @@ CORPUS_QUERIES: dict[str, QuerySpec] = {
     ),
     "repetition_metrics": QuerySpec(
         q_repetition_metrics, _repetition_metrics_sql(), ("quality", "text")
-    ),
-    "repetition_metrics_hashed": QuerySpec(
-        q_repetition_metrics_hashed,
-        _repetition_metrics_sql(),
-        ("quality", "text", "twin"),
     ),
     "quality_rule_matrix": QuerySpec(
         q_quality_rule_matrix, _quality_rule_matrix_sql(), ("quality",)

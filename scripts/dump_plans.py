@@ -18,7 +18,7 @@ from bolson_spark.session import get_spark  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 HEADLINERS = {
-    "convert_pipeline": "the flagship convert path (parse->seq->rebatch->agg)",
+    "convert_pipeline": "the flagship convert path (parse->scalable seq->batch id->agg)",
     "pricing_summary": "TPC-H Q1 shape: pushdown + partial/final aggregation",
     "local_supplier_volume": "TPC-H Q5 shape: 6-way join, broadcast dims",
     "large_volume_customers": "TPC-H Q18 shape: HAVING-aggregate before join, TakeOrdered",
@@ -56,7 +56,7 @@ HEADLINERS = {
     "dup_span_coverage": "substring dedup signal: stride-1 window counts, gaps-and-islands span merge",
     "strip_dup_spans": "keep-one span removal: canonical argmin join, narrow indexed-lambda reassembly",
     "training_corpus_spandedup": "composed substring + near-dup pipeline: span-strip feeds cleaned text to LSH dedup; lineage truncated at the cleaned-corpus boundary",
-    "repetition_metrics": "Gopher Table-A1 family: one 7-stream gram pass, map-side-combined count, bounded per-(doc,n) window, pivot",
+    "repetition_metrics": "Gopher Table-A1 family: one narrow map of seven sorted-run folds per document; the only Exchange is _spread's round-robin on under-split input",
     "dsir_selection": "DSIR importance weights: two token aggs, broadcast stats row, vocab ratio join, one doc agg",
 }
 

@@ -49,6 +49,10 @@ EDGE_QUERIES = [
     # engines pinned by the edge corpus's NULL-text doc)
     "language_id",
     "langid_confusion",
+    # repetition_metrics: NULL/empty/whitespace-only text must report
+    # zero fractions and keep=TRUE; the repeated single word drives
+    # every n-gram fraction past 1 on both engines
+    "repetition_metrics",
 ]
 
 

@@ -187,47 +187,6 @@ def test_ivf_assign_gemm_matches_expr_assign(spark):
         assert gemm[c] == (c, 1.0)
 
 
-def test_ivf_assign_gemm_two_level_exact_on_separable_centroids(spark):
-    """The two-level coarse quantizer (N*2*sqrt(C) assignment flops)
-    must agree with the flat argmax EXACTLY when the centroid set is
-    separable: 16 near-one-hot centers in 16-dim, points = center +
-    small noise — each group-of-4 mean keeps a 0.5-vs-~0 cosine margin
-    for its members, so the group stage never mis-routes. Random data
-    would NOT give this guarantee (the documented n_probe=1-style
-    approximation); separable data is the correctness contract."""
-    import random
-
-    from bolson_spark.functions.similarity import ivf_assign_gemm
-
-    rng = random.Random(11)
-    dim, k = 16, 16
-    rows = []
-    for i in range(240):
-        c = i % k
-        v = [0.05 * rng.gauss(0, 1) for _ in range(dim)]
-        v[c] += 1.0
-        rows.append((i, v))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"]).select(
-        "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
-    )
-    cents = spark.createDataFrame(
-        [(c, [1.0 if d == c else 0.0 for d in range(dim)]) for c in range(k)],
-        ["centroid_id", "centroid"],
-    ).select(
-        "centroid_id", F.col("centroid").cast("array<float>").alias("centroid")
-    )
-    flat = {
-        r.vec_id: (r.cluster, r.cluster_sim)
-        for r in ivf_assign_gemm(df, cents).collect()
-    }
-    two = {
-        r.vec_id: (r.cluster, r.cluster_sim)
-        for r in ivf_assign_gemm(df, cents, two_level=True).collect()
-    }
-    assert two == flat
-    assert all(cl == i % k for i, (cl, _) in flat.items())
-
-
 def test_dedup_embedding_ivf_scalable_cells_equals_fixed_at_8(spark):
     """dedup_embedding_ivf (scalable-cells API) pinned to n_cells=8
     reproduces the fixed-8-cell registry query EXACTLY on the fixture:
@@ -337,28 +296,36 @@ def test_embedding_cosine_pairs_blocked(spark):
     assert out == {(0, 1): (0, 1.0)}
 
 
-def test_band_keys_vectorized_equals_declarative(spark):
-    """Vectorized (pandas UDF) band keys == declarative JVM path —
-    the dual physical execution of one logical minhash operator."""
+def test_minhash_prep_band_keys_equal_declarative(spark):
+    """The production band keys (`_minhash_prep`, one-parse SQL text)
+    == the declarative Column path minhash_signature ->
+    band_keys_from_signature: two independent builds of one logical
+    minhash operator, compared row for row."""
     from bolson_spark.functions.dedup import (
+        DEFAULT_NUM_HASHES,
+        _minhash_prep,
         band_keys_from_signature,
-        band_keys_vectorized,
+        choose_bands,
         minhash_signature,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    vec = {
-        (r.doc_id, b, k)
-        for r in docs.select(
-            "doc_id", band_keys_vectorized(F.col("text")).alias("keys")
-        ).collect()
-        for b, k in enumerate(r.keys)
-    }
+    bands = choose_bands(DEFAULT_NUM_HASHES)
+    _, band_rows = _minhash_prep(
+        docs, "text", DEFAULT_NUM_HASHES, bands, cache=False
+    )
+    prod = [
+        (r.doc_id, r.band, r.band_key)
+        for r in band_rows.select("doc_id", "band", "band_key").collect()
+    ]
     decl = {
         (r.doc_id, r.band, r.band_key)
-        for r in band_keys_from_signature(minhash_signature(docs)).collect()
+        for r in band_keys_from_signature(
+            minhash_signature(docs), DEFAULT_NUM_HASHES, bands
+        ).collect()
     }
-    assert vec == decl
+    assert len(prod) == len(set(prod)) == docs.count() * bands
+    assert set(prod) == decl
 
 
 def test_chunk_documents_windows(spark):
@@ -974,8 +941,6 @@ def test_bpe_train_classic_corpus(spark):
     newest/widest word frequencies): the learned merge sequence and
     the re-encoded segmentations must match the published algorithm's
     hand-derivable results."""
-    from pyspark.sql import functions as F
-
     from bolson_spark.functions.bpe import bpe_encode_col, bpe_train
 
     rows = [("low",)] * 5 + [("lower",)] * 2 + [("newest",)] * 6 + [("widest",)] * 3
@@ -991,7 +956,7 @@ def test_bpe_train_classic_corpus(spark):
     enc = {
         r.text: r.toks
         for r in corpus.distinct()
-        .select("text", bpe_encode_col(F.col("text"), merges).alias("toks"))
+        .select("text", bpe_encode_col("text", merges).alias("toks"))
         .collect()
     }
     assert enc["low"] == ["low"]
@@ -1005,13 +970,13 @@ def test_bpe_merge_is_leftmost_greedy(spark):
     re-pair with the element it just consumed."""
     from pyspark.sql import functions as F
 
-    from bolson_spark.functions.bpe import _merge_pair_col
+    from bolson_spark.functions.bpe import _merge_pair_sql
 
     df = spark.createDataFrame([("aaa",), ("aaaa",)], ["w"])
     got = {
         r.w: r.m
         for r in df.select(
-            "w", _merge_pair_col(F.split("w", ""), "a", "a").alias("m")
+            "w", F.expr(_merge_pair_sql("split(w, '')", "a", "a")).alias("m")
         ).collect()
     }
     assert got["aaa"] == ["aa", "a"]
@@ -1358,7 +1323,7 @@ def test_bpe_encode_query_lossless_roundtrip(spark):
         .distinct()
         .select(
             "word",
-            bpe_encode_col(F.col("word"), merges).alias("toks"),
+            bpe_encode_col("word", merges).alias("toks"),
         )
     )
     bad = dw.where(
@@ -3224,41 +3189,42 @@ def test_repetition_metrics_gopher_family(spark):
     assert r3.keep is True
 
 
-def test_repetition_metrics_three_route_parity(spark):
-    """local ≡ string ≡ hash route parity (r10 VERDICT #3/#4): the
-    r10 default flip to the zero-shuffle 'local' route left the old
-    'string' default with no dedicated parity pin. exceptAll BOTH
-    ways across all three routes on a corpus that exercises the
-    tie-break (equal-count grams whose gram-ASC winner matters, with
-    >1-char multi-token grams so char attribution differs by gram)
-    plus the sf0.001 documents table (real text, NULLs, short docs)."""
-    from bolson_spark.functions.quality import repetition_metrics
+def test_repetition_metrics_tie_corpus_matches_oracle(spark, tmp_path):
+    """repetition_metrics against its DuckDB oracle on a corpus that
+    exercises the tie-break: equal-count grams whose gram-ASC winner
+    matters, with >1-char multi-token grams so char attribution
+    differs by gram, a single repeated token, NULL and empty text.
+    DuckDB counts grams with a GROUP BY and ranks them with a window,
+    so it is an independent check on the sorted-run fold."""
+    import duckdb
 
-    crafted = spark.createDataFrame(
-        [
-            # bigram tie: "b c" x2 vs "c b" x2 — count-DESC/gram-ASC
-            # must pick "b c" in every route
-            (1, "b c b c b"),
-            # multi-char gram ties: "xx yy" x2 / "yy xx" x2, plus a
-            # dup-5 run that repeats twice
-            (2, "xx yy xx yy xx p q r s t p q r s t"),
-            # degenerate: one token repeated (every n-gram tied at
-            # max count; dup fractions > 1 by the published convention)
-            (3, "z z z z z z z z z z"),
-            (4, None),
-            (5, ""),
-            (6, "one two three four five six seven eight nine"),
-        ],
-        "doc_id bigint, text string",
+    from bolson_spark.oracle import compare_query
+
+    docs = [
+        # bigram tie: "b c" x2 vs "c b" x2 — count-DESC/gram-ASC must
+        # pick "b c"
+        (1, "b c b c b"),
+        # multi-char gram ties: "xx yy" x2 / "yy xx" x2, plus a dup-5
+        # run that repeats twice
+        (2, "xx yy xx yy xx p q r s t p q r s t"),
+        # degenerate: one token repeated (every n-gram tied at max
+        # count; dup fractions > 1 by the published convention)
+        (3, "z z z z z z z z z z"),
+        (4, None),
+        (5, ""),
+        (6, "one two three four five six seven eight nine"),
+    ]
+    sf = tmp_path / "sf"
+    spark.createDataFrame(docs, "doc_id bigint, text string").coalesce(
+        1
+    ).write.parquet(str(sf / "documents.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{sf}/documents.parquet/*.parquet'"
     )
-    real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for docs in (crafted, real):
-        local = repetition_metrics(docs, gram_shuffle="local")
-        string = repetition_metrics(docs, gram_shuffle="string")
-        hashed = repetition_metrics(docs, gram_shuffle="hash")
-        for a, b in ((local, string), (string, hashed), (local, hashed)):
-            assert a.exceptAll(b).isEmpty()
-            assert b.exceptAll(a).isEmpty()
+    r = compare_query(spark, con, "repetition_metrics", str(sf))
+    assert r.ok and r.spark_rows == len(docs), r.detail[:500]
 
 
 def test_dsir_logratio_hand_computed(spark):
