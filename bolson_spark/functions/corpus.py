@@ -258,7 +258,8 @@ def incremental_ingest(
     the refinement is a Bloom pre-filter of the batch against the
     snapshot fingerprints, then this exact anti-join on the survivors
     — implemented (JVM-side, no `bloom_filter_agg` needed) in
-    streaming/ingest.py (build_bloom_words / bloom_maybe_contains),
+    streaming/ingest.py (build_bloom_words / build_bloom_bitmap /
+    bloom_maybe_contains),
     where the per-run amortization makes it pay; for this one-shot
     batch shape the Bloom build would scan the snapshot anyway, so
     the exact join IS the right implementation. The within-batch

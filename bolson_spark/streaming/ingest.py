@@ -31,12 +31,13 @@ Scale shape: the ledger is a 2-column (fingerprint, batch) table;
 the per-batch anti-join shuffles only fingerprints and is
 AQE-selected (broadcast while the ledger is small, sort-merge once it
 isn't). A per-run BLOOM PREFILTER (built once per stream start over
-the prior-ledger snapshot, entirely JVM-side: xxhash64 positions +
-bit_or word aggregation, probed via a broadcast word-table join)
-routes definitely-new fingerprints around the prior-ledger anti-join,
-so at very large ledger sizes the exact join runs only over the
-maybe-subset (true dups + ~1% false positives) — see
-build_bloom_words / bloom_maybe_contains.
+the prior-ledger snapshot: xxhash64 positions + bit_or word
+aggregation, packed into one driver bitmap shipped as a broadcast
+variable, probed by a shuffle-free Arrow-vectorized gather) routes
+definitely-new fingerprints around the prior-ledger anti-join, so the
+exact join runs only over the maybe-subset (true dups + ~1% false
+positives) — see build_bloom_words / build_bloom_bitmap /
+bloom_maybe_contains.
 """
 
 from __future__ import annotations
@@ -56,9 +57,7 @@ def _ledger_before(
 ) -> DataFrame | None:
     """Ledger rows accepted strictly before (run_id, batch_id): every
     other run's rows, plus this run's earlier batches. A replay's own
-    (run, batch) partition is overwritten, never consulted. Ledgers
-    written before run-namespacing existed (no `run` column) are read
-    as a single legacy run."""
+    (run, batch) partition is overwritten, never consulted."""
     if not os.path.isdir(ledger_dir):
         return None
     try:
@@ -73,8 +72,6 @@ def _ledger_before(
         if not _has_real_entries(ledger_dir):
             return None
         raise
-    if "run" not in led.columns:
-        led = led.withColumn("run", F.lit("legacy"))
     return led.where(
         (F.col("run") != run_id) | (F.col("batch") < batch_id)
     )
@@ -92,30 +89,6 @@ def _has_real_entries(path: str) -> bool:
         if any(not f.startswith(("_", ".")) for f in files):
             return True
     return False
-
-
-def _reject_mixed_ledger_layout(out_dir: str) -> None:
-    """Fail fast if `out_dir` was written by the pre-run-namespacing
-    layout (ledger/batch=N/ at the root): writing the new
-    run=<id>/batch=N/ layout next to it would make the directory
-    unreadable as one parquet table, and the read failure would
-    otherwise surface batches later as a confusing error mid-stream.
-    Migration: move the old partitions under ledger/run=legacy/ (the
-    reader maps a missing `run` column to run='legacy')."""
-    for sub in ("ledger", "accepted"):
-        d = os.path.join(out_dir, sub)
-        if not os.path.isdir(d):
-            continue
-        # ANY legacy batch=N dir at the root is fatal — including the
-        # already-mixed state (both layouts present), which is exactly
-        # the unreadable case; waiting for the read to fail would
-        # surface a confusing partition-discovery error batches later
-        if any(e.startswith("batch=") for e in os.listdir(d)):
-            raise RuntimeError(
-                f"{d} contains legacy batch=N partitions at its root; "
-                f"move them under {d}/run=legacy/ before resuming "
-                "ingest (mixed layouts are unreadable as one table)"
-            )
 
 
 def _index_before(
@@ -153,8 +126,7 @@ def _bloom_positions(fp_col, n_bits: int):
     )
 
 
-BLOOM_BROADCAST_MAX_BITS = 1 << 28  # <= 4M word rows (~64 MB) broadcast
-# Hard cap on the bitmap route's size: 2^33 bits = 1 GiB packed — a safe
+# Hard cap on the bitmap's size: 2^33 bits = 1 GiB packed — a safe
 # one-time driver allocation + broadcast. At the designed 10 bits/item
 # this covers ~860M ledger items at ~1% fpp; beyond that the filter
 # saturates GRACEFULLY (fpp rises, so more exact-probe traffic, but
@@ -165,15 +137,9 @@ BLOOM_MAX_BITS = 1 << 33
 def build_bloom_words(fps: DataFrame, n_bits: int) -> DataFrame:
     """Distributed Bloom filter build: (word_idx, word) rows — the
     bitset packed into 64-bit words via a bit_or aggregation. One scan
-    of the fingerprint set, no driver collect; the result is at most
-    n_bits/64 rows. Size honesty: at 10 bits/item that is ~16 MB of
-    words per 100M fingerprints — broadcast-friendly into the
-    ~billion-item range, but at multi-billion-item ledgers the word
-    table reaches GBs, and `bloom_maybe_contains` switches the probe
-    from a broadcast join to a shuffled equi-join on word_idx above
-    BLOOM_BROADCAST_MAX_BITS (a production refinement past that point
-    is a driver-packed bitmap broadcast variable; the routing
-    semantics are unchanged either way)."""
+    of the fingerprint set; the result is at most n_bits/64 rows (at
+    10 bits/item, ~16 MB of words per 100M fingerprints), which
+    `build_bloom_bitmap` packs on the driver."""
     pos = fps.select(
         F.explode(_bloom_positions(F.col("fingerprint"), n_bits)).alias("p")
     )
@@ -186,15 +152,12 @@ def build_bloom_words(fps: DataFrame, n_bits: int) -> DataFrame:
 
 def build_bloom_bitmap(bloom_words: DataFrame, n_bits: int):
     """Pack the (word_idx, word) table into ONE driver-side uint64
-    bitmap — the production refinement for ledgers whose word table
-    outgrows a broadcast-join (> BLOOM_BROADCAST_MAX_BITS): the
-    transfer here is BOUNDED by n_bits/64 rows (the bitmap size chosen
-    up front, itself capped at BLOOM_MAX_BITS), never by ledger
+    bitmap: the transfer is BOUNDED by n_bits/64 rows (the bitmap size
+    chosen up front, itself capped at BLOOM_MAX_BITS), never by ledger
     cardinality, and the packed array ships to executors once as a
     broadcast variable. The fill is Arrow-vectorized (toPandas +
-    fancy-index scatter) — this route only activates at hundreds of
-    millions of word rows, exactly where a per-row Python loop would
-    pin the driver."""
+    fancy-index scatter), so hundreds of millions of word rows do not
+    pin the driver in a per-row Python loop."""
     import numpy as np
 
     arr = np.zeros((n_bits + 63) // 64, dtype=np.uint64)
@@ -206,17 +169,18 @@ def build_bloom_bitmap(bloom_words: DataFrame, n_bits: int):
     return arr
 
 
-def bloom_maybe_contains_bitmap(
+def bloom_maybe_contains(
     batch: DataFrame, bitmap_bc, n_bits: int, fp_col: str = "fingerprint"
 ) -> DataFrame:
-    """`bloom_maybe_contains` against a broadcast packed bitmap (from
-    :func:`build_bloom_bitmap`): bit positions are computed JVM-side
-    (same xxhash64 expressions as the build — no false negatives by
-    construction), then ONE Arrow-vectorized pandas UDF gathers all
-    BLOOM_K bits per row from the bitmap. A pure narrow map: no
-    explode, no join, no groupBy — the probe introduces ZERO shuffles,
-    which is the point of this route at multi-billion-item ledgers
-    where the word-table equi-join would shuffle every batch."""
+    """Adds a `_bloom_maybe` flag against a broadcast packed bitmap
+    (from :func:`build_bloom_bitmap`): False means DEFINITELY not in
+    the set the Bloom was built over, True means probe the exact
+    store. Bit positions are computed JVM-side (same xxhash64
+    expressions as the build — no false negatives by construction,
+    and a NULL fingerprint has well-defined positions too), then ONE
+    Arrow-vectorized pandas UDF gathers all BLOOM_K bits per row. A
+    pure narrow map: no explode, no join, no groupBy — the probe adds
+    no shuffle at any ledger size."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -231,55 +195,6 @@ def bloom_maybe_contains_bitmap(
 
     return batch.withColumn(
         "_bloom_maybe", _all_set(_bloom_positions(F.col(fp_col), n_bits))
-    )
-
-
-def bloom_maybe_contains(
-    batch: DataFrame, bloom_words: DataFrame, n_bits: int, fp_col: str = "fingerprint"
-) -> DataFrame:
-    """Adds a `_bloom_maybe` flag: False means DEFINITELY not in the
-    set the Bloom was built over (no false negatives — the routing
-    correctness hinges on this), True means probe the exact store.
-    Shape: posexplode to BLOOM_K rows, broadcast-join the (tiny) word
-    table, AND the bits back per row — all JVM-side codegen."""
-    # keyed on the fingerprint itself (a pure function of the row), not
-    # a synthetic monotonically_increasing_id — the flag join then
-    # cannot be perturbed by recomputation/partition-layout differences
-    # between the two references to `probe`; duplicate fingerprints
-    # (none after the in-batch dedup, but allowed by this API) simply
-    # share their identical flag
-    words = (
-        F.broadcast(bloom_words)
-        if n_bits <= BLOOM_BROADCAST_MAX_BITS
-        else bloom_words
-    )
-    bits = (
-        batch.select(
-            F.col(fp_col),
-            F.explode(_bloom_positions(F.col(fp_col), n_bits)).alias("p"),
-        )
-        .withColumn("word_idx", (F.col("p") / 64).cast("long"))
-        .join(words, "word_idx", "left")
-        .select(
-            fp_col,
-            F.expr(
-                "(shiftright(coalesce(word, 0L), cast(p % 64 as int)) & 1L)"
-                " = 1L"
-            ).alias("bit_set"),
-        )
-        .groupBy(fp_col)
-        .agg(F.min(F.col("bit_set").cast("int")).alias("_all_set"))
-    )
-    # null-safe equality: xxhash64(NULL, seed) is non-null, so a NULL
-    # fingerprint has well-defined probe positions on BOTH routes; a
-    # plain equi-join would silently drop the row here while the bitmap
-    # route keeps it, making the two routes row-set inequivalent
-    bits_r = bits.withColumnRenamed(fp_col, "__bloom_fp")
-    return (
-        batch.join(bits_r, F.col(fp_col).eqNullSafe(F.col("__bloom_fp")))
-        .drop("__bloom_fp")
-        .withColumn("_bloom_maybe", F.col("_all_set") == 1)
-        .drop("_all_set")
     )
 
 
@@ -434,11 +349,18 @@ def run_stream_ingest(
     — the first accepted copy gates all later batches); pass
     ``in_batch_near_dedup=True`` to close that window too (lowest doc
     id per in-batch near-dup component wins, batch-bounded cost)."""
-    _reject_mixed_ledger_layout(out_dir)
+    from bolson_spark.streaming.util import (
+        require_run_partitioned,
+        run_id_for_checkpoint,
+        write_run_batch,
+    )
+
     accepted_dir = os.path.join(out_dir, "accepted")
     ledger_dir = os.path.join(out_dir, "ledger")
     index_bands_dir = os.path.join(out_dir, "mh_bands")
     index_toks_dir = os.path.join(out_dir, "mh_toks")
+    for d in (ledger_dir, accepted_dir):
+        require_run_partitioned(d)
     # One run id per CHECKPOINT LINEAGE, persisted inside the
     # checkpoint dir (the same pattern as pipeline.py's seq base): a
     # crash-restart on the same checkpoint replays its batches under
@@ -449,11 +371,6 @@ def run_stream_ingest(
     # per-call uuid would self-match replayed docs against their own
     # index rows and silently drop them). A fresh checkpoint dir mints
     # a new id, so prior runs' partitions are consulted, not clobbered.
-    from bolson_spark.streaming.util import (
-        run_id_for_checkpoint,
-        write_run_batch,
-    )
-
     run_id = run_id_for_checkpoint(checkpoint_dir, "bolson_ingest_run_id")
 
     # Bloom prefilter over the PRIOR ledger snapshot (every run except
@@ -467,13 +384,9 @@ def run_stream_ingest(
     # not the historical corpus. Single-writer assumption (already
     # required by the dynamic-partition overwrite protocol): no other
     # run appends to the ledger while this stream lives, so the
-    # snapshot Bloom stays a superset of the prior ledger.
-    # Routing: at or under BLOOM_BROADCAST_MAX_BITS the word table is
-    # probed via broadcast equi-join (all-JVM); above it, the words
-    # pack into a driver bitmap shipped ONCE as a broadcast variable
-    # and probed by a shuffle-free Arrow-vectorized gather — the
-    # large-ledger path named in build_bloom_words' docstring.
-    prior_bloom: tuple[str, object, int] | None = None
+    # snapshot Bloom stays a superset of the prior ledger. The words
+    # pack into a driver bitmap shipped ONCE as a broadcast variable.
+    prior_bloom: tuple[object, int] | None = None
     led0 = _ledger_before(spark, ledger_dir, run_id, 0)
     if led0 is not None:
         prior0 = led0.where(F.col("run") != run_id).select("fingerprint")
@@ -483,25 +396,17 @@ def run_stream_ingest(
                 BLOOM_MAX_BITS,
                 max(1 << 14, 1 << (10 * n_prior).bit_length()),
             )
-            words = build_bloom_words(prior0, n_bits)
-            if n_bits <= BLOOM_BROADCAST_MAX_BITS:
-                words = words.cache()
-                words.count()  # materialize once, before the stream starts
-                prior_bloom = ("words", words, n_bits)
-            else:
-                bitmap_bc = spark.sparkContext.broadcast(
-                    build_bloom_bitmap(words, n_bits)
-                )
-                prior_bloom = ("bitmap", bitmap_bc, n_bits)
+            bitmap_bc = spark.sparkContext.broadcast(
+                build_bloom_bitmap(build_bloom_words(prior0, n_bits), n_bits)
+            )
+            prior_bloom = (bitmap_bc, n_bits)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
-        # coalesce NULL text to "": md5(NULL) is NULL, and NULL join
-        # keys behave differently in the plain anti-join (kept) vs the
-        # Bloom split's inner flag join (dropped) — a NULL-text doc
-        # must not be accepted or rejected depending on whether a
-        # prior ledger happens to exist. Empty-content docs dedup
-        # among themselves under the md5("") fingerprint.
+        # coalesce NULL text to "": md5(NULL) is NULL, and a NULL key
+        # never matches in the ledger anti-join, so a NULL-text doc
+        # would be accepted again in every batch. Empty-content docs
+        # dedup among themselves under the md5("") fingerprint.
         fp = F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias(
             "fingerprint"
         )
@@ -521,17 +426,13 @@ def run_stream_ingest(
         extra_caches: list[DataFrame] = []
         if led is not None:
             if prior_bloom is not None:
-                kind, payload, n_bits = prior_bloom
+                bitmap_bc, n_bits = prior_bloom
                 prior_led = led.where(F.col("run") != run_id)
                 this_led = led.where(F.col("run") == run_id)
                 # cache: BOTH union branches reference `flagged` — an
                 # un-cached split re-executes the batch dedup shuffle
-                # and the Bloom probe aggregation once per branch
-                flagged = (
-                    bloom_maybe_contains(batch, payload, n_bits)
-                    if kind == "words"
-                    else bloom_maybe_contains_bitmap(batch, payload, n_bits)
-                ).cache()
+                # and the Bloom probe once per branch
+                flagged = bloom_maybe_contains(batch, bitmap_bc, n_bits).cache()
                 extra_caches.append(flagged)
                 fresh = flagged.where(~F.col("_bloom_maybe")).drop(
                     "_bloom_maybe"

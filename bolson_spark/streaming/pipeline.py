@@ -46,32 +46,34 @@ from bolson_spark.operators.seq import partition_layout
 from bolson_spark.operators.serialize import serialize_ipc
 from bolson_spark.schemas import spark_to_arrow_schema
 from bolson_spark.streaming.sink import PublishSink
-from bolson_spark.streaming.util import run_id_for_checkpoint, write_run_batch
+from bolson_spark.streaming.util import (
+    require_run_partitioned,
+    run_id_for_checkpoint,
+    write_run_batch,
+)
 
 
-def _read_seq_base(
-    base_file: str | None,
-) -> tuple[str | None, int, int, int]:
-    """Read the persisted seq-base record: (run_id, last_batch_id,
-    base_of_last_batch, n_of_last_batch). v3 records carry the
-    checkpoint-lineage run id; v2 records predate it and map to
-    run_id=None (legacy wildcard — matches any lineage; streams bind
-    it to their lineage the moment they read one, see _upgraded_rec).
-    v1 files stored only the ALREADY ADVANCED base —
-    mapped to (None, -1, base, 0) so the next batch starts exactly
-    there."""
+def _read_seq_base(base_file: str | None) -> tuple[str | None, int, int, int]:
+    """Read the persisted seq-base record ``v3 <run> <batch> <base> <n>``:
+    (run_id, last_batch_id, base_of_last_batch, n_of_last_batch). A
+    missing file is a fresh lineage, (None, -1, 0, 0). Anything else
+    refuses: reading a damaged record as a base would renumber over
+    seqs the stream has already published."""
     import os
 
     if not base_file or not os.path.exists(base_file):
         return (None, -1, 0, 0)
     with open(base_file) as f:
-        txt = f.read().strip()
-    parts = txt.split()
+        parts = f.read().split()
     if len(parts) == 5 and parts[0] == "v3":
-        return (parts[1], int(parts[2]), int(parts[3]), int(parts[4]))
-    if len(parts) == 4 and parts[0] == "v2":
-        return (None, int(parts[1]), int(parts[2]), int(parts[3]))
-    return (None, -1, int(txt or 0), 0)
+        try:
+            return (parts[1], int(parts[2]), int(parts[3]), int(parts[4]))
+        except ValueError:
+            pass
+    raise ValueError(
+        f"seq-base record {base_file!r} is not a v3 record; start a fresh "
+        "checkpoint"
+    )
 
 
 def _lineage_checked_rec(
@@ -105,7 +107,7 @@ def _lineage_checked_rec(
 def _resolve_seq_base(
     rec: tuple[str | None, int, int, int],
     batch_id: int,
-    run_id: str | None = None,
+    run_id: str,
 ) -> int:
     """The replay-stable base rule: a REPLAYED batch (same batch id,
     SAME checkpoint lineage) reuses its original base, so its rows are
@@ -121,41 +123,11 @@ def _resolve_seq_base(
     reset checkpoint), a first batch whose id collides with the stored
     one is a DIFFERENT payload — reusing the base would publish
     overlapping seq ranges for different data, so a mismatch always
-    ADVANCES. A None on either side (legacy v2 record, or a
-    checkpoint-less run) keeps the old same-id-reuses behavior."""
+    ADVANCES."""
     rec_run, last_bid, last_base, last_n = rec
-    lineage_match = rec_run is None or run_id is None or rec_run == run_id
-    if lineage_match and batch_id == last_bid:
+    if rec_run == run_id and batch_id == last_bid:
         return last_base
     return last_base + last_n
-
-
-def _upgraded_rec(
-    base_file: str | None,
-    rec: tuple[str | None, int, int, int],
-    run_id: str | None,
-) -> tuple[str | None, int, int, int]:
-    """UPGRADE-ON-SIGHT for legacy v2 seq-base records (r8 VERDICT #7):
-    a v2 record has no run id, so its lineage wildcard (matches any
-    run) preserves exactly the reuse hole the v3 guard closes — for as
-    long as the record survives. The first time a stream reads one
-    that has PASSED the offsets-horizon validation (its batch id is
-    provably within THIS checkpoint's planned batches — the caller
-    runs _lineage_checked_rec first), bind it to the current lineage
-    by rewriting it as v3 immediately: from then on a foreign-lineage
-    batch-id collision ADVANCES instead of reusing. Records already
-    coerced to pure-advance form (batch -1) carry no reusable batch id
-    — nothing to bind."""
-    rec_run, last_bid, last_base, last_n = rec
-    if (
-        base_file
-        and run_id is not None
-        and rec_run is None
-        and last_bid >= 0
-    ):
-        _write_seq_base(base_file, run_id, last_bid, last_base, last_n)
-        return (run_id, last_bid, last_base, last_n)
-    return rec
 
 
 def _write_seq_base(
@@ -243,24 +215,8 @@ def run_stream_convert(
         )
     import os
 
-    if (
-        on_error == "quarantine"
-        and os.path.isdir(quarantine_dir)
-        and any(
-            not e.startswith(("run=", "_", "."))
-            for e in os.listdir(quarantine_dir)
-        )
-    ):
-        # pre-run-namespacing quarantine dirs held bare files at the
-        # root; writing run=/batch= partitions next to them makes the
-        # evidence table unreadable as one parquet dataset
-        raise RuntimeError(
-            f"{quarantine_dir} contains non-partitioned legacy entries; "
-            "move them under a run=legacy/batch=0/ subdirectory before "
-            "resuming (mixed layouts are unreadable as one table)"
-        )
-    sink.handshake(arrow_schema)
-    metrics = StreamMetrics()
+    if on_error == "quarantine":
+        require_run_partitioned(quarantine_dir)
     # Sequence base: the reference's seq counter is process-lifetime
     # (restarts from 0 with the process). For an exactly-once sink we do
     # better: persist the base next to the checkpoint so a restarted
@@ -270,6 +226,14 @@ def run_stream_convert(
     base_file = (
         os.path.join(checkpoint_dir, "bolson_seq_base") if checkpoint_dir else None
     )
+    # (run_id, last_batch_id, base, n) — see _resolve_seq_base for the
+    # replay-stable numbering rule this record enables; the record is
+    # read (or refused) before anything is written, and lineage-validated
+    # against the checkpoint's offsets log (see _lineage_checked_rec: an
+    # offsets/commits wipe restarts batch ids while this sidecar survives)
+    state = {
+        "rec": _lineage_checked_rec(_read_seq_base(base_file), checkpoint_dir)
+    }
     # One run id per checkpoint lineage (minted-or-read), shared by the
     # quarantine partitions AND the seq-base record: same-checkpoint
     # replays overwrite their own (run, batch) partition idempotently /
@@ -278,18 +242,8 @@ def run_stream_convert(
     # silently reuse a surviving seq-base record from a different
     # lineage (see _resolve_seq_base's lineage guard).
     run_id = run_id_for_checkpoint(checkpoint_dir, "bolson_run_id")
-    # (run_id, last_batch_id, base, n) — see _resolve_seq_base for the
-    # replay-stable numbering rule this record enables; the record is
-    # lineage-validated against the checkpoint's offsets log at start
-    # (see _lineage_checked_rec: an offsets/commits wipe restarts
-    # batch ids while this sidecar file survives)
-    state = {
-        "rec": _upgraded_rec(
-            base_file,
-            _lineage_checked_rec(_read_seq_base(base_file), checkpoint_dir),
-            run_id,
-        )
-    }
+    sink.handshake(arrow_schema)
+    metrics = StreamMetrics()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         import time as _time

@@ -48,11 +48,26 @@ def run_id_for_checkpoint(checkpoint_dir: str | None, filename: str) -> str:
     os.makedirs(checkpoint_dir, exist_ok=True)
     path = os.path.join(checkpoint_dir, filename)
     if os.path.exists(path):
-        with open(path) as f:
-            return f.read().strip()
+        return _read_nonempty_run_id(path)
     run_id = uuid.uuid4().hex
-    with open(path, "w") as f:
+    # write-tmp + os.replace, as the seq-base record: a crash mid-write
+    # cannot leave an empty id file behind
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
         f.write(run_id)
+    os.replace(tmp, path)
+    return run_id
+
+
+def _read_nonempty_run_id(path: str) -> str:
+    """An empty run id would write ``run=`` partitions that Spark reads
+    back as NULL, which no run-id comparison matches — refuse it."""
+    with open(path) as f:
+        run_id = f.read().strip()
+    if not run_id:
+        raise ValueError(
+            f"run id file {path!r} is empty; start a fresh checkpoint"
+        )
     return run_id
 
 
@@ -89,8 +104,26 @@ def read_run_id(checkpoint_dir: str, filename: str) -> str:
             f"{checkpoint_dir!r} — no stream of this kind ever ran on "
             "this checkpoint (typo'd path, or a cleaned checkpoint dir?)"
         )
-    with open(path) as f:
-        return f.read().strip()
+    return _read_nonempty_run_id(path)
+
+
+def require_run_partitioned(state_dir: str) -> None:
+    """Refuse a (run, batch)-partitioned state dir that holds any other
+    visible root entry: writing ``run=<id>/batch=N/`` partitions next to
+    it would leave a directory that is unreadable as one parquet table.
+    Call before anything is written."""
+    if not os.path.isdir(state_dir):
+        return
+    foreign = sorted(
+        e for e in os.listdir(state_dir)
+        if not e.startswith(("run=", "_", "."))
+    )
+    if foreign:
+        raise RuntimeError(
+            f"{state_dir} holds entries outside run=<id>/ partitions "
+            f"({', '.join(foreign[:3])}); use an empty or run-partitioned "
+            "directory (mixed layouts are unreadable as one table)"
+        )
 
 
 def _unescape_partition_value(name: str) -> str:

@@ -1226,102 +1226,89 @@ def test_stream_convert_battery_trip_parity(spark, tmp_path, which):
     assert sorted(key(r) for r in back) == sorted(key(r) for r in batch)
 
 
+def _bloom_bitmap_for(spark, members, n_bits):
+    """Build the ledger Bloom over `members` both ways a test needs it:
+    the driver-packed bitmap broadcast the probe reads, and the set bits
+    of `build_bloom_words`' rows as a plain Python set."""
+    from bolson_spark.streaming.ingest import build_bloom_bitmap, build_bloom_words
+
+    words = build_bloom_words(members, n_bits).cache()
+    bits = {
+        r.word_idx * 64 + b
+        for r in words.collect()
+        for b in range(64)
+        if (r.word >> b) & 1
+    }
+    bc = spark.sparkContext.broadcast(build_bloom_bitmap(words, n_bits))
+    words.unpersist()
+    return bc, bits
+
+
 def test_bloom_prefilter_no_false_negatives(spark):
     """The ledger Bloom prefilter's routing correctness: every
     fingerprint in the build set MUST be flagged maybe (a false
     negative would skip the exact anti-join and re-accept an already-
-    accepted doc), and most non-members are ruled out (the 100 TB win:
-    they skip the prior-ledger anti-join). The word-table join must be
-    a broadcast."""
-    from bolson_spark.streaming.ingest import (
-        bloom_maybe_contains,
-        build_bloom_words,
-    )
+    accepted doc), and most non-members are ruled out (they skip the
+    prior-ledger anti-join)."""
+    from bolson_spark.streaming.ingest import bloom_maybe_contains
 
-    members = spark.range(500).selectExpr("md5(cast(id as string)) fingerprint")
     n_bits = 1 << 14
-    words = build_bloom_words(members, n_bits).cache()
-
-    flagged = bloom_maybe_contains(members, words, n_bits)
+    members = spark.range(500).selectExpr("md5(cast(id as string)) fingerprint")
+    bc, _ = _bloom_bitmap_for(spark, members, n_bits)
+    flagged = bloom_maybe_contains(members, bc, n_bits)
     assert flagged.where("NOT _bloom_maybe").count() == 0  # no false negs
 
     others = spark.range(10_000, 12_000).selectExpr(
         "md5(cast(id as string)) fingerprint"
     )
     fp_rate = (
-        bloom_maybe_contains(others, words, n_bits)
-        .where("_bloom_maybe")
-        .count()
+        bloom_maybe_contains(others, bc, n_bits).where("_bloom_maybe").count()
         / 2000
     )
     assert fp_rate < 0.05, fp_rate  # ~0.9% expected at 10 bits/item
 
-    plan = flagged._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastQueryStage" in plan
-
 
 def test_bloom_bitmap_route_matches_words_and_is_shuffle_free(spark):
-    """The large-ledger Bloom route (driver-packed uint64 bitmap as a
-    broadcast variable, Arrow-vectorized gather): flags must equal the
-    word-table join route bit-for-bit (same JVM-side positions, same
-    bits — no false negatives by construction), and the probe plan
-    must contain ZERO shuffles and ZERO joins — that is the point of
-    the route at multi-billion-item ledgers."""
+    """The Bloom probe (driver-packed uint64 bitmap as a broadcast
+    variable, Arrow-vectorized gather): every flag must equal an
+    independent check — the bits of `build_bloom_words`' rows as a
+    Python set, probed with the row's `_bloom_positions` — a NULL
+    fingerprint is kept, and the probe plan holds ZERO shuffles and
+    ZERO joins, which is the point of the route at multi-billion-item
+    ledgers."""
     import re
 
-    from bolson_spark.streaming.ingest import (
-        bloom_maybe_contains,
-        bloom_maybe_contains_bitmap,
-        build_bloom_bitmap,
-        build_bloom_words,
-    )
+    from pyspark.sql import functions as F
 
+    from bolson_spark.streaming.ingest import _bloom_positions, bloom_maybe_contains
+
+    n_bits = 1 << 14
     members = spark.range(400).selectExpr("md5(cast(id as string)) fingerprint")
-    # one NULL fingerprint: xxhash64(NULL, seed) is non-null, so both
-    # routes must KEEP the row and compute the same flag for it (the
-    # words route uses a null-safe join for exactly this)
+    bc, bits = _bloom_bitmap_for(spark, members, n_bits)
+    # one NULL fingerprint: xxhash64(NULL, seed) is non-null, so the
+    # probe must KEEP the row and flag it from its positions like any other
     probe = spark.range(300, 1200).selectExpr(
         "if(id = 300, cast(NULL as string),"
         " md5(cast(id as string))) fingerprint"
     )
-    n_bits = 1 << 14
-    words = build_bloom_words(members, n_bits).cache()
-    bc = spark.sparkContext.broadcast(build_bloom_bitmap(words, n_bits))
-
-    via_words = {
-        r.fingerprint: r._bloom_maybe
-        for r in bloom_maybe_contains(probe, words, n_bits).collect()
-    }
-    assert len(via_words) == 900 and None in via_words  # NULL row kept
-    bm_df = bloom_maybe_contains_bitmap(probe, bc, n_bits)
-    via_bitmap = {
-        r.fingerprint: r._bloom_maybe for r in bm_df.collect()
-    }
-    assert via_bitmap == via_words
-    # members all flagged maybe through the bitmap too (no false negs)
-    assert (
-        bloom_maybe_contains_bitmap(members, bc, n_bits)
-        .where("NOT _bloom_maybe")
-        .count()
-        == 0
+    flagged = bloom_maybe_contains(probe, bc, n_bits).withColumn(
+        "pos", _bloom_positions(F.col("fingerprint"), n_bits)
     )
-    plan = bm_df._jdf.queryExecution().executedPlan().toString()
+    rows = flagged.collect()
+    assert len(rows) == 900
+    assert sum(r.fingerprint is None for r in rows) == 1  # NULL row kept
+    for r in rows:
+        assert r._bloom_maybe == all(p in bits for p in r.pos), r
+    plan = flagged._jdf.queryExecution().executedPlan().toString()
     assert not re.search(
         r"\b(?:Exchange|ShuffleQueryStage|AQEShuffleRead|Join)\b", plan
     ), plan
-    words.unpersist()
 
 
-def test_stream_ingest_bitmap_bloom_route_end_to_end(
-    spark, tmp_path, monkeypatch
-):
-    """Force the bitmap route (threshold shrunk below the minimum
-    Bloom size) through a real two-run ingest: run 2's prior-ledger
-    prefilter goes through the broadcast bitmap and must gate exact
-    dups identically to the word-join route."""
+def test_stream_ingest_bitmap_bloom_route_end_to_end(spark, tmp_path):
+    """A real two-run ingest: run 2's prior-ledger prefilter goes
+    through the broadcast bitmap and must gate exact dups."""
     import bolson_spark.streaming.ingest as ing
-
-    monkeypatch.setattr(ing, "BLOOM_BROADCAST_MAX_BITS", 1 << 10)
 
     root = tmp_path / "bmroute"
     src = root / "src"
@@ -3053,8 +3040,9 @@ def test_seq_base_record_is_replay_stable(tmp_path):
     always advances (a seq-base file surviving into a different /
     reset lineage must never hand a colliding batch id the old base —
     that would publish overlapping seq ranges for different payloads),
-    and legacy records (v2 batch-keyed, v1 bare advanced-base int)
-    keep their old semantics until the next write upgrades them."""
+    and anything but a v3 record (a v2 or v1 record, an empty file)
+    refuses instead of being read as a base — at stream start, before
+    any write."""
     from bolson_spark.streaming.pipeline import (
         _read_seq_base,
         _resolve_seq_base,
@@ -3080,21 +3068,20 @@ def test_seq_base_record_is_replay_stable(tmp_path):
     assert _resolve_seq_base(rec, 2, "runA") == 150
     assert _resolve_seq_base(rec, 1, "runB") == 150  # mismatch advances
 
-    # v2 back-compat: batch-keyed record with no run id — wildcard
-    # lineage (old same-id-reuses behavior preserved)
-    with open(f, "w") as fh:
-        fh.write("v2 3 200 25")
-    rec = _read_seq_base(f)
-    assert rec == (None, 3, 200, 25)
-    assert _resolve_seq_base(rec, 3, "runA") == 200
-    assert _resolve_seq_base(rec, 4, "runA") == 225
-
-    # v1 back-compat: a bare advanced-base integer
-    with open(f, "w") as fh:
-        fh.write("250")
-    rec = _read_seq_base(f)
-    assert rec == (None, -1, 250, 0)
-    assert _resolve_seq_base(rec, 7, "runA") == 250
+    # a stream refuses the same records at start, before it mints a
+    # run id or publishes a schema (and before it touches its source)
+    sink = IpcFileSink(str(tmp_path / "topic"))
+    for bad in ("v2 3 200 25", "250", ""):
+        with open(f, "w") as fh:
+            fh.write(bad)
+        with pytest.raises(ValueError, match="start a fresh checkpoint"):
+            _read_seq_base(f)
+        with pytest.raises(ValueError, match="not a v3 record"):
+            run_stream_convert(
+                None, BATTERY_SPARK, sink, checkpoint_dir=str(tmp_path)
+            )
+        assert sorted(os.listdir(tmp_path)) == ["bolson_seq_base", "topic"]
+        assert os.listdir(sink.path) == []
 
 
 def test_seq_base_lineage_check_against_offsets_log(tmp_path):
@@ -3202,39 +3189,60 @@ def test_control_plane_refuses_dfs_uris(tmp_path):
     assert run_partition_ids(str(tmp_path / "nope")) == []
 
 
-def test_seq_base_v2_upgrade_on_sight(tmp_path):
-    """r8 VERDICT #7: a legacy v2 record (no run id — wildcard lineage)
-    is rewritten as v3 bound to the current lineage the first time a
-    stream reads it, so the wildcard window closes PERMANENTLY: after
-    the upgrade a foreign-lineage batch-id collision advances instead
-    of reusing the old base. Coerced pure-advance records (batch -1)
-    carry no reusable batch id and are left alone."""
-    from bolson_spark.streaming.pipeline import (
-        _read_seq_base,
-        _resolve_seq_base,
-        _upgraded_rec,
-    )
+@pytest.mark.parametrize("stream", ["quarantine", "ledger", "accepted"])
+def test_run_partitioned_dirs_refuse_foreign_root_entries(tmp_path, stream):
+    """The quarantine dir and the ingest ledger/ and accepted/ dirs hold
+    run=<id>/batch=N/ partitions only: a foreign root entry (a bare
+    batch= partition or a loose file) would make the dir unreadable as
+    one table once the stream writes next to it. The stream refuses
+    before it writes anything — no run id, no schema, no partition.
+    The refusal comes before the stream's source is touched, so no
+    Spark session is needed."""
+    from bolson_spark.streaming.ingest import run_stream_ingest
 
-    f = str(tmp_path / "bolson_seq_base")
-    with open(f, "w") as fh:
-        fh.write("v2 3 200 25")
-    rec = _upgraded_rec(f, _read_seq_base(f), "runA")
-    assert rec == ("runA", 3, 200, 25)
-    # the FILE was rewritten: a later read sees v3, not the wildcard
-    assert _read_seq_base(f) == ("runA", 3, 200, 25)
-    # same lineage keeps replay-reuse; foreign lineage now refuses
-    assert _resolve_seq_base(rec, 3, "runA") == 200
-    assert _resolve_seq_base(rec, 3, "runB") == 225
+    ck = tmp_path / "ck"
+    sink = IpcFileSink(str(tmp_path / "topic"))
+    if stream == "quarantine":
+        state = tmp_path / "quarantine"
+        state.mkdir()
+        (state / "part-0.parquet").write_text("x")  # a loose file
+    else:
+        state = tmp_path / "out" / stream
+        (state / "batch=0").mkdir(parents=True)  # a partition outside run=
+    (state / "run=abc").mkdir()
+    (state / "_SUCCESS").write_text("")
+    (state / ".hidden").write_text("")
+    before = {d: sorted(os.listdir(d)) for d in (tmp_path, state, sink.path)}
+    with pytest.raises(RuntimeError, match="outside run=<id>/ partitions"):
+        if stream == "quarantine":
+            run_stream_convert(
+                None,
+                BATTERY_SPARK,
+                sink,
+                checkpoint_dir=str(ck),
+                on_error="quarantine",
+                quarantine_dir=str(state),
+            )
+        else:
+            run_stream_ingest(None, None, str(tmp_path / "out"), str(ck))
+    # no checkpoint (run id), no schema, no partition
+    assert {d: sorted(os.listdir(d)) for d in before} == before
 
-    # batch -1 (v1 / horizon-coerced) records: nothing to bind
-    with open(f, "w") as fh:
-        fh.write("250")
-    rec = _upgraded_rec(f, _read_seq_base(f), "runA")
-    assert rec == (None, -1, 250, 0)
-    assert _read_seq_base(f) == (None, -1, 250, 0)  # file untouched
 
-    # no current run id (checkpoint-less run): wildcard kept as-is
-    with open(f, "w") as fh:
-        fh.write("v2 3 200 25")
-    assert _upgraded_rec(f, _read_seq_base(f), None) == (None, 3, 200, 25)
-    assert _read_seq_base(f) == (None, 3, 200, 25)
+def test_run_id_file_is_written_atomically_and_never_empty(tmp_path):
+    """A run id is minted with write-tmp + os.replace, so a crash cannot
+    leave an empty id file; an empty one (from an older writer's crash)
+    refuses on both the minting and the read-only path — an empty id
+    would write run= partitions that read back as NULL and match no
+    run-id comparison."""
+    from bolson_spark.streaming.util import read_run_id, run_id_for_checkpoint
+
+    ck = tmp_path / "ck"
+    run_id = run_id_for_checkpoint(str(ck), "bolson_run_id")
+    assert run_id and os.listdir(ck) == ["bolson_run_id"]  # no tmp left
+    assert run_id_for_checkpoint(str(ck), "bolson_run_id") == run_id
+    assert read_run_id(str(ck), "bolson_run_id") == run_id
+    (ck / "bolson_run_id").write_text("  \n")
+    for fn in (run_id_for_checkpoint, read_run_id):
+        with pytest.raises(ValueError, match="is empty"):
+            fn(str(ck), "bolson_run_id")
