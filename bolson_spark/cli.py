@@ -566,35 +566,40 @@ def cmd_bench_pipeline(args) -> int:
 
 
 def cmd_bench_sink(args) -> int:
-    """B4 (publish/bench.cpp:23-92): sink-only micro-bench — write n
-    fixed-size junk messages through the IPC sink path and report
-    goodput MB/s + avg per-message latency ms."""
+    """B4 (publish/bench.cpp:23-92): sink-only micro-bench — publish n
+    fixed-size junk messages, as one driver-side table of IPC-message
+    rows, through the IPC sink and report goodput MB/s + avg
+    per-message latency ms."""
     import pyarrow as pa
 
-    from bolson_spark.session import get_spark
     from bolson_spark.streaming.sink import IpcFileSink
 
-    spark = get_spark("bolson-bench-sink")
     payload = bytes(args.message_size)
     sink = IpcFileSink(args.sink)
     sink.handshake(pa.schema([("junk", pa.binary())]))
-    rows = [(i, i, payload, len(payload)) for i in range(args.num_messages)]
-    df = spark.createDataFrame(
-        rows, ["seq_first", "seq_last", "ipc", "ipc_bytes"]
-    ).repartition(args.partitions)
-    df.cache().count()  # materialize outside the timed region
+    n = args.num_messages
+    seqs = pa.array(range(n), pa.int64())
+    messages = pa.table(
+        {
+            "payload": pa.array([payload] * n, pa.binary()),
+            "seq_first": seqs,
+            "seq_last": seqs,
+            "num_rows": pa.array([1] * n, pa.int64()),
+            "ipc_bytes": pa.array([len(payload)] * n, pa.int64()),
+        }
+    )
     t0 = time.perf_counter()
-    sink.write(df)
+    sink.write(messages)
     dt = time.perf_counter() - t0
-    total_mb = args.num_messages * args.message_size / 1e6
+    total_mb = n * args.message_size / 1e6
     print(
         json.dumps(
             {
-                "num_messages": args.num_messages,
+                "num_messages": n,
                 "message_size": args.message_size,
                 "sec": round(dt, 4),
                 "goodput_mbs": round(total_mb / dt, 3),
-                "avg_latency_ms": round(dt / args.num_messages * 1e3, 4),
+                "avg_latency_ms": round(dt / n * 1e3, 4),
             }
         )
     )
@@ -944,7 +949,6 @@ def main(argv=None) -> int:
     bs.add_argument("--sink", required=True)
     bs.add_argument("--num-messages", type=int, default=1024)
     bs.add_argument("--message-size", type=int, default=65536)
-    bs.add_argument("--partitions", type=int, default=8)
     bs.set_defaults(fn=cmd_bench_sink)
     bl = bsub.add_parser(
         "stream",

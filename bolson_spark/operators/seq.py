@@ -99,12 +99,15 @@ def add_seq_by_partition(
     pid = F.spark_partition_id()
     local = F.monotonically_increasing_id() - F.shiftleft(pid.cast("bigint"), 33)
     # the coalesce only types bolson_seq non-nullable, as add_seq's is:
-    # every partition that holds a row has an offset
+    # every partition that holds a row has an offset. Its fallback is a
+    # constant: codegen inlines a primitive literal, so a ``start`` there
+    # would compile new code for every new base, while the offsets
+    # array is passed by reference
     offset = F.coalesce(
         F.element_at(
             F.array(*[F.lit(o) for o in offsets]).cast("array<bigint>"), pid + 1
         ),
-        F.lit(start).cast("bigint"),
+        F.lit(0).cast("bigint"),
     )
     # Reference prepends bolson_seq at column index 0 (parse/arrow.cpp:155)
     return df.select((offset + local).alias(name), *df.columns)

@@ -8,14 +8,20 @@ Spark mapping:
 - source: any line-framed streaming DataFrame with a single string
   column (``readStream.format("socket")`` for the TCP analog,
   ``format("text")`` for replayable tests, Kafka in production);
-- convert: the batch operators applied inside ``foreachBatch``, as
-  three Spark jobs and no exchange: one stats job (each source
-  partition's row count and JSON bytes), one job that parses (strict,
-  Catalyst), numbers each source partition from its offset after a
-  driver-maintained base and coalesces (``partition_layout``;
-  replay-stable: a replayed batch resolves to its original base and
-  renumbers identically), and IPC-serializes, and the sink write;
-- sink: IpcFileSink (schema handshake on start, append per batch);
+- convert: the batch operators applied inside ``foreachBatch``, with
+  no exchange. A micro-batch in one source partition (a socket's) is
+  one Spark job: it parses (strict, Catalyst), numbers the rows from a
+  driver-maintained base (replay-stable: a replayed batch resolves to
+  its original base and renumbers identically), IPC-serializes, and
+  collects the messages to the driver; an ``Observation`` on the
+  source sums the JSON bytes in the same job. A micro-batch in several
+  source partitions (file, Kafka) or in quarantine mode first runs a
+  stats job (each partition's row count and JSON bytes), and
+  ``partition_layout`` numbers each partition from its offset and
+  coalesces;
+- sink: the driver publishes the collected messages (the reference's
+  IPC queue pop, publisher.h:43-47); IpcFileSink writes one parquet
+  file per batch after the schema handshake at start;
 - drain: ``trigger(availableNow=True)`` + ``awaitTermination`` ==
   "process everything the source has, then stop" — the
   ``jsons_received == publish_count`` spin-loop without the spin.
@@ -36,13 +42,13 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT
 from bolson_spark.operators.parse import as_declared, parse_json, parse_json_quarantine
-from bolson_spark.operators.seq import partition_layout
+from bolson_spark.operators.seq import add_seq_by_partition, partition_layout
 from bolson_spark.operators.serialize import serialize_ipc
 from bolson_spark.schemas import spark_to_arrow_schema
 from bolson_spark.streaming.sink import PublishSink
@@ -51,6 +57,12 @@ from bolson_spark.streaming.util import (
     run_id_for_checkpoint,
     write_run_batch,
 )
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """The partition count of ``df``'s physical plan, read without
+    running a job (``df.rdd`` would also build a Python RDD)."""
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
 
 
 def _read_seq_base(base_file: str | None) -> tuple[str | None, int, int, int]:
@@ -174,10 +186,13 @@ def run_stream_convert(
 ):
     """Start the convert stream; returns (query, metrics).
 
-    Each micro-batch parses with Catalyst (``parse_json``), and
-    ``partition_layout`` numbers it over the per-partition row counts of
-    the batch's stats job and coalesces it to one partition per
-    ``4 * max_rows`` rows.
+    Each micro-batch parses with Catalyst (``parse_json``). A batch in
+    one source partition is numbered from its base in the serialize
+    job, its only job. Any other batch runs a stats job first, and
+    ``partition_layout`` numbers it over the per-partition row counts
+    and coalesces it to one partition per ``4 * max_rows`` rows. The
+    serialize job collects the batch's IPC messages, and
+    ``sink.write`` publishes them from the driver.
 
     ``on_error`` selects the failure posture: ``"fail"`` reproduces the
     reference's hard error on the first bad document
@@ -249,14 +264,29 @@ def run_stream_convert(
         import time as _time
 
         received_ts = _time.time()
-        batch_df = batch_df.cache()
-        routed = parsed = ordered = ser = None
+        # one source partition (a socket micro-batch) is numbered from
+        # the base alone, so it needs no stats job and no cache: the
+        # serialize job is the batch's only job
+        single = on_error == "fail" and _num_partitions(batch_df) <= 1
+        if not single:
+            batch_df = batch_df.cache()
+        routed = parsed = ordered = None
         try:
             # order inside the micro-batch: each source partition's own
             # row order, partitions in id order; each partition numbers
             # its rows from its own offset, so no job sorts them
             nq = 0
-            if on_error == "quarantine":
+            if single:
+                # the JSON bytes ride on the serialize job
+                obs = Observation()
+                parsed = parse_json(
+                    batch_df.observe(
+                        obs, F.sum(F.octet_length(json_col)).alias("b")
+                    ),
+                    schema,
+                    json_col,
+                )
+            elif on_error == "quarantine":
                 routed = parse_json_quarantine(
                     batch_df.withColumn("_b", F.octet_length(json_col)),
                     schema,
@@ -304,15 +334,16 @@ def run_stream_convert(
                     F.octet_length(json_col).alias("b"),
                 ).toArrow()
                 parsed = parse_json(batch_df, schema, json_col)
-            n = stats.num_rows
-            if n == 0:
-                # nothing to publish: the batch is complete once the
-                # (idempotent) quarantine write landed, so counting here
-                # cannot be replayed-and-recounted
-                metrics.num_quarantined += nq
-                return  # finally unpersists the caches
-            jb = pc.sum(stats.column("b")).as_py() or 0
-            counts = np.bincount(stats.column("p").to_numpy())
+            if not single:
+                n = stats.num_rows
+                if n == 0:
+                    # nothing to publish: the batch is complete once the
+                    # (idempotent) quarantine write landed, so counting
+                    # here cannot be replayed-and-recounted
+                    metrics.num_quarantined += nq
+                    return  # finally unpersists the caches
+                jb = pc.sum(stats.column("b")).as_py() or 0
+                counts = np.bincount(stats.column("p").to_numpy())
             # replay-stable base: a replayed batch id reuses its
             # original base (identical renumbering -> byte-identical
             # republished messages); persisted BEFORE the publish
@@ -326,18 +357,27 @@ def run_stream_convert(
                 parsed = parsed.cache()
                 parsed.count()
                 parsed_ts = _time.time()
-            ordered = partition_layout(parsed, counts, base, max_rows)
+            if single:
+                ordered = add_seq_by_partition(parsed, [], start=base)
+            else:
+                ordered = partition_layout(parsed, counts, base, max_rows)
             if staged:
                 ordered = ordered.cache()
                 ordered.count()
                 resized_ts = _time.time()
-            ser = serialize_ipc(
+            # the batch's last job: it collects the IPC messages to the
+            # driver, the publisher's queue item (publisher.h:43-47); a
+            # strict-parse failure raises here, before anything below
+            # records or publishes the batch
+            messages = serialize_ipc(
                 ordered, max_rows=max_rows, max_ipc_size=max_ipc_size
-            ).cache()
-            # materialize before the publish, so a strict-parse failure
-            # publishes nothing; the per-message sizes are the count
-            ipc_bytes = ser.select("ipc_bytes").toArrow().column(0)
+            ).toArrow()
             serialized_ts = _time.time()
+            if single:
+                n = pc.sum(messages.column("num_rows")).as_py() or 0
+                if n == 0:
+                    return
+                jb = obs.get["b"] or 0
             # persist the (batch_id, base, n) record BEFORE publishing:
             # a replay recomputes the identical record, so whichever
             # side of the publish a crash lands on, the replayed batch
@@ -346,7 +386,7 @@ def run_stream_convert(
                 _write_seq_base(base_file, run_id, batch_id, base, n)
             state["rec"] = (run_id, batch_id, base, n)
             popped_ts = _time.time()  # handoff to the publisher (queue pop)
-            sink.write(ser)
+            sink.write(messages)
             published_ts = _time.time()
             if staged:
                 latency.stamp(
@@ -367,20 +407,21 @@ def run_stream_convert(
             metrics.num_quarantined += nq
             metrics.num_jsons += n
             metrics.json_bytes += jb
-            metrics.num_ipc += len(ipc_bytes)
-            metrics.ipc_bytes += pc.sum(ipc_bytes).as_py() or 0
+            metrics.num_ipc += messages.num_rows
+            metrics.ipc_bytes += pc.sum(messages.column("ipc_bytes")).as_py() or 0
             metrics.batches.append(n)
         finally:
             # unpersist in finally: an exception mid-batch (e.g. a
             # transient sink failure followed by a streaming retry)
             # must not leak a cached copy of the micro-batch per attempt
-            cached = [ser, routed]
+            cached = [routed]
             if latency is not None:
                 cached += [parsed, ordered]
+            if not single:
+                cached.append(batch_df)
             for df in cached:
                 if df is not None:
                     df.unpersist()
-            batch_df.unpersist()
 
     writer = raw.writeStream.foreachBatch(process)
     if checkpoint_dir:

@@ -9,10 +9,15 @@ is configured with max messages / max bytes / max delay
 (publisher.cpp:63-69, CLI defaults publisher.cpp:265-277).
 
 Spark mapping: the pub/sub boundary is ``foreachBatch`` + a
-``PublishSink``. Three backends share the handshake protocol:
+``PublishSink``. The micro-batch's serialize job collects its IPC
+messages to the driver as one Arrow table (the reference's IPC queue
+item, publisher.h:43-47), and ``write`` publishes that table from the
+driver. Three backends share the handshake protocol:
 
 - ``IpcFileSink`` — directory-backed topic stand-in (the only backend
-  that can run in this environment; fully end-to-end tested);
+  that can run in this environment; fully end-to-end tested): one
+  parquet file per micro-batch, written with pyarrow and renamed into
+  place, so publishing runs no Spark job;
 - ``KafkaSink`` — the production path: ``df.write.format("kafka")``
   with the batching options mapped onto the Kafka producer
   (``kafka.batch.size`` <- max_bytes, ``kafka.linger.ms`` <-
@@ -30,9 +35,11 @@ Spark mapping: the pub/sub boundary is ``foreachBatch`` + a
 from __future__ import annotations
 
 import os
+import uuid
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -76,13 +83,17 @@ class PublishSink:
                 f"topic schema {existing} != producer schema {expected}"
             )
 
-    def write(self, serialized: DataFrame) -> None:
+    def write(self, messages: pa.Table) -> None:
+        """Publish one micro-batch's IPC messages: a driver-side table
+        with ``serialize.SERIALIZED_SCHEMA``'s columns (payload, seq_first,
+        seq_last, num_rows, ipc_bytes), one row per message."""
         raise NotImplementedError
 
 
 class IpcFileSink(PublishSink):
     """Directory-backed stand-in for a pub/sub topic: `_schema.arrow`
-    plays the role of message #1; message rows append as parquet."""
+    plays the role of message #1; each micro-batch's message rows land
+    as one parquet file under `messages/`."""
 
     def __init__(self, path: str):
         self.path = path
@@ -100,10 +111,16 @@ class IpcFileSink(PublishSink):
         with open(self.schema_path, "wb") as f:
             f.write(schema.serialize())
 
-    def write(self, serialized: DataFrame) -> None:
-        """Append one micro-batch of IPC-message rows (payload,
-        seq_first, seq_last, num_rows, ipc_bytes)."""
-        serialized.write.mode("append").parquet(self.data_path)
+    def write(self, messages: pa.Table) -> None:
+        """Append one micro-batch of IPC-message rows as one parquet
+        file. It is written under a hidden name, which Spark's readers
+        skip, and renamed into place, so no reader sees a partial
+        file."""
+        os.makedirs(self.data_path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.data_path, f".{name}.tmp")
+        pq.write_table(messages, tmp)
+        os.replace(tmp, os.path.join(self.data_path, name))
 
     def read(self, spark) -> DataFrame:
         return spark.read.parquet(self.data_path)
@@ -213,9 +230,9 @@ class KafkaSink(PublishSink):
             .save()
         )
 
-    def write(self, serialized: DataFrame) -> None:
+    def write(self, messages: pa.Table) -> None:
         (
-            self.to_messages(serialized)
+            self.to_messages(self.spark.createDataFrame(messages))
             .write.format("kafka")
             .options(**self.producer_options())
             .option("includeHeaders", "true")
@@ -344,10 +361,10 @@ class PulsarSink(PublishSink):
         ).otherwise(F.col("value"))
         return msgs.withColumn("value", guard)
 
-    def write(self, serialized: DataFrame) -> None:
+    def write(self, messages: pa.Table) -> None:
         try:
             (
-                self._capped_messages(serialized)
+                self._capped_messages(self.spark.createDataFrame(messages))
                 .write.format("pulsar")
                 .options(**self.producer_options())
                 .save()

@@ -589,3 +589,22 @@ def test_cli_bench_convert_smoke(spark, capsys):
     out = _out_line(capsys)
     assert out["num_jsons"] == 2000
     assert out["num_ipc"] >= 2 and out["ipc_mb"] > 0 and out["sec"] > 0
+
+
+def test_cli_bench_sink_smoke(spark, tmp_path, capsys):
+    """`bench sink` publishes its junk messages as one driver-side table
+    through the IPC sink; the topic reads back one row per message."""
+    from bolson_spark.streaming.sink import IpcFileSink
+
+    topic = str(tmp_path / "topic")
+    assert main([
+        "bench", "sink", "--sink", topic,
+        "--num-messages", "32", "--message-size", "1024",
+    ]) == 0
+    out = _out_line(capsys)
+    assert out["num_messages"] == 32 and out["message_size"] == 1024
+    assert out["sec"] > 0 and out["goodput_mbs"] > 0
+    back = IpcFileSink(topic).read(spark).toArrow()
+    assert back.num_rows == 32
+    assert set(back.column("ipc_bytes").to_pylist()) == {1024}
+    assert sorted(back.column("seq_first").to_pylist()) == list(range(32))

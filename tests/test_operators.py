@@ -293,6 +293,32 @@ def test_add_seq_by_partition_matches_window(spark):
         df.unpersist()
 
 
+def test_add_seq_by_partition_compiles_once_across_bases(spark):
+    """A stream numbers every micro-batch from a new base. The base must
+    not reach the generated code: after one layout, a layout with a
+    different ``start`` (and so different offsets) compiles nothing,
+    counted by Spark's codegen compilation metric."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    batch = (
+        spark.range(0, 1200, 1, 2)
+        .selectExpr("concat('{\"voltage\": [', id, ']}') AS value")
+        .cache()
+    )
+    try:
+        parsed = parse_json(batch, BATTERY_SPARK, "value")
+        compiles = []
+        for start in (0, 123_456):
+            before = codegen.METRIC_COMPILATION_TIME().getCount()
+            msgs = serialize_ipc(
+                add_seq_by_partition(parsed, [600, 600], start=start)
+            ).toArrow()
+            compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+            assert msgs.column("seq_first").to_pylist() == [start, start + 600]
+        assert compiles[1] == 0, compiles
+    finally:
+        batch.unpersist()
+
+
 def test_add_seq_scalable_deterministic_without_aqe(spark):
     """Regression: the bucket ids MUST be identical across the counts
     pass and the numbering pass. A repartitionByRange-based scheme

@@ -200,33 +200,74 @@ def test_multi_partition_source_seq_semantics(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
 
 
-def test_stream_microbatch_runs_three_jobs(spark, tmp_path):
-    """One micro-batch of a file-source stream runs at most three Spark
-    jobs in its body (the stats job, the serialize job, the sink write),
-    counted from the status store by the query's job group."""
-    src = tmp_path / "src"
+def _write_files(src, counts, bad_every=0):
+    """One jsonl file per entry of ``counts`` under ``src``: file ``f``
+    holds ``counts[f]`` battery docs ``{"voltage": [f, i]}``, and with
+    ``bad_every`` every ``bad_every``-th line of the first file is a
+    malformed doc instead. Returns the good lines, file by file."""
     src.mkdir()
-    (src / "one.jsonl").write_text(
-        "".join(json.dumps({"voltage": [i, i + 1]}) + "\n" for i in range(2000))
+    good = []
+    for f, cnt in enumerate(counts):
+        ls = [json.dumps({"voltage": [f, i]}) for i in range(cnt)]
+        if f == 0 and bad_every:
+            ls[::bad_every] = ['{"voltage": [1]'] * len(ls[::bad_every])
+        (src / f"file-{f}.jsonl").write_text("\n".join(ls) + "\n")
+        good += [ln for ln in ls if ln.endswith("}")]
+    return good
+
+
+def _split_files(spark):
+    """Pin maxPartitionBytes so ~15 KB files neither pack nor split:
+    one source partition per file (restore the returned value)."""
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(120 * 1024))
+    return old
+
+
+def _query_jobs(spark, query) -> list[int]:
+    return sorted(
+        spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
     )
+
+
+def test_stream_microbatch_job_counts(spark, tmp_path):
+    """A micro-batch in one source partition runs one Spark job, the
+    serialize job that collects its IPC messages (no stats job, and the
+    sink write runs none); a batch in four source partitions adds the
+    stats job. Jobs are counted from the status store by the query's
+    job group."""
+    _write_files(tmp_path / "one", [2000])
     sink = IpcFileSink(str(tmp_path / "topic"))
     query, metrics = run_stream_convert(
-        spark.readStream.format("text").load(str(src)),
+        spark.readStream.format("text").load(str(tmp_path / "one")),
         BATTERY_SPARK,
         sink,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     query.awaitTermination(120)
     assert metrics.batches == [2000]
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
-    assert 1 <= len(jobs) <= 3, sorted(jobs)
+    assert len(_query_jobs(spark, query)) == 1, _query_jobs(spark, query)
+
+    _write_files(tmp_path / "four", [700, 650, 600, 550])
+    old_mpb = _split_files(spark)
+    try:
+        query, metrics = run_stream_convert(
+            spark.readStream.format("text").load(str(tmp_path / "four")),
+            BATTERY_SPARK,
+            IpcFileSink(str(tmp_path / "topic4")),
+            checkpoint_dir=str(tmp_path / "ckpt4"),
+        )
+        query.awaitTermination(120)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
+    assert metrics.batches == [2500]
+    assert 1 <= len(_query_jobs(spark, query)) <= 2, _query_jobs(spark, query)
 
 
 def test_stream_quarantine_microbatch_job_counts(spark, tmp_path):
     """A quarantine micro-batch runs one stats job over its routed rows:
-    at most three jobs when every document is clean (stats, serialize,
-    sink write) and four with bad documents (plus the dead-letter
-    write)."""
+    at most two jobs when every document is clean (stats, serialize)
+    and three with bad documents (plus the dead-letter write)."""
     for name, bad in (("clean", 0), ("bad", 3)):
         src = tmp_path / name
         src.mkdir()
@@ -243,10 +284,67 @@ def test_stream_quarantine_microbatch_job_counts(spark, tmp_path):
         )
         query.awaitTermination(120)
         assert metrics.batches == [500 - bad] and metrics.num_quarantined == bad
-        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
-            str(query.runId)
+        jobs = _query_jobs(spark, query)
+        assert 1 <= len(jobs) <= 2 + (bad > 0), (name, jobs)
+
+
+@pytest.mark.parametrize("source", ["one_partition", "four_partitions", "quarantine"])
+def test_stream_metrics_count_published_messages(spark, tmp_path, source):
+    """StreamMetrics' counters on each route: json_bytes is the UTF-8
+    bytes of the converted lines without their newlines (the quarantine
+    route counts only the clean ones), num_jsons the converted docs,
+    and num_ipc / ipc_bytes the count and byte sum of the messages the
+    sink published."""
+    counts = [2000] if source == "one_partition" else [700, 650, 600, 550]
+    quarantine = source == "quarantine"
+    lines = _write_files(tmp_path / "src", counts, bad_every=50 if quarantine else 0)
+    kw = {}
+    if quarantine:
+        kw = {"on_error": "quarantine", "quarantine_dir": str(tmp_path / "q")}
+    sink = IpcFileSink(str(tmp_path / "topic"))
+    old_mpb = _split_files(spark)
+    try:
+        query, metrics = run_stream_convert(
+            spark.readStream.format("text").load(str(tmp_path / "src")),
+            BATTERY_SPARK,
+            sink,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            max_rows=256,
+            **kw,
         )
-        assert 1 <= len(jobs) <= 3 + (bad > 0), (name, sorted(jobs))
+        query.awaitTermination(120)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
+    assert metrics.batches == [len(lines)]
+    assert metrics.num_jsons == len(lines)
+    assert metrics.json_bytes == sum(len(ln.encode()) for ln in lines)
+    published = sink.read(spark).select("ipc_bytes", "payload").toArrow()
+    assert metrics.num_ipc == published.num_rows >= len(lines) // 256
+    assert metrics.ipc_bytes == sum(published.column("ipc_bytes").to_pylist())
+    assert metrics.ipc_bytes == sum(
+        len(p) for p in published.column("payload").to_pylist()
+    )
+
+
+def test_ipc_file_sink_reads_spark_and_driver_parts_as_one_topic(spark, tmp_path):
+    """A topic dir holding a part from a Spark parquet append (how
+    earlier versions published) and parts the driver wrote reads back
+    through ``sink.read`` as one table, and a write leaves no tmp file
+    behind."""
+    from bolson_spark.operators.serialize import SERIALIZED_SCHEMA
+
+    sink = IpcFileSink(str(tmp_path / "topic"))
+    rows = [(b"\x00a", 0, 9, 10, 2), (b"\x01b", 10, 19, 10, 2)]
+    spark.createDataFrame(rows[:1], SERIALIZED_SCHEMA).write.mode("append").parquet(
+        sink.data_path
+    )
+    driver = spark.createDataFrame(rows[1:], SERIALIZED_SCHEMA).toArrow()
+    sink.write(driver)
+    assert not [f for f in os.listdir(sink.data_path) if f.endswith(".tmp")]
+    back = sink.read(spark)
+    assert back.schema == spark.createDataFrame([], SERIALIZED_SCHEMA).schema
+    got = sorted((bytes(r.payload), *r[1:]) for r in back.collect())
+    assert got == rows
 
 
 def test_schema_handshake_rejects_mismatch(tmp_path):
@@ -379,7 +477,7 @@ def test_pulsar_sink_option_mapping_and_env_missing(spark, tmp_path):
     with pytest.raises(RuntimeError, match="pulsar backend unavailable"):
         make_sink(spark, "pulsar://broker1:6650/bolson")
     with pytest.raises(RuntimeError, match="pulsar backend unavailable"):
-        sink.write(ipc_rows)
+        sink.write(ipc_rows.toArrow())
     with pytest.raises(ValueError):
         make_sink(spark, "pulsar://only-servers")
 
@@ -806,7 +904,11 @@ def test_stream_convert_over_tcp_socket(spark, tmp_path):
         msgs, "bolson_seq bigint, voltage array<bigint>"
     ).collect()
     assert sorted(r.bolson_seq for r in back) == list(range(len(docs)))
-    # one socket, one partition per micro-batch: seq is arrival position
+    # one socket, one partition per micro-batch: one Spark job a batch
+    # (the socket source's first batch is empty, and runs one too)
+    ran = [p for p in query.recentProgress if "addBatch" in p["durationMs"]]
+    assert len(_query_jobs(spark, query)) == len(ran) >= len(metrics.batches)
+    # and seq is arrival position
     assert [r.voltage for r in sorted(back, key=lambda r: r.bolson_seq)] == [
         d["voltage"] for d in docs
     ]
