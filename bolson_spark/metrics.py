@@ -14,12 +14,12 @@ Spark mapping:
   (latency.h:30-47) map to: Receive = micro-batch handed to
   foreachBatch; Parse = parse job materialized; Resize = seq +
   coalesce materialized (per-partition numbering, no re-partition);
-  Serialize = the serialize job returned the batch's IPC messages to
-  the driver; Pop = the seq-base record written and the collected
+  Serialize = the batch's numbered rows collected and cut into IPC
+  messages on the driver; Pop = the seq-base record written and the
   messages handed to the publisher (the reference's IPC-queue pop);
   Publish = ``sink.write`` of those messages returned. When latency
-  tracking is OFF the pipeline runs parse, seq, coalesce and serialize
-  as one job — stamping them separately requires per-stage
+  tracking is OFF the pipeline runs parse, seq and coalesce as one
+  job — stamping them separately requires per-stage
   materialization barriers, so (like the reference's --latency flag)
   the staged path only runs when asked;
 - ``save_latency_csv``/``save_metrics_csv`` write the reference's

@@ -123,8 +123,8 @@ def partition_layout(
     (``add_seq_by_partition`` over the per-partition row ``counts``),
     then coalesced to one partition per ``4 * max_rows`` rows. Both are
     narrow, so the layout makes no exchange; source partitions keep
-    their rows, and ``serialize_ipc`` cuts its messages at the seq gaps
-    between the partitions a coalesce merged."""
+    their rows, and the serialize kernel (``serialize.ipc_messages``)
+    cuts its messages at any seq gap between the runs a coalesce merged."""
     n = int(sum(counts))
     return add_seq_by_partition(df, counts, start=start).coalesce(
         max(1, n // (4 * max_rows))

@@ -9,19 +9,23 @@ Spark mapping:
   column (``readStream.format("socket")`` for the TCP analog,
   ``format("text")`` for replayable tests, Kafka in production);
 - convert: the batch operators applied inside ``foreachBatch``, with
-  no exchange. A micro-batch in one source partition (a socket's) is
-  one Spark job: it parses (strict, Catalyst), numbers the rows from a
-  driver-maintained base (replay-stable: a replayed batch resolves to
-  its original base and renumbers identically), IPC-serializes, and
-  collects the messages to the driver; an ``Observation`` on the
-  source sums the JSON bytes in the same job. A micro-batch in several
-  source partitions (file, Kafka) or in quarantine mode first runs a
-  stats job (each partition's row count and JSON bytes), and
-  ``partition_layout`` numbers each partition from its offset and
-  coalesces;
-- sink: the driver publishes the collected messages (the reference's
-  IPC queue pop, publisher.h:43-47); IpcFileSink writes one parquet
-  file per batch after the schema handshake at start;
+  no exchange and no Python worker. A micro-batch in one source
+  partition (a socket's) is one Spark job: it parses (strict,
+  Catalyst), numbers the rows from a driver-maintained base
+  (replay-stable: a replayed batch resolves to its original base and
+  renumbers identically), and collects the numbered rows to the driver
+  as Arrow; an ``Observation`` on the source sums the JSON bytes in
+  the same job. A micro-batch in several source partitions (file,
+  Kafka) or in quarantine mode first runs a stats job (each
+  partition's row count and JSON bytes), and ``partition_layout``
+  numbers each partition from its offset and coalesces;
+- serialize: the driver cuts the collected rows into IPC messages with
+  ``serialize_table``, which runs the kernel that ``serialize_ipc``
+  runs in Spark tasks for ``convert()``, as the reference's serializer
+  feeds the publisher's queue in-process (serializer.cpp:19-44);
+- sink: the driver publishes the messages (the reference's IPC queue
+  pop, publisher.h:43-47); IpcFileSink writes one parquet file per
+  batch after the schema handshake at start;
 - drain: ``trigger(availableNow=True)`` + ``awaitTermination`` ==
   "process everything the source has, then stop" — the
   ``jsons_received == publish_count`` spin-loop without the spin.
@@ -49,7 +53,7 @@ from pyspark.sql import types as T
 from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT
 from bolson_spark.operators.parse import as_declared, parse_json, parse_json_quarantine
 from bolson_spark.operators.seq import add_seq_by_partition, partition_layout
-from bolson_spark.operators.serialize import serialize_ipc
+from bolson_spark.operators.serialize import serialize_table
 from bolson_spark.schemas import spark_to_arrow_schema
 from bolson_spark.streaming.sink import PublishSink
 from bolson_spark.streaming.util import (
@@ -187,12 +191,14 @@ def run_stream_convert(
     """Start the convert stream; returns (query, metrics).
 
     Each micro-batch parses with Catalyst (``parse_json``). A batch in
-    one source partition is numbered from its base in the serialize
-    job, its only job. Any other batch runs a stats job first, and
-    ``partition_layout`` numbers it over the per-partition row counts
-    and coalesces it to one partition per ``4 * max_rows`` rows. The
-    serialize job collects the batch's IPC messages, and
-    ``sink.write`` publishes them from the driver.
+    one source partition is numbered from its base in the job that
+    collects it, its only job. Any other batch runs a stats job first,
+    and ``partition_layout`` numbers it over the per-partition row
+    counts and coalesces it to one partition per ``4 * max_rows`` rows.
+    The last job collects the numbered rows to the driver and runs no
+    Python worker; the driver cuts them into IPC messages
+    (``serialize_table``: at seq gaps and every ``max_rows`` rows, an
+    error above ``max_ipc_size``), and ``sink.write`` publishes them.
 
     ``on_error`` selects the failure posture: ``"fail"`` reproduces the
     reference's hard error on the first bad document
@@ -266,7 +272,7 @@ def run_stream_convert(
         received_ts = _time.time()
         # one source partition (a socket micro-batch) is numbered from
         # the base alone, so it needs no stats job and no cache: the
-        # serialize job is the batch's only job
+        # collect of its numbered rows is the batch's only job
         single = on_error == "fail" and _num_partitions(batch_df) <= 1
         if not single:
             batch_df = batch_df.cache()
@@ -277,7 +283,7 @@ def run_stream_convert(
             # its rows from its own offset, so no job sorts them
             nq = 0
             if single:
-                # the JSON bytes ride on the serialize job
+                # the JSON bytes ride on the collect
                 obs = Observation()
                 parsed = parse_json(
                     batch_df.observe(
@@ -350,8 +356,8 @@ def run_stream_convert(
             base = _resolve_seq_base(state["rec"], batch_id, run_id)
             # When latency tracking is on, materialize each stage so the
             # six reference time points (latency.h:30-47) are observable;
-            # otherwise parse, seq, coalesce and serialize run as one
-            # job (that fusion IS the optimization — see metrics.py).
+            # otherwise parse, seq and coalesce run as one job, and the
+            # driver serializes what it collects (see metrics.py).
             staged = latency is not None
             if staged:
                 parsed = parsed.cache()
@@ -365,13 +371,12 @@ def run_stream_convert(
                 ordered = ordered.cache()
                 ordered.count()
                 resized_ts = _time.time()
-            # the batch's last job: it collects the IPC messages to the
-            # driver, the publisher's queue item (publisher.h:43-47); a
-            # strict-parse failure raises here, before anything below
-            # records or publishes the batch
-            messages = serialize_ipc(
-                ordered, max_rows=max_rows, max_ipc_size=max_ipc_size
-            ).toArrow()
+            # the batch's last job collects the numbered rows with no
+            # Python worker, and the driver cuts them into the IPC
+            # messages, the publisher's queue item (publisher.h:43-47); a
+            # strict-parse failure or an over-size message raises here,
+            # before anything below records or publishes the batch
+            messages = serialize_table(ordered.toArrow(), max_rows, max_ipc_size)
             serialized_ts = _time.time()
             if single:
                 n = pc.sum(messages.column("num_rows")).as_py() or 0

@@ -9,8 +9,8 @@ is configured with max messages / max bytes / max delay
 (publisher.cpp:63-69, CLI defaults publisher.cpp:265-277).
 
 Spark mapping: the pub/sub boundary is ``foreachBatch`` + a
-``PublishSink``. The micro-batch's serialize job collects its IPC
-messages to the driver as one Arrow table (the reference's IPC queue
+``PublishSink``. The driver serializes each micro-batch's collected
+rows into its IPC messages, one Arrow table (the reference's IPC queue
 item, publisher.h:43-47), and ``write`` publishes that table from the
 driver. Three backends share the handshake protocol:
 

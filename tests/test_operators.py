@@ -617,6 +617,88 @@ def test_ipc_size_cap_errors_not_splits(spark):
         serialize_ipc(df, max_rows=2000, max_ipc_size=1000).collect()
 
 
+@pytest.mark.parametrize("schema", ["battery", "trip"])
+def test_driver_kernel_matches_serialize_ipc(spark, schema):
+    """The stream serializes a collected micro-batch on the driver with
+    the kernel ``serialize_ipc`` runs in its tasks. For a one-partition
+    batch numbered from its base, and for a four-partition
+    ``partition_layout`` batch with seq gaps between its partitions,
+    ``serialize_table`` over ``ordered.toArrow()`` equals
+    ``serialize_ipc(ordered).toArrow()`` byte for byte: messages break at
+    the gaps and every ``max_rows`` rows. An over-size message raises
+    the same error on both paths, and an empty table gives no messages
+    in ``SERIALIZED_ARROW_SCHEMA``, the schema of ``serialize_ipc``'s
+    collect."""
+    from bolson_spark.operators.seq import partition_layout
+    from bolson_spark.operators.serialize import (
+        SERIALIZED_ARROW_SCHEMA,
+        serialize_table,
+    )
+
+    spark_schema, make = {
+        "battery": (BATTERY_SPARK, _battery_doc),
+        "trip": (TRIP_SPARK, _trip_doc),
+    }[schema]
+    max_rows = 100
+    rng = random.Random(11)
+    docs = [(json.dumps(make(rng)),) for _ in range(700)]
+    one = spark.createDataFrame(docs, "value string").coalesce(1).cache()
+    four = spark.createDataFrame(docs[:440], "value string").coalesce(4).cache()
+    try:
+        pids = four.select(F.spark_partition_id().alias("p")).toArrow()
+        counts = [0] * 4
+        for p in pids.column("p").to_pylist():
+            counts[p] += 1
+        assert all(c > max_rows for c in counts), counts
+        batches = {
+            "one_partition": add_seq_by_partition(
+                parse_json(one, spark_schema, "value"), [], start=5000
+            ),
+            # three seqs of gap after each partition's run
+            "four_partitions": partition_layout(
+                parse_json(four, spark_schema, "value"),
+                [c + 3 for c in counts],
+                start=77,
+                max_rows=max_rows,
+            ),
+        }
+        for name, ordered in batches.items():
+            want = serialize_ipc(ordered, max_rows=max_rows).toArrow()
+            got = serialize_table(ordered.toArrow(), max_rows=max_rows)
+            assert got.equals(want), name
+            if name == "four_partitions":
+                offsets = [77]
+                for c in counts[:-1]:
+                    offsets.append(offsets[-1] + c + 3)
+                assert got.column("seq_first").to_pylist() == [
+                    x for o in offsets for x in (o, o + max_rows)
+                ]
+            limit = min(got.column("ipc_bytes").to_pylist()) - 1
+            errors = []
+            for run in (
+                lambda: serialize_ipc(
+                    ordered, max_rows=max_rows, max_ipc_size=limit
+                ).toArrow(),
+                lambda: serialize_table(
+                    ordered.toArrow(), max_rows=max_rows, max_ipc_size=limit
+                ),
+            ):
+                with pytest.raises(Exception, match="exceeds maximum") as err:
+                    run()
+                errors.append(str(err.value))
+            want_error = "bolson_spark: IPC message size {} exceeds maximum {}".format(
+                got.column("ipc_bytes")[0], limit
+            )
+            assert all(want_error in e for e in errors), errors
+        empty = batches["one_partition"].limit(0)
+        got = serialize_table(empty.toArrow())
+        assert got.num_rows == 0 and got.schema == SERIALIZED_ARROW_SCHEMA
+        assert got.equals(serialize_ipc(empty).toArrow())
+    finally:
+        one.unpersist()
+        four.unpersist()
+
+
 # --- skew utilities -------------------------------------------------------
 
 

@@ -9,6 +9,8 @@ import importlib.util
 import json
 import os
 import random
+import re
+import threading
 
 import pyarrow as pa
 import pytest
@@ -230,12 +232,36 @@ def _query_jobs(spark, query) -> list[int]:
     )
 
 
+# the physical nodes that run a Python worker
+_PYTHON_NODE = re.compile(
+    r"\b(PythonMapInArrow|MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython)\b"
+)
+
+
+def _assert_no_python_node(spark, query) -> None:
+    """No job of ``query`` ran a Python worker: the executed plan of every
+    SQL execution that ran one of its jobs, read from the SQL status
+    store, holds no Python node."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = _query_jobs(spark, query)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+    assert jobs and plans, (jobs, plans)
+    for plan in plans:
+        assert not _PYTHON_NODE.search(plan), plan
+
+
 def test_stream_microbatch_job_counts(spark, tmp_path):
     """A micro-batch in one source partition runs one Spark job, the
-    serialize job that collects its IPC messages (no stats job, and the
-    sink write runs none); a batch in four source partitions adds the
-    stats job. Jobs are counted from the status store by the query's
-    job group."""
+    job that collects its numbered rows (no stats job; the driver
+    serializes and publishes them with no job); a batch in four source
+    partitions adds the stats job. Jobs are counted from the status
+    store by the query's job group, and none runs a Python worker."""
     _write_files(tmp_path / "one", [2000])
     sink = IpcFileSink(str(tmp_path / "topic"))
     query, metrics = run_stream_convert(
@@ -247,6 +273,7 @@ def test_stream_microbatch_job_counts(spark, tmp_path):
     query.awaitTermination(120)
     assert metrics.batches == [2000]
     assert len(_query_jobs(spark, query)) == 1, _query_jobs(spark, query)
+    _assert_no_python_node(spark, query)
 
     _write_files(tmp_path / "four", [700, 650, 600, 550])
     old_mpb = _split_files(spark)
@@ -262,11 +289,68 @@ def test_stream_microbatch_job_counts(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
     assert metrics.batches == [2500]
     assert 1 <= len(_query_jobs(spark, query)) <= 2, _query_jobs(spark, query)
+    _assert_no_python_node(spark, query)
+
+
+def test_stream_microbatch_py4j_round_trips(spark, tmp_path, monkeypatch):
+    """The driver work of a micro-batch, counted in py4j round trips: one
+    call of the stream's ``foreachBatch`` function on a one-partition
+    2000-doc file batch, once the parse memo is warm, sends a fixed
+    number of gateway commands from its thread (the collect, the
+    Observation, the plan build and the partition count included)."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    captured = []
+    foreach_batch = DataStreamWriter.foreachBatch
+
+    def capture(self, func):
+        captured.append(func)
+        return foreach_batch(self, func)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", capture)
+    _write_files(tmp_path / "src", [2000])
+    (tmp_path / "none").mkdir()
+    query, metrics = run_stream_convert(
+        spark.readStream.format("text").load(str(tmp_path / "none")),
+        BATTERY_SPARK,
+        IpcFileSink(str(tmp_path / "topic")),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    query.awaitTermination(120)
+    process = captured[0]
+    batch = spark.read.text(str(tmp_path / "src"))
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    thread = threading.get_ident()
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        # the finalizer thread's object releases are not the batch's work
+        if threading.get_ident() == thread and not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    counts = []
+    client.send_command = counting
+    try:
+        for batch_id in range(3):
+            sent.clear()
+            process(batch, batch_id)
+            counts.append(len(sent))
+    finally:
+        del client.send_command
+    assert metrics.batches == [2000] * 3
+    # 194 under pyspark 4.1: most are pyspark's per-call bookkeeping
+    # around each Column function (the call-site origin, the active
+    # session), not the batch's own plan
+    assert counts[1] == counts[2] == 194, counts
 
 
 def test_stream_quarantine_microbatch_job_counts(spark, tmp_path):
     """A quarantine micro-batch runs one stats job over its routed rows:
-    at most two jobs when every document is clean (stats, serialize)
+    at most two jobs when every document is clean (stats, and the
+    collect of the numbered rows), none of them with a Python worker,
     and three with bad documents (plus the dead-letter write)."""
     for name, bad in (("clean", 0), ("bad", 3)):
         src = tmp_path / name
@@ -286,6 +370,8 @@ def test_stream_quarantine_microbatch_job_counts(spark, tmp_path):
         assert metrics.batches == [500 - bad] and metrics.num_quarantined == bad
         jobs = _query_jobs(spark, query)
         assert 1 <= len(jobs) <= 2 + (bad > 0), (name, jobs)
+        if not bad:
+            _assert_no_python_node(spark, query)
 
 
 @pytest.mark.parametrize("source", ["one_partition", "four_partitions", "quarantine"])
@@ -905,9 +991,11 @@ def test_stream_convert_over_tcp_socket(spark, tmp_path):
     ).collect()
     assert sorted(r.bolson_seq for r in back) == list(range(len(docs)))
     # one socket, one partition per micro-batch: one Spark job a batch
-    # (the socket source's first batch is empty, and runs one too)
+    # (the socket source's first batch is empty, and runs one too), and
+    # no job runs a Python worker
     ran = [p for p in query.recentProgress if "addBatch" in p["durationMs"]]
     assert len(_query_jobs(spark, query)) == len(ran) >= len(metrics.batches)
+    _assert_no_python_node(spark, query)
     # and seq is arrival position
     assert [r.voltage for r in sorted(back, key=lambda r: r.bolson_seq)] == [
         d["voltage"] for d in docs
