@@ -18,18 +18,27 @@ vectorized, and Catalyst prunes it when ``strict=False``.
 Both strict parsers (``parse_json``, ``parse_json_arrow``) reject the
 same documents and emit the declared schema, nullability included:
 bulk ``convert()`` parses with the Arrow reader, the stream's
-micro-batch with Catalyst.
+micro-batch with Catalyst. The Arrow parse is one pyarrow kernel,
+``parse_batches``: ``parse_json_arrow`` maps it over each partition,
+and ``convert(..., serialize=True)`` chains it into the serialize
+kernel in the same task.
 """
 
 from __future__ import annotations
 
 import operator
 import weakref
+from collections.abc import Iterable, Iterator, Sequence
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.json as pajson
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bolson_spark.schemas import spark_to_arrow_schema
 
 
 def _unexpected_keys(col: Column, schema: T.StructType) -> Column:
@@ -88,6 +97,63 @@ def validate_no_unexpected_fields(
     return df.where(F.size(bad) > 0)
 
 
+def parse_batches(
+    batches: Iterable[pa.RecordBatch],
+    schema: pa.Schema,
+    column: str = "value",
+    keep: Sequence[str] = (),
+    strict: bool = True,
+) -> Iterator[pa.RecordBatch]:
+    """The Arrow parse kernel: each batch's JSON documents in `column`
+    parsed by the Arrow C++ reader, one output batch per non-empty
+    input batch. `schema` is the declared output: the `keep` columns,
+    passed through, then the parsed fields, and every batch is typed
+    with it, nullability included. It raises on a null, blank or
+    malformed document and on a null in a non-nullable field, and, when
+    `strict`, on an unexpected field. The documents are newline-joined
+    (the source is line-framed JSON, stream.cpp) and handed to the
+    reader in one call."""
+    target = pa.schema(list(schema)[len(keep):])
+    popts = pajson.ParseOptions(
+        explicit_schema=target,
+        unexpected_field_behavior="error" if strict else "ignore",
+    )
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        docs = batch.column(column).cast(pa.string())
+        if docs.null_count:
+            raise ValueError("bolson_spark: null JSON document")
+        # newline-join the documents entirely in C (one list -> one
+        # string), then hand the raw utf-8 data buffer to the reader
+        # zero-copy; no per-document Python objects
+        joined = pc.binary_join(
+            pa.ListArray.from_arrays([0, len(docs)], docs), pa.scalar("\n")
+        )
+        blob = joined.buffers()[2]
+        ropts = pajson.ReadOptions(block_size=max(len(blob) + 1, 1 << 20))
+        tbl = pajson.read_json(
+            pa.BufferReader(blob), read_options=ropts, parse_options=popts
+        )
+        # Arrow's reader SKIPS blank lines, so an empty/whitespace
+        # document silently shrinks the output: with keep columns that
+        # surfaces as an opaque length-mismatch error below; with
+        # keep=[] it would silently DROP the row — where the catalyst
+        # twin's FAILFAST raises. Enforce the strict contract with a
+        # clear error either way.
+        if tbl.num_rows != batch.num_rows:
+            raise ValueError(
+                "bolson_spark: "
+                f"{batch.num_rows - tbl.num_rows} empty/blank JSON "
+                "document(s) in batch — the strict parse contract "
+                "(FAILFAST twin) rejects documents that are not a "
+                "JSON object"
+            )
+        cols = [batch.column(k) for k in keep]
+        cols += [tbl.column(f.name).combine_chunks() for f in target]
+        yield pa.RecordBatch.from_arrays(cols, schema=schema)
+
+
 def parse_json_arrow(
     df: DataFrame,
     schema: T.StructType,
@@ -106,64 +172,14 @@ def parse_json_arrow(
     pattern, tested equal in tests/test_operators.py.
 
     Scale shape: narrow map, zero shuffle; Arrow batches stream through
-    the Python worker without a pandas detour. Per-batch the documents
-    are newline-joined (the source is line-framed JSON — stream.cpp) and
-    handed to the C++ reader in one call.
+    ``parse_batches`` in the Python worker without a pandas detour.
     """
-    import pyarrow as pa
-    import pyarrow.json as pajson
-
-    from bolson_spark.schemas import spark_to_arrow_schema
-
     keep = list(keep or [])
-    target = spark_to_arrow_schema(schema)
-    behavior = "error" if strict else "ignore"
-    out_schema = T.StructType(
-        [df.schema[k] for k in keep] + list(schema.fields)
-    )
+    out_schema = T.StructType([df.schema[k] for k in keep] + list(schema.fields))
+    declared = spark_to_arrow_schema(out_schema)
 
-    def fn(batches):
-        popts = pajson.ParseOptions(
-            explicit_schema=target, unexpected_field_behavior=behavior
-        )
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            docs = batch.column(column).cast(pa.string())
-            if docs.null_count:
-                raise ValueError("bolson_spark: null JSON document")
-            # newline-join the documents entirely in C (one list -> one
-            # string), then hand the raw utf-8 data buffer to the reader
-            # zero-copy; no per-document Python objects
-            joined = pa.compute.binary_join(
-                pa.ListArray.from_arrays([0, len(docs)], docs), pa.scalar("\n")
-            )
-            blob = joined.buffers()[2]
-            ropts = pajson.ReadOptions(block_size=max(len(blob) + 1, 1 << 20))
-            tbl = pajson.read_json(
-                pa.BufferReader(blob), read_options=ropts, parse_options=popts
-            )
-            # Arrow's reader SKIPS blank lines, so an empty/whitespace
-            # document silently shrinks the output: with keep columns
-            # that surfaces as an opaque length-mismatch error below;
-            # with keep=[] it would silently DROP the row — where the
-            # catalyst twin's FAILFAST raises. Enforce the strict
-            # contract with a clear error either way.
-            if tbl.num_rows != batch.num_rows:
-                raise ValueError(
-                    "bolson_spark: "
-                    f"{batch.num_rows - tbl.num_rows} empty/blank JSON "
-                    "document(s) in batch — the strict parse contract "
-                    "(FAILFAST twin) rejects documents that are not a "
-                    "JSON object"
-                )
-            cols = [batch.column(k) for k in keep]
-            cols += [
-                tbl.column(f.name).combine_chunks() for f in target
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols, names=keep + [f.name for f in target]
-            )
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return parse_batches(batches, declared, column, keep, strict)
 
     return df.mapInArrow(fn, out_schema)
 

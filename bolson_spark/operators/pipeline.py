@@ -6,18 +6,27 @@ composition; Spark tasks replace converter threads. Like the reference
 (parse/parser.h:34-42) and the stream, ``convert()`` gives each input
 partition a contiguous seq range from its row count; the parse is the
 Arrow reader, where the stream's micro-batch parses with Catalyst.
+With ``serialize=True`` the parse and the cut-and-serialize run in one
+``mapInArrow`` task, ``parse.parse_batches`` feeding
+``serialize.ipc_messages``, as the reference's thread runs them in one
+loop: one Python worker per task, and the parsed columns never go back
+to the JVM.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT, SEQ_COL
-from bolson_spark.operators.parse import parse_json_arrow
+from bolson_spark.operators.parse import parse_batches, parse_json_arrow
 from bolson_spark.operators.seq import add_seq, partition_layout
-from bolson_spark.operators.serialize import serialize_ipc
+from bolson_spark.operators.serialize import SERIALIZED_SCHEMA, ipc_messages
+from bolson_spark.schemas import spark_to_arrow_schema
 
 
 def convert(
@@ -94,9 +103,15 @@ def convert(
     else:
         seqd = add_seq(df, order_by)
     # numbered before the parse, so the key never reaches Python
-    parsed = parse_json_arrow(
-        seqd.select(SEQ_COL, json_col), schema, json_col, keep=[SEQ_COL]
+    cols = seqd.select(SEQ_COL, json_col)
+    if not serialize:
+        return parse_json_arrow(cols, schema, json_col, keep=[SEQ_COL])
+    declared = spark_to_arrow_schema(
+        T.StructType([cols.schema[SEQ_COL], *schema.fields])
     )
-    if serialize:
-        return serialize_ipc(parsed, max_rows=max_rows, max_ipc_size=max_ipc_size)
-    return parsed
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        parsed = parse_batches(batches, declared, json_col, [SEQ_COL])
+        return ipc_messages(parsed, max_rows, max_ipc_size)
+
+    return cols.mapInArrow(fn, SERIALIZED_SCHEMA)

@@ -15,10 +15,12 @@ SerializedBatch/IpcQueueItem shape (convert/serializer.h:24-38) ready
 for a pub/sub sink. It runs in two places:
 
 - in Spark tasks: ``serialize_ipc`` maps it over each partition's Arrow
-  batches with ``mapInArrow`` (``convert()`` and the registry queries).
-  No shuffle is introduced here; upstream ``partition_layout``'s
-  ``coalesce`` or ``add_seq``'s window fixed the partitioning, so at
-  100 TB scale it is embarrassingly parallel;
+  batches with ``mapInArrow`` (the registry queries), and
+  ``convert(..., serialize=True)`` maps it over the Arrow parse's
+  output batches in the parse's own ``mapInArrow`` task. No shuffle is
+  introduced here; upstream ``partition_layout``'s ``coalesce`` or
+  ``add_seq``'s window fixed the partitioning, so at 100 TB scale it is
+  embarrassingly parallel;
 - on the driver: ``serialize_table`` runs it over a collected table.
   The stream collects each micro-batch's numbered rows with a JVM-only
   job and serializes them here, as the reference's serializer feeds the

@@ -6,12 +6,13 @@ from __future__ import annotations
 import json
 import os
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bolson_spark import MAX_ROWS_DEFAULT
+from bolson_spark import MAX_IPC_SIZE, MAX_ROWS_DEFAULT
 from bolson_spark.operators import (
     add_seq,
     add_seq_by_partition,
@@ -578,6 +579,90 @@ def test_convert_refuses_changed_partitioning(spark, tmp_path):
     open(flag, "w").close()
     with pytest.raises(Exception, match="partitioning changed"):
         out.select("seq_first").collect()
+
+
+@pytest.mark.parametrize("schema", ["battery", "trip"])
+def test_convert_serialize_matches_parse_then_serialize(spark, schema):
+    """convert(..., serialize=True) parses and serializes in one Python
+    task. Its messages equal, byte for byte, those of the parse and the
+    serialize run as two nodes over the same numbered input
+    (``serialize_ipc`` over ``convert(..., serialize=False)``), for
+    ordered four-partition input at max_rows 128 and 1024. Arrow
+    batches of 200 rows cut the partitions' 300-row runs, so messages
+    also break where the kernel's input batches do."""
+    from bolson_spark.operators import convert
+
+    spark_schema, make = {
+        "battery": (BATTERY_SPARK, _battery_doc),
+        "trip": (TRIP_SPARK, _trip_doc),
+    }[schema]
+    rng = random.Random(13)
+    docs = [json.dumps(make(rng)) for _ in range(1200)]
+    raw = _convert_input(spark, range(len(docs)), "ordered", docs)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "200")
+    try:
+        for max_rows in (128, 1024):
+            got = convert(
+                raw, spark_schema, "value", "arrival", max_rows=max_rows,
+                serialize=True,
+            ).toArrow()
+            want = serialize_ipc(
+                convert(raw, spark_schema, "value", "arrival", max_rows=max_rows),
+                max_rows=max_rows,
+            ).toArrow()
+            assert got.equals(want), max_rows
+            sizes = got.column("num_rows").to_pylist()
+            assert sum(sizes) == len(docs), sizes
+            assert max(sizes) <= min(max_rows, 200), sizes
+    finally:
+        spark.conf.set(conf, prior)
+
+
+def _error_line(run) -> str:
+    """The last ``<type>: <message>`` line of the error that `run` raises:
+    the Python exception a worker raised, out of Spark's wrapping."""
+    with pytest.raises(Exception) as err:
+        run()
+    lines = re.findall(r"^[\w.]+(?:Error|Invalid): .+$", str(err.value), re.M)
+    assert lines, str(err.value)
+    return lines[-1]
+
+
+@pytest.mark.parametrize(
+    "bad, max_ipc_size, want",
+    [
+        ('{"voltage": [1], "zz": 3}', MAX_IPC_SIZE, "JSON parse error: unexpected field"),
+        ("   ", MAX_IPC_SIZE, "1 empty/blank JSON document(s)"),
+        ('{"voltage": [1', MAX_IPC_SIZE, "JSON parse error: Missing a comma"),
+        ('{"voltage": [1]}', 100, "IPC message size"),
+    ],
+    ids=["unexpected_field", "blank", "malformed", "oversize"],
+)
+def test_convert_serialize_errors_match_parse_then_serialize(
+    spark, bad, max_ipc_size, want
+):
+    """A bad input fails convert(..., serialize=True) with the error that
+    ``parse_json_arrow`` or ``serialize_ipc`` raises for it: an
+    unexpected field, a blank and a malformed document in the parse, a
+    message over ``max_ipc_size`` in the serialize (FNC10)."""
+    from bolson_spark.operators import convert
+
+    raw = _convert_input(spark, range(8), docs=['{"voltage": [1, 2]}'] * 7 + [bad])
+    fused = _error_line(
+        lambda: convert(
+            raw, BATTERY_SPARK, "value", "arrival", max_ipc_size=max_ipc_size,
+            serialize=True,
+        ).collect()
+    )
+    two_nodes = _error_line(
+        lambda: serialize_ipc(
+            convert(raw, BATTERY_SPARK, "value", "arrival"),
+            max_ipc_size=max_ipc_size,
+        ).collect()
+    )
+    assert fused == two_nodes and want in fused, (fused, two_nodes)
 
 
 # --- Z1 serialize ---------------------------------------------------------

@@ -90,8 +90,9 @@ def test_convert_routes_plans(spark):
     """convert() over ordered input (range partitions, the shape of a
     file scan) numbers each partition from its offset: no Exchange and
     no Window node (the local sort is elided too, as a range reports its
-    order), and two MapInArrow nodes, the Arrow parse and serialize
-    (plans/r15/convert_{before,after}.txt)."""
+    order), and one MapInArrow node, which parses and serializes in the
+    same Python task (plans/r15/convert_{before,after}.txt,
+    plans/r18/convert_{before,after}.txt)."""
     from bolson_spark.operators import convert
     from bolson_spark.schemas import BATTERY_SPARK
 
@@ -103,7 +104,7 @@ def test_convert_routes_plans(spark):
     )
     for node in ("Exchange", "Window", "Sort"):
         assert not re.search(rf"^\(\d+\) {node}", plan, re.M), plan
-    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 2, plan
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1, plan
 
 
 def test_semi_anti_joins_compile_to_joins(spark):
